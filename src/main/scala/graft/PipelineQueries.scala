@@ -116,20 +116,10 @@ object PipelineQueries {
     // are unusable and would otherwise pin each dead session's plans forever
     frameCache.keySet.removeIf(k => !k.startsWith(s"$appId:"))
     // NOT computeIfAbsent: memoized builders NEST (c1 -> clusters ->
-    // shingle frames; d9 -> trigrams), and a nested computeIfAbsent on the
-    // same ConcurrentHashMap throws IllegalStateException("Recursive
-    // update") — which query trips it depends on registry iteration order,
-    // so it surfaces as order-dependent gate flakes. get/build/putIfAbsent
-    // tolerates reentrancy; a rare concurrent double-build is harmless
-    // (both frames are valid; one wins the publish).
-    val k = s"$appId:$key"
-    val existing = frameCache.get(k)
-    if (existing != null) existing
-    else {
-      val built = f.localCheckpoint()
-      val prev = frameCache.putIfAbsent(k, built)
-      if (prev != null) prev else built
-    }
+    // shingle frames; d9 -> trigrams) — which query trips the recursive
+    // update depends on registry iteration order, so it surfaced as
+    // order-dependent gate flakes
+    graft.util.Memo.getOrBuild(frameCache, s"$appId:$key")(f.localCheckpoint())
   }
 
   /** Per-(session, key) scalar cache — the [[memo]] device for driver-side
@@ -145,7 +135,7 @@ object PipelineQueries {
       f: => Long): Long = {
     val appId = spark.sparkContext.applicationId
     scalarCache.keySet.removeIf(k => !k.startsWith(s"$appId:"))
-    scalarCache.computeIfAbsent(s"$appId:$key", _ => f).longValue()
+    graft.util.Memo.getOrBuild(scalarCache, s"$appId:$key")(java.lang.Long.valueOf(f)).longValue()
   }
 
   private def minhashFrame(spark: SparkSession, dir: String): DataFrame =

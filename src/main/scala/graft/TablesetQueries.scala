@@ -113,7 +113,7 @@ object TablesetQueries {
       f: => Seq[Long]): Seq[Long] = {
     val appId = spark.sparkContext.applicationId
     probeSeqCache.keySet.removeIf(k => !k.startsWith(s"$appId:"))
-    probeSeqCache.computeIfAbsent(s"$appId:$key", _ => f)
+    graft.util.Memo.getOrBuild(probeSeqCache, s"$appId:$key")(f)
   }
 
   /** Compaction round-trip through the full query path: res-8 parent probes,

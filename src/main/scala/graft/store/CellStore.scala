@@ -2,9 +2,13 @@ package graft.store
 
 import scala.collection.mutable
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.h3.H3
@@ -52,39 +56,30 @@ class CellStore(spark: SparkSession, rootPath: String) {
   def dataDir(name: String): String = dataPath(name).toString
   private def rejectsPath(name: String) = new Path(tablesetPath(name), "rejects")
 
-  /** Per-tableset caches of the live data-file listing and the manifest's
-    * coverage diff — both are O(files) to recompute, which made the old
-    * per-query recomputation the store's one driver-side scale bottleneck
-    * (round-3 verdict). JVM-WIDE, keyed by (root, tableset), NOT
-    * per-instance: the SQL TVFs construct a fresh CellStore per
-    * `graft_scan`/`graft_cells` call, and instance-local caches would
-    * re-list the whole data dir on every SQL query — O(all files) per
-    * query at 100 TB, the exact bottleneck the caches exist to remove.
-    * Sharing also makes invalidation consistent: a mutation through ANY
-    * same-JVM instance invalidates the key every other instance reads.
-    * Out-of-band writers (another JVM, raw file surgery) still require
-    * [[invalidateFileCaches]] — the same single-writer contract the
-    * snapshot/rename machinery already assumes. */
+  /** Key of the tableset's [[FileState]] and commit lock: JVM-wide, so
+    * every instance at this root shares them. */
   private def cacheKey(name: String): String = rootPath + "\u0000" + name
-  private def listingCache = CellStore.listingCache
-  private def coverageCache = CellStore.coverageCache
 
-  /** Drop cached file listings / manifest coverage for `name` — required
-    * after out-of-band writes (another JVM, manual file surgery). All
-    * same-JVM mutators call it automatically, whichever instance they go
-    * through. */
-  def invalidateFileCaches(name: String): Unit = {
-    listingCache.remove(cacheKey(name))
-    coverageCache.remove(cacheKey(name))
-    deletesCache.remove(cacheKey(name))
-    // declared-read frames are keyed cacheKey + NUL + appId (any
-    // session of this JVM): drop them all — they plan from the listing
-    val prefix = cacheKey(name) + "\u0000"
-    CellStore.declaredCache.keySet.filter(_.startsWith(prefix))
-      .foreach(CellStore.declaredCache.remove)
-    dropManifestFrame(name)
-    ()
-  }
+  /** The tableset's cached [[FileState]], loaded on first use. */
+  private def fileState(name: String): FileState =
+    FileState.get(cacheKey(name)) {
+      val dels = {
+        val p = deletesPath(name)
+        if (!fs.exists(p)) Seq.empty
+        else fs.listStatus(p).toSeq.map(_.getPath.getName)
+          .filter(_.endsWith(".delete")).map(_.stripSuffix(".delete").toLong)
+          .sorted.map(readDeleteMarker(name, _))
+      }
+      val manifest = Some(listParquet(manifestPath(name)))
+        .filter(files => files.nonEmpty && hasManifest(name))
+        .map(files => (files, parquetSchema(files.head)))
+      new FileState(listParquet(dataPath(name)), dels, manifest)
+    }
+
+  /** Drop the cached [[FileState]] of `name` — required after out-of-band
+    * writes (another JVM, manual file surgery). All same-JVM mutators call
+    * it automatically, whichever instance they go through. */
+  def invalidateFileCaches(name: String): Unit = FileState.invalidate(cacheKey(name))
 
   // ---------------------------------------------------------------- catalog
 
@@ -160,6 +155,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
     val p = schemaPath(name)
     val out = fs.create(p, true)
     try out.write(schema.toJson.getBytes("UTF-8")) finally out.close()
+    invalidateFileCaches(name)
     schema
   }
 
@@ -327,12 +323,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
       try out.write(schema.toJson.getBytes("UTF-8")) finally out.close()
       publishAtomic(tmp, schemaPath(name), s"schema of '$name'")
     }
-    // schema evolution (addColumn/dropColumn) changes the DECLARED read
-    // shape without touching a data file — cached declared-read frames
-    // must re-plan under the new schema
-    val prefix = cacheKey(name) + "\u0000"
-    CellStore.declaredCache.keySet.filter(_.startsWith(prefix))
-      .foreach(CellStore.declaredCache.remove)
+    invalidateFileCaches(name) // the cached read schema derives from it
   }
 
   /** Publish a fully-written temp file at `dst`, preferring the ATOMIC
@@ -785,9 +776,9 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * random file's schema — declared reads resolve it to NULL everywhere
     * instead. */
   private def readDeclared(name: String): DataFrame = {
-    val dels = pendingDeletes(name)
-    if (dels.isEmpty) readDeclaredRaw(name)
-    else readFilesMasked(name, listDataFilesCached(name), dels)
+    val st = fileState(name)
+    if (st.deletes.isEmpty) readDeclaredRaw(name)
+    else readFilesMasked(name, st.dataFiles, st.deletes)
   }
 
   /** The declared-schema read WITHOUT the lightweight-delete mask —
@@ -795,50 +786,22 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * tableset with ZERO live data files (possible once [[applyDeletes]] can
     * unlink a fully-masked store) still reads as an empty frame with the
     * partition columns a directory read would have inferred — downstream
-    * resolution/kind/ph3 predicates must keep resolving.
-    *
-    * Plans from the CACHED file listing (explicit file set + basePath, the
-    * [[manifestScan]] read shape) instead of handing Spark the directory:
-    * a directory read re-walks the partition tree through a fresh
-    * InMemoryFileIndex on EVERY query — measured as recurring
-    * 122-153-task "Listing leaf files" jobs per ts-gate execution — while
-    * the store already owns the canonical listing ([[listDataFilesCached]],
-    * invalidated by every same-JVM mutator). The built frame is itself
-    * cached per (session, tableset) and dropped by [[invalidateFileCaches]]
-    * with the listing, so reads after a mutation re-plan from the fresh
-    * list exactly as before. */
-  private def readDeclaredRaw(name: String): DataFrame = {
-    val k = cacheKey(name) + "\u0000" + spark.sparkContext.applicationId
-    CellStore.declaredCache.getOrElseUpdate(k, {
-      val files = listDataFilesCached(name)
-      if (files.isEmpty) emptyDeclared(name)
-      else withDriverSideFileStats {
-        spark.read.schema(getTableset(name).toStructType)
-          .option("basePath", qualifiedDataDir(name))
-          .parquet(files: _*)
-      }
-    })
-  }
+    * resolution/kind/ph3 predicates must keep resolving. */
+  private def readDeclaredRaw(name: String): DataFrame =
+    readDataFiles(name, fileState(name).dataFiles)
 
-  /** Scope for relation construction over an EXPLICIT, driver-known file
-    * list: Spark still stats the given paths through InMemoryFileIndex, and
-    * past `parallelPartitionDiscovery.threshold` (default 32) it launches a
-    * whole Spark JOB to do so — one job launch + N tiny tasks per query to
-    * re-stat files the store just listed. Raising the threshold keeps the
-    * stat loop on the driver's listing thread pool, which is strictly
-    * cheaper for the bounded path counts the store's caches/manifest
-    * produce (the manifest fold and compaction keep file counts sane; a
-    * deployment with 100k+ files per tableset tunes this down again via
-    * the session conf, which this scope restores on exit). */
-  private def withDriverSideFileStats[T](f: => T): T = {
-    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "10000")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+  /** Data files of `name` under the declared schema, planned from the
+    * cached [[FileState]] listing ([[FileState#read]]): a directory read
+    * would re-walk the partition tree on every query, and an explicit
+    * path list would re-stat every file — past
+    * `parallelPartitionDiscovery.threshold` as a Spark listing job. */
+  private def readDataFiles(name: String, files: Seq[FileStatus]): DataFrame =
+    if (files.isEmpty) emptyDeclared(name)
+    else {
+      val st = fileState(name)
+      st.read(spark, fs.makeQualified(dataPath(name)), st.dataFiles, files,
+        st.readSchema(emptyDeclared(name).schema))
     }
-  }
 
   /** Empty frame in the shape a nonempty directory read infers: declared
     * columns, then kind (string) / resolution (int) / ph3 (int for BaseCell
@@ -1144,14 +1107,14 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * than the target (scanForResolution returns base rows at exactly
     * targetRes plus compacted rows at res <= targetRes; a compacted row AT
     * targetRes needs no expansion). Driver-side partition metadata (the
-    * cached file listing's Hive segments), so compaction-free tablesets —
+    * cached [[FileState]] listing's Hive segments), so compaction-free tablesets —
     * the Sum engine disables compaction entirely — skip the fine/coarse
     * split and the uncompaction join in EVERY cell query's plan. Same
     * plan-time file-set semantics as the directory scan itself (a file
     * index is fixed when the frame is built; mutations invalidate the
-    * listing cache for frames built after them). */
+    * [[FileState]] for frames built after them). */
   private def hasCompactedBelow(name: String, targetRes: Int): Boolean =
-    listDataFilesCached(name).exists { p =>
+    fileState(name).dataPaths.exists { p =>
       // segment-wise parse, not a raw substring match: if the listing ever
       // yields a differently-normalized layout, a silent non-match here
       // would skip uncompaction and return coarse rows (wrong results with
@@ -1266,7 +1229,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * can never answer a query. */
   private def listingToken(name: String): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
-    listDataFilesCached(name).map(relToData(name, _)).sorted
+    fileState(name).dataPaths.map(relToData(name, _)).sorted
       .foreach(p => md.update(p.getBytes("UTF-8")))
     // a lightweight delete changes no file, but it changes what every read
     // returns — fold pending mutations in so stale mirrors can never serve
@@ -1459,26 +1422,16 @@ class CellStore(spark: SparkSession, rootPath: String) {
     // distinct: concurrent appends can each list the other's files into
     // their own snapshot (see claimSnapshotId) — reading a file once per
     // appearance would duplicate its rows
-    val files = ids.filter(_ <= snapshotId)
+    val paths = ids.filter(_ <= snapshotId)
       .flatMap(readSnapshotList(name, _)).distinct.map(rel => s"$base/$rel")
-    val current = listDataFilesCached(name).toSet
-    val missing = files.filterNot(current)
+    val st = fileState(name)
+    val missing = paths.filterNot(st.byPath.contains)
     if (missing.nonEmpty) throw new IllegalStateException(
       s"snapshot $snapshotId of '$name' was invalidated by a rewrite " +
         s"(deduplicate/replace/compactFiles): ${missing.size} file(s) no longer exist")
-    val proto = readDeclaredRaw(name)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], proto.schema)
-    else {
-      // deletes are time-travel points too: a mutation committed at id d
-      // masks this snapshot's rows iff d <= snapshotId (captured files only)
-      val dels = pendingDeletes(name).filter(_.id <= snapshotId)
-      if (dels.isEmpty)
-        spark.read.schema(proto.schema)
-          .option("basePath", qualifiedDataDir(name))
-          .parquet(files: _*)
-      else readFilesMasked(name, files, dels)
-    }
+    // deletes are time-travel points too: a mutation committed at id d
+    // masks this snapshot's rows iff d <= snapshotId (captured files only)
+    readFilesMasked(name, paths.map(st.byPath), st.deletes.filter(_.id <= snapshotId))
   }
 
   /** [[scanForResolution]] against a snapshot. */
@@ -1557,26 +1510,19 @@ class CellStore(spark: SparkSession, rootPath: String) {
     }.forall(identity)
     require(det, s"deleteWhere predicate must be deterministic, got: $predicateSql")
     CellStore.commitLock(cacheKey(name)).synchronized {
-      val files = listDataFilesCached(name).map(relToData(name, _)).sorted
+      val files = fileState(name).dataPaths.map(relToData(name, _)).sorted
       if (files.isEmpty) return -1L
       val id = claimSnapshotId(name)
       writeDeleteMarker(name, DeleteMutation(id, predicateSql, files))
       writeSnapshotList(name, id, Seq.empty)
-      deletesCache.remove(cacheKey(name))
+      invalidateFileCaches(name)
       id
     }
   }
 
-  /** Pending (unmaterialized) delete mutations in id order. Cached like the
-    * file listing; any same-JVM mutation invalidates. */
-  def pendingDeletes(name: String): Seq[DeleteMutation] =
-    deletesCache.getOrElseUpdate(cacheKey(name), {
-      val p = deletesPath(name)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .filter(_.endsWith(".delete")).map(_.stripSuffix(".delete").toLong)
-        .sorted.map(readDeleteMarker(name, _))
-    })
+  /** Pending (unmaterialized) delete mutations in id order, from the
+    * cached [[FileState]]; any same-JVM mutation invalidates. */
+  def pendingDeletes(name: String): Seq[DeleteMutation] = fileState(name).deletes
 
   /** Materialize every pending delete: rewrite exactly the partitions that
     * contain captured files ([[compactFilesWhere]] — the masked read drops
@@ -1659,7 +1605,13 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * file that still holds live data (ADVICE r5, medium). */
   private[store] def liveRowsInCaptured(name: String, absFiles: Seq[String],
       dels: Seq[DeleteMutation]): Long =
-    readFilesMasked(name, absFiles, dels).limit(1).count()
+    readFilesMasked(name, statusesOf(name, absFiles), dels).limit(1).count()
+
+  /** File statuses of live data files `paths`, from the cached listing. */
+  private def statusesOf(name: String, paths: Seq[String]): Seq[FileStatus] = {
+    val known = fileState(name).byPath
+    paths.map(p => known(fs.makeQualified(new Path(p)).toString))
+  }
 
   /** Typed equality predicate for one `col=value` partition-directory
     * segment (shared by [[applyDeletes]]'s touched-partition reconstruction):
@@ -1691,18 +1643,16 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * every pending marker; a marker whose capture set empties is removed —
     * the delete is fully materialized. Called after every rewrite. */
   private def pruneDeleteMarkers(name: String): Unit = {
-    deletesCache.remove(cacheKey(name))
-    val dels = pendingDeletes(name)
-    if (dels.isEmpty) return
-    val current = listDataFilesCached(name).map(relToData(name, _)).toSet
-    dels.foreach { d =>
+    val st = fileState(name)
+    if (st.deletes.isEmpty) return
+    val current = st.dataPaths.map(relToData(name, _)).toSet
+    st.deletes.foreach { d =>
       val remaining = d.files.filter(current)
       if (remaining.isEmpty) { fs.delete(deleteMarkerPath(name, d.id), false); () }
       else if (remaining.size < d.files.size)
         writeDeleteMarker(name, d.copy(files = remaining))
     }
-    deletesCache.remove(cacheKey(name))
-    ()
+    invalidateFileCaches(name)
   }
 
   /** ClickHouse `ALTER TABLE ... DROP PARTITION` generalized to a partition
@@ -1732,7 +1682,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
     // interleave with a marker commit capturing the dirs being dropped
     getTableset(name)
     if (!fs.exists(dataPath(name))) return 0
-    val rels = listDataFilesCached(name).map(relToData(name, _))
+    val rels = fileState(name).dataPaths.map(relToData(name, _))
     val dirs = rels.flatMap { r =>
       val i = r.lastIndexOf('/')
       if (i < 0) None else Some(r.substring(0, i))
@@ -1834,7 +1784,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
     DeleteMutation(node.get("id").asLong(), node.get("predicate").asText(), files)
   }
 
-  /** Read `absFiles` under the declared schema with the delete mask applied
+  /** Read `files` under the declared schema with the delete mask applied
     * per file group. Files are grouped DRIVER-SIDE (over the cached listing,
     * the same O(files) class as manifest selection) by which mutations
     * captured them — typically 2 groups: "captured by all pending deletes"
@@ -1842,22 +1792,15 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * its applicable `NOT coalesce(pred, false)` filters. Row-level filters
     * and partition pruning push into each union branch unchanged; a file in
     * no capture set reads raw, so post-delete inserts pay nothing. */
-  private def readFilesMasked(name: String, absFiles: Seq[String],
+  private def readFilesMasked(name: String, files: Seq[FileStatus],
       dels: Seq[DeleteMutation]): DataFrame = {
-    val proto = readDeclaredRaw(name)
-    if (absFiles.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], proto.schema)
-    val base = qualifiedDataDir(name)
-    val groups = absFiles.groupBy { abs =>
-      val rel = relToData(name, abs)
+    if (files.isEmpty) return emptyDeclared(name)
+    val groups = files.groupBy { st =>
+      val rel = relToData(name, st.getPath.toString)
       dels.collect { case d if d.fileSet(rel) => d.id }
     }
-    groups.map { case (ids, files) =>
-      val df = withDriverSideFileStats {
-        spark.read.schema(proto.schema)
-          .option("basePath", base).parquet(files: _*)
-      }
+    groups.map { case (ids, group) =>
+      val df = readDataFiles(name, group)
       if (ids.isEmpty) df
       else {
         val keep = dels.filter(d => ids.contains(d.id))
@@ -1898,9 +1841,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
       .write.mode(SaveMode.Overwrite)
       .partitionBy("kind", "resolution", "bc")
       .parquet(manifestPath(name).toString)
-    coverageCache.remove(cacheKey(name))
-    dropManifestFrame(name)
-    ()
+    invalidateFileCaches(name)
   }
 
   /** Round-4 manifests were partitioned by `bc` alone; round 5 nests
@@ -1922,21 +1863,16 @@ class CellStore(spark: SparkSession, rootPath: String) {
     require(hasManifest(name),
       s"tableset '$name' has no manifest to refresh — run buildManifest first")
     if (manifestIsLegacyLayout(name)) { buildManifest(name); return }
-    val (_, uncoveredRel) = manifestCoverage(name)
+    val st = fileState(name)
+    val (_, uncoveredRel) = manifestCoverage(name, st)
     if (uncoveredRel.isEmpty) return
     val base = qualifiedDataDir(name)
-    val proto = readDeclared(name)
-    manifestStats(name,
-      spark.read.schema(proto.schema)
-        .option("basePath", base)
-        .parquet(uncoveredRel.map(rel => s"$base/$rel"): _*))
+    manifestStats(name, readDataFiles(name, uncoveredRel.map(rel => st.byPath(s"$base/$rel"))))
       .repartition(col("bc"))
       .write.mode(SaveMode.Append)
       .partitionBy("kind", "resolution", "bc")
       .parquet(manifestPath(name).toString)
-    coverageCache.remove(cacheKey(name))
-    dropManifestFrame(name)
-    ()
+    invalidateFileCaches(name)
   }
 
   /** One stats row per data file. `path` is RELATIVE to the data dir (like
@@ -1983,70 +1919,79 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * the coverage diff [[selectFilesForProbes]] needs to union post-build
     * appends. Computed as a distributed anti-join (the manifest's path
     * column is never collected whole to the driver — at 100 TB it is
-    * millions of rows) and cached until the next write or manifest build
-    * invalidates it; per probe query this is a map lookup. */
-  private def manifestCoverage(name: String): (Long, Seq[String]) =
-    coverageCache.getOrElse(cacheKey(name), {
-      val m = spark.read.parquet(manifestPath(name).toString).select("path")
-      val currentRel = listDataFilesCached(name).map(relToData(name, _))
+    * millions of rows) and memoized in the [[FileState]] until the next
+    * write or manifest build invalidates it; per probe query this is a map
+    * lookup. */
+  private def manifestCoverage(name: String, st: FileState): (Long, Seq[String]) =
+    st.coverage {
+      val m = manifestFrame(name, st).select("path")
+      val currentRel = st.dataPaths.map(relToData(name, _))
       val uncovered =
         if (currentRel.isEmpty) Seq.empty[String]
         else spark.createDataset(currentRel)(org.apache.spark.sql.Encoders.STRING)
           .toDF("path")
           .join(m, Seq("path"), "left_anti")
           .collect().map(_.getString(0)).toSeq
-      val result = (m.count(), uncovered)
-      coverageCache.put(cacheKey(name), result)
-      result
-    })
+      (m.count(), uncovered)
+    }
 
-  /** All current data files of `name`, as FULLY-QUALIFIED URIs
+  /** Every parquet file under `dir`, with fully-qualified paths
     * (fs.makeQualified — ADVICE r3: scheme-less paths fed back into
     * spark.read resolve against the DEFAULT filesystem, which breaks
     * rootPaths on s3a:// or a non-default HDFS namenode). */
-  private def listDataFiles(name: String): Seq[String] = {
+  private def listParquet(dir: Path): Seq[FileStatus] = {
     // manual walk, NOT fs.listFiles(recursive): a concurrent writer's
     // transient `_temporary` subtree must be (a) skipped — its in-flight
     // part files end in .parquet and would otherwise enter listings and
     // snapshot lists, then vanish at that writer's commit — and (b)
     // tolerated when it vanishes between list and stat (the recursive
     // iterator throws instead)
-    val out = mutable.ArrayBuffer.empty[String]
-    val stack = mutable.Stack[Path](dataPath(name))
+    val out = mutable.ArrayBuffer.empty[FileStatus]
+    val stack = mutable.Stack[Path](dir)
     while (stack.nonEmpty) {
-      val dir = stack.pop()
       val entries =
-        try fs.listStatus(dir)
-        catch { case _: java.io.FileNotFoundException =>
-          Array.empty[org.apache.hadoop.fs.FileStatus] }
+        try fs.listStatus(stack.pop())
+        catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
       entries.foreach { st =>
         val n = st.getPath.getName
         if (st.isDirectory) {
           if (!n.startsWith("_") && !n.startsWith(".")) stack.push(st.getPath)
-        } else if (n.endsWith(".parquet") && !n.startsWith("_") &&
-          !n.startsWith(".")) out += fs.makeQualified(st.getPath).toString
+        } else if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) {
+          st.setPath(fs.makeQualified(st.getPath))
+          out += st
+        }
       }
     }
     out.toSeq
   }
 
-  /** [[listDataFiles]] behind the per-tableset cache — query paths use this;
-    * mutation-side before/after diffs use the raw listing. */
-  private def listDataFilesCached(name: String): Seq[String] =
-    listingCache.getOrElseUpdate(cacheKey(name), listDataFiles(name))
+  /** All current data files of `name`, uncached — the mutation-side
+    * before/after diffs; query paths read the cached [[FileState]]. */
+  private def listDataFiles(name: String): Seq[String] =
+    listParquet(dataPath(name)).map(_.getPath.toString)
+
+  /** The Spark schema of one parquet file, from its footer on the driver. */
+  private def parquetSchema(file: FileStatus): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val footer = ParquetFileReader.readFooter(conf, file, ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 
   /** The data dir as a fully-qualified URI string (no trailing slash) —
     * the base every relative file path resolves against for reading. */
   private def qualifiedDataDir(name: String): String =
     fs.makeQualified(dataPath(name)).toString.stripSuffix("/")
 
-  /** Driver-side file selection for a probe query: manifest rows that
-    * survive the SAME three predicates the scan would apply — kind/resolution
-    * (D7), probe base cells (ph3), and h3index envelope intersection — plus
-    * every current file the manifest does not cover (appended since the
-    * build; no stats -> must be read). Entries whose file no longer exists
-    * (rewritten partitions) are dropped against the live listing. None when
-    * no manifest exists. */
+  /** The manifest read over the [[FileState]]'s manifest files: partition
+    * DISCOVERY over the manifest's own kind/resolution/bc tree would
+    * re-list 122+ directories on EVERY probe query (the manifest exists to
+    * avoid per-query file work). Callers check that a manifest exists. */
+  private def manifestFrame(name: String, st: FileState): DataFrame = {
+    val (files, schema) = st.manifest.get
+    st.read(spark, fs.makeQualified(manifestPath(name)), files, files, schema)
+  }
+
   /** The filtered manifest read a probe selection collects — every predicate
     * is DECLARATIVE so it prunes before any row reaches the driver: `bc` is
     * the manifest's partition column (probed base cells -> directory
@@ -2054,37 +1999,13 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * [[resolutionFilter]] and the h3index envelope disjunction lands in
     * `PushedFilters` (row-group skipping on the manifest's own files).
     * Exposed for the spec that audits exactly that plan. */
-  /** The manifest directory read, cached per (session, tableset) like the
-    * declared read: partition DISCOVERY over the manifest's own
-    * kind/resolution/bc tree re-listed 122+ directories as a dedicated
-    * Spark job on EVERY probe query (the manifest exists to avoid
-    * per-query file work, and was itself costing a listing job per
-    * query). Dropped by [[invalidateFileCaches]] and by the manifest
-    * writers (buildManifest / refreshManifest). */
-  private def manifestFrame(name: String): DataFrame = {
-    val k = cacheKey(name) + "\u0000" + spark.sparkContext.applicationId
-    CellStore.manifestFrameCache.getOrElseUpdate(k, withDriverSideFileStats {
-      spark.read.parquet(manifestPath(name).toString)
-    })
-  }
-  private def dropManifestFrame(name: String): Unit = {
-    val prefix = cacheKey(name) + "\u0000"
-    CellStore.manifestFrameCache.keySet.filter(_.startsWith(prefix))
-      .foreach(CellStore.manifestFrameCache.remove)
-    // file selections derive from the manifest frame AND the listing; both
-    // invalidation paths (mutation -> invalidateFileCaches, manifest
-    // rebuild) reach here
-    CellStore.selectionCache.keySet.filter(_.startsWith(prefix))
-      .foreach(CellStore.selectionCache.remove)
-  }
-
   private[graft] def manifestCandidates(name: String, targetRes: Int,
       cells: Seq[Long]): DataFrame = {
     val envs = probeEnvelopes(cells, (0 to targetRes).toSeq)
     val bcs = cells.map(H3.getBaseCell(_).toLong).distinct
     val envOk = envs.map { case (lo, hi) =>
       col("min_h3") <= lit(hi) && col("max_h3") >= lit(lo) }.reduce(_ || _)
-    manifestFrame(name)
+    manifestFrame(name, fileState(name))
       .where(col("bc").isin(bcs: _*))
       .where(resolutionFilter(targetRes))
       .where(envOk)
@@ -2101,43 +2022,37 @@ class CellStore(spark: SparkSession, rootPath: String) {
     *
     * Per-query driver cost is O(selected + uncovered), NOT O(all files):
     * the manifest read is partition-pruned/pushed ([[manifestCandidates]]),
-    * and the listing + coverage diff come from the per-tableset caches
+    * and the listing + coverage diff come from the cached [[FileState]]
     * (round-3 verdict: the previous full-manifest collect per query was the
     * one remaining driver-side scale bottleneck). */
   private[graft] def selectFilesForProbes(name: String, targetRes: Int,
       cells: Seq[Long]): Option[ManifestSelection] = {
-    if (cells.isEmpty || !hasManifest(name)) return None
-    // The selection is a pure function of (manifest frame, cached listing,
-    // probe set) — all immutable between mutations — so it is cached with
-    // the SAME lifecycle as the frames it derives from (dropped by
-    // dropManifestFrame, which every mutation path reaches via
-    // invalidateFileCaches): uncached, every execution of a manifest probe
-    // query re-ran the manifest-collect JOB to recompute an identical file
-    // list (round 13; ts18 paid it twice per bench pass).
-    val sk = cacheKey(name) + "\u0000" + spark.sparkContext.applicationId +
-      "\u0000" + targetRes + "\u0000" + cells.hashCode
-    Some(CellStore.selectionCache.getOrElseUpdate(sk, {
-      val base = qualifiedDataDir(name)
-      val selected = manifestCandidates(name, targetRes, cells)
-        .collect().map(r => s"$base/${r.getString(0)}").toSeq
-      val currentSet = listDataFilesCached(name).toSet
-      val (manifestEntries, uncoveredRel) = manifestCoverage(name)
-      val uncovered = uncoveredRel.map(rel => s"$base/$rel")
-      ManifestSelection(
-        (selected.filter(currentSet.contains) ++ uncovered).distinct,
-        manifestFiles = manifestEntries.toInt, currentFiles = currentSet.size,
-        uncoveredFiles = uncovered.size)
-    }))
+    val st = fileState(name)
+    if (cells.isEmpty || st.manifest.isEmpty) return None
+    // memoized per probe set in the FileState: uncached, every execution
+    // of a manifest probe query re-ran the manifest-collect JOB to
+    // recompute an identical file list (round 13; ts18 paid it twice per
+    // bench pass)
+    Some(st.selection(targetRes, cells) {
+      val selected = manifestCandidates(name, targetRes, cells).collect().map(_.getString(0))
+      manifestSelection(name, st, selected)
+    })
   }
 
-  /** Driver-side file selection for a secondary-key range query: manifest
-    * entries whose [k2_min, k2_max] interval intersects [lo, hi] at the
-    * target resolution, plus uncovered (post-build) files — the same
-    * contract as [[selectFilesForProbes]] but pruning on the VALUE
-    * dimension. Only effective after [[zorderFiles]] has co-clustered the
-    * secondary key (unclustered files span the whole value domain and
-    * nothing prunes — correct either way, the row filter still applies).
-    * None when no manifest exists or the manifest predates k2 stats. */
+  /** A [[ManifestSelection]] from the manifest entries (relative paths) a
+    * pruned manifest read kept: those whose file is still live, plus every
+    * live file the manifest does not cover. */
+  private def manifestSelection(name: String, st: FileState,
+      selectedRel: Seq[String]): ManifestSelection = {
+    val base = qualifiedDataDir(name)
+    val (manifestEntries, uncoveredRel) = manifestCoverage(name, st)
+    val uncovered = uncoveredRel.map(rel => s"$base/$rel")
+    ManifestSelection(
+      (selectedRel.map(rel => s"$base/$rel").filter(st.byPath.contains) ++ uncovered).distinct,
+      manifestFiles = manifestEntries.toInt, currentFiles = st.dataFiles.size,
+      uncoveredFiles = uncovered.size)
+  }
+
   /** The filtered manifest read a value-range selection collects — the
     * k2 analogue of [[manifestCandidates]]. kind/resolution are the
     * manifest's OUTER partition directories (round-5 layout), so
@@ -2151,7 +2066,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * stats. */
   private[graft] def valueRangeCandidates(name: String, targetRes: Int,
       lo: Any, hi: Any): Option[DataFrame] = {
-    val m = manifestFrame(name)
+    val m = manifestFrame(name, fileState(name))
     if (!m.columns.contains("k2_min")) return None
     Some(m
       .where(resolutionFilter(targetRes))
@@ -2159,22 +2074,20 @@ class CellStore(spark: SparkSession, rootPath: String) {
       .select("path"))
   }
 
+  /** Driver-side file selection for a secondary-key range query: manifest
+    * entries whose [k2_min, k2_max] interval intersects [lo, hi] at the
+    * target resolution, plus uncovered (post-build) files — the same
+    * contract as [[selectFilesForProbes]] but pruning on the VALUE
+    * dimension. Only effective after [[zorderFiles]] has co-clustered the
+    * secondary key (unclustered files span the whole value domain and
+    * nothing prunes — correct either way, the row filter still applies).
+    * None when no manifest exists or the manifest predates k2 stats. */
   private[graft] def selectFilesForValueRange(name: String, targetRes: Int,
       lo: Any, hi: Any): Option[ManifestSelection] = {
-    if (!hasManifest(name)) return None
-    val cand = valueRangeCandidates(name, targetRes, lo, hi) match {
-      case Some(c) => c
-      case None => return None
-    }
-    val base = qualifiedDataDir(name)
-    val selected = cand.collect().map(r => s"$base/${r.getString(0)}").toSeq
-    val currentSet = listDataFilesCached(name).toSet
-    val (manifestEntries, uncoveredRel) = manifestCoverage(name)
-    val uncovered = uncoveredRel.map(rel => s"$base/$rel")
-    Some(ManifestSelection(
-      (selected.filter(currentSet.contains) ++ uncovered).distinct,
-      manifestFiles = manifestEntries.toInt, currentFiles = currentSet.size,
-      uncoveredFiles = uncovered.size))
+    val st = fileState(name)
+    if (st.manifest.isEmpty) return None
+    valueRangeCandidates(name, targetRes, lo, hi)
+      .map(cand => manifestSelection(name, st, cand.collect().map(_.getString(0))))
   }
 
   /** Secondary-key range scan at `targetRes`: rows whose declared secondary
@@ -2196,24 +2109,11 @@ class CellStore(spark: SparkSession, rootPath: String) {
   }
 
   /** Read exactly the manifest-selected files, with the full partition-aware
-    * schema (basePath keeps the Hive partition columns; the explicit schema
-    * pins their types independently of which subset of directories
-    * survived). An empty selection is an empty frame, not a scan. */
-  private def manifestScan(name: String, sel: ManifestSelection): DataFrame = {
-    val proto = readDeclaredRaw(name)
-    if (sel.paths.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], proto.schema)
-    else {
-      val dels = pendingDeletes(name)
-      if (dels.isEmpty) withDriverSideFileStats {
-        spark.read.schema(proto.schema)
-          .option("basePath", qualifiedDataDir(name))
-          .parquet(sel.paths: _*)
-      }
-      else readFilesMasked(name, sel.paths, dels)
-    }
-  }
+    * schema (the data dir as base path keeps the Hive partition columns; the
+    * declared read schema pins their types independently of which subset of
+    * directories survived). An empty selection is an empty frame, not a scan. */
+  private def manifestScan(name: String, sel: ManifestSelection): DataFrame =
+    readFilesMasked(name, statusesOf(name, sel.paths), pendingDeletes(name))
 
   // --------------------------------------------------------------- optimize
 
@@ -2564,26 +2464,11 @@ class CellStore(spark: SparkSession, rootPath: String) {
 object CellStore {
   def apply(spark: SparkSession, rootPath: String): CellStore = new CellStore(spark, rootPath)
 
-  // JVM-wide (root, tableset)-keyed caches shared by every instance — see
-  // the instance-side scaladoc at CellStore#cacheKey
   /** Per-(root, tableset) append-commit monitors — see insert()'s critical
     * section. TrieMap getOrElseUpdate gives one canonical lock per key. */
   private val commitLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
   private[store] def commitLock(key: String): Object =
     commitLocks.getOrElseUpdate(key, new Object)
-
-  private val listingCache = scala.collection.concurrent.TrieMap.empty[String, Seq[String]]
-  private val coverageCache = scala.collection.concurrent.TrieMap.empty[String, (Long, Seq[String])]
-  private val deletesCache = scala.collection.concurrent.TrieMap.empty[String, Seq[DeleteMutation]]
-  /** Cached declared-schema reads (readDeclaredRaw), keyed
-    * cacheKey + NUL + appId — a DataFrame is session-bound, so frames
-    * of stopped contexts are unusable; entries are dropped with the listing
-    * on mutation, and stale-session entries are harmless (never hit: the
-    * key embeds the live appId). */
-  private val declaredCache = scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  /** Cached manifest-directory reads, same keying/lifecycle as declaredCache. */
-  private val manifestFrameCache = scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  private val selectionCache = scala.collection.concurrent.TrieMap.empty[String, ManifestSelection]
 
   /** A pending lightweight-delete mutation ([[CellStore.deleteWhere]]): rows
     * of `files` (paths RELATIVE to the data dir, like snapshot lists — a

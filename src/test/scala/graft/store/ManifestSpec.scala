@@ -263,4 +263,83 @@ class ManifestSpec extends AnyFunSuite with Matchers with SparkTestSession {
     sel.paths shouldBe empty
     query(Seq(foreign)) shouldBe empty
   }
+
+  private def freshStore(prefix: String, ts: String, res: Int,
+      cells: Seq[Long]): CellStore = {
+    val s = CellStore(spark, Files.createTempDirectory(prefix).toString)
+    s.insert(ts, frame(cells, 0),
+      createSchema = Some(CompactedTableSchema.builder(ts)
+        .h3BaseResolutions(Seq(res))
+        .useCompaction(false)
+        .addAggregatedColumn("v", T.Int64, Agg.Max)
+        .build()))
+    s
+  }
+
+  test("file selections are keyed by probe content, not by the probe Seq's hashCode") {
+    // two res-15 cells of hexagon base cell 20 that differ only in digit 4
+    // (0 -> 1, bit 33) and digit 15 (0 -> 2, bit 1): Long.## is lo ^ hi,
+    // so both one-cell probe Seqs hash alike
+    val c1 = H3.fromParts(bcA, 15, Seq.fill(15)(0))
+    val c2 = H3.fromParts(bcA, 15, Seq(0, 0, 0, 1) ++ Seq.fill(10)(0) :+ 2)
+    c2 shouldBe (c1 | (1L << 33) | (1L << 1))
+    Seq(c1).hashCode shouldBe Seq(c2).hashCode
+    val ts = "collide_ts"
+    val s = freshStore("graft_collide_", ts, 15, Seq(c1))
+    s.insert(ts, frame(Seq(c2), 1000)) // its own insert -> its own file
+    s.buildManifest(ts)
+    def q(c: Long): Seq[(Long, Long)] =
+      s.queryCells(ts, Seq(c), 15).select("h3index", "v").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    q(c1) shouldBe Seq((c1, 0L))
+    q(c2) shouldBe Seq((c2, 1000L))
+  }
+
+  test("concurrent reads neither touch the session conf nor start listing jobs") {
+    // 40 hexagon base cells -> 40 ph3 partitions -> more data and manifest
+    // files than both the default (32) and the configured (4) threshold
+    val bases = (0 until 122).filterNot(H3.isPentagonBaseCell).take(40)
+    val cells = bases.map(bc => H3.fromParts(bc, 7, Seq.fill(7)(0)))
+    val ts = "nolisting_ts"
+    val s = freshStore("graft_nolisting_", ts, 7, cells)
+    s.buildManifest(ts)
+    val snapshot = s.snapshotIds(ts).last
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    spark.conf.set(key, "4")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      val results = try {
+        (0 until 4).map { i =>
+          pool.submit(new java.util.concurrent.Callable[Seq[Long]] {
+            def call(): Seq[Long] = {
+              val probe = cells(i * 7)
+              Seq(s.queryCells(ts, Seq(probe), 7), s.scanForResolution(ts, 7),
+                s.scanAsOf(ts, snapshot)).map(_.count())
+            }
+          })
+        }.map(_.get())
+      } finally pool.shutdown()
+      all(results) shouldBe Seq(1L, 40L, 40L)
+      spark.conf.get(key) shouldBe "4"
+      // the listener bus is asynchronous: a marker job seen means every
+      // earlier job event has been delivered
+      spark.sparkContext.setJobDescription("nolisting-marker")
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!jobs.contains("nolisting-marker") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      jobs should contain("nolisting-marker")
+      jobs.toArray.toSeq.filter(_.toString.startsWith("Listing leaf files")) shouldBe empty
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.unset(key)
+    }
+  }
 }
