@@ -40,10 +40,13 @@ object Bench {
     val loadStart = loadAvg
     val (stealStart, totalStart) = cpuTicks
 
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // every gate that threw in any pass, warmup included: a measured -1.0
+    // drops out of the total, so the summary names the failures instead
+    val failedGates = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def run(name: String): Double = {
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
+      try SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case _: Throwable => failedGates.add(name); return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -86,9 +89,9 @@ object Bench {
       }
     val measured: Map[String, Double] =
       if (!evict) {
-        names.foreach(n => run(SparkEntry.queries(n))) // global warmup
-        val pass1 = names.map(n => n -> run(SparkEntry.queries(n))).toMap
-        val pass2 = names.map(n => n -> run(SparkEntry.queries(n))).toMap
+        names.foreach(run) // global warmup
+        val pass1 = names.map(n => n -> run(n)).toMap
+        val pass2 = names.map(n => n -> run(n)).toMap
         minOf(pass1, pass2, names).toMap
       } else {
         val families = names.groupBy(n => n.takeWhile(!_.isDigit)).toSeq.sortBy(_._1)
@@ -96,9 +99,9 @@ object Bench {
           PipelineQueries.evictMemos()
           spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
           spark.catalog.clearCache()
-          fnames.foreach(n => run(SparkEntry.queries(n))) // family-local warmup
-          val pass1 = fnames.map(n => n -> run(SparkEntry.queries(n))).toMap
-          val pass2 = fnames.map(n => n -> run(SparkEntry.queries(n))).toMap
+          fnames.foreach(run) // family-local warmup
+          val pass1 = fnames.map(n => n -> run(n)).toMap
+          val pass2 = fnames.map(n => n -> run(n)).toMap
           minOf(pass1, pass2, fnames)
         }.toMap
       }
@@ -107,12 +110,14 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
+    val failed = names.filter(failedGates.contains)
+      .map("\"" + _ + "\"").mkString("[", ",", "]")
     val (stealEnd, totalEnd) = cpuTicks
     val stealPct =
       if (totalEnd > totalStart) 100.0 * (stealEnd - stealStart) / (totalEnd - totalStart)
       else 0.0
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","load_start":$loadStart%.2f,"load_end":$loadAvg%.2f,"steal_pct":$stealPct%.2f}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","load_start":$loadStart%.2f,"load_end":$loadAvg%.2f,"steal_pct":$stealPct%.2f,"n_failed":${failedGates.size},"failed":$failed}"""
     println(json)
     // Also persist the full per-query map next to the build (the repo
     // root, detected by build.sbt in the cwd — sbt runs forked mains

@@ -2,9 +2,11 @@ package graft.insert
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
+import graft.h3.H3
+import graft.h3.expr.H3ExprUtil
 import graft.h3.expr.functions._
 
 /**
@@ -19,59 +21,123 @@ import graft.h3.expr.functions._
  * [[graft.h3.H3.childrenCount]] is pentagon-aware, so the completeness test
  * is exact.
  *
- * Scale note: one groupBy shuffle per resolution level (<= 15). The groupBy
- * key is (parent, value-columns...), so the shuffle co-locates each candidate
- * sibling set; skew is bounded by 7 rows per group. Input must be
- * row-deduplicated first (duplicate rows would inflate the sibling count and
- * is the reference's ReplacingMergeTree precondition).
+ * One pass: the deduplicated rows are shuffled ONCE, keyed by base cell
+ * (`h3_get_base_cell` of the h3 column), sorted by that key within each
+ * partition, and every base cell's rows are compacted in memory by
+ * [[compactBaseCell]] — the per-level algorithm run bottom-up, from the
+ * group's finest resolution to 1. The base cell is the one exact key: a
+ * level-r sibling set shares its parent at r-1 >= 0, and a cell's parent
+ * keeps its base cell, so no sibling set spans two base cells.
+ *
+ * Memory bound: one task holds the rows of ONE base cell of one insert at a
+ * time (plus the sort's buffer, which spills). The reference holds the whole
+ * chunk in one process (`insert.rs:99-108`), so this is no worse; a chunk
+ * whose rows mostly share a base cell runs that cell on one task. Input must
+ * be row-deduplicated first (duplicate rows would inflate the sibling count
+ * and is the reference's ReplacingMergeTree precondition). Rows with a null
+ * h3 cell are dropped.
  */
 object Compaction {
 
   /** Compact a deduplicated H3 DataFrame. All columns except `h3Col` are
-    * treated as value columns (equality required for merging). */
+    * treated as value columns (equality required for merging). Lazy: the
+    * result is one shuffle plus a map over the sorted partitions. */
   def compact(df: DataFrame, h3Col: String = "h3index"): DataFrame = {
-    val valueCols = df.columns.filterNot(_ == h3Col).toSeq
-    val maxRes = df.select(max(h3_get_resolution(col(h3Col)))).head() match {
-      case r if r.isNullAt(0) => return df // empty input
-      case r => r.getInt(0)
-    }
-    val present = mutable.Set[Int](
-      df.select(h3_get_resolution(col(h3Col)).as("r")).distinct()
-        .collect().map(_.getInt(0)).toIndexedSeq: _*)
-    var acc = df
-    var r = maxRes
-    while (r >= 1) {
-      if (!present(r)) { r -= 1 }
-      else {
-      present += (r - 1)
-      val atRes = acc.where(h3_get_resolution(col(h3Col)) === r)
-      val rest = acc.where(h3_get_resolution(col(h3Col)) =!= r)
-      val parent = h3_to_parent(col(h3Col), lit(r - 1))
-      // sibling sets: group by (parent, values); complete iff count == pentagon-aware child count
-      val grouped = atRes
-        .groupBy((parent.as(h3Col) +: valueCols.map(col)): _*)
-        .agg(count(lit(1)).as("_sibling_cnt"))
-      val promoted = grouped
-        .where(col("_sibling_cnt") === h3_children_count(col(h3Col), lit(r)))
-        .drop("_sibling_cnt")
-        .select(df.columns.map(col).toIndexedSeq: _*)
-      // rows whose (parent, values) group was NOT promoted survive at res r
-      val survivors = atRes
-        .join(promoted.select((col(h3Col).as("_p") +: valueCols.map(c => col(c).as(s"_v_$c"))): _*),
-          valueCols.foldLeft(parent === col("_p")) { (acc0, c) =>
-            acc0 && col(c) <=> col(s"_v_$c")
-          },
-          "left_anti")
-        .select(df.columns.map(col).toIndexedSeq: _*)
-      // localCheckpoint truncates the logical plan: without it the
-      // self-referencing union/filter lineage grows ~3^levels and chokes
-      // the optimizer well before data size matters.
-      acc = rest.unionByName(survivors).unionByName(promoted).localCheckpoint()
-      r -= 1
-      }
-    }
-    acc
+    val h3Idx = df.schema.fieldIndex(h3Col)
+    val valueIdx = df.schema.indices.filter(_ != h3Idx)
+    val baseCell = h3_get_base_cell(col(h3Col))
+    df.repartition(baseCell)
+      .sortWithinPartitions(baseCell)
+      .mapPartitions(rows => compactSorted(rows, h3Idx, valueIdx))(Encoders.row(df.schema))
   }
+
+  /** Split a base-cell-sorted partition into runs of one base cell and
+    * compact each run on its own. */
+  private def compactSorted(rows: Iterator[Row], h3Idx: Int,
+      valueIdx: Seq[Int]): Iterator[Row] = {
+    val in = rows.filterNot(_.isNullAt(h3Idx)).buffered
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { it =>
+      val bc = H3.getBaseCell(it.head.getLong(h3Idx))
+      val run = mutable.ArrayBuffer.empty[Row]
+      while (it.hasNext && H3.getBaseCell(it.head.getLong(h3Idx)) == bc) run += it.next()
+      compactBaseCell(run, h3Idx, valueIdx)
+    }
+  }
+
+  /** A row waiting at its resolution, with its value tuple's equality key. */
+  private final case class Pending(row: Row, cell: Long, values: Seq[Any])
+
+  /** The level algorithm over the rows of one base cell: for r from the
+    * finest resolution down to 1, count the rows at r per (parent, value
+    * tuple); a set whose count equals the pentagon-aware child count is
+    * replaced by its parent at r-1, where it can join the next level's sets.
+    * Value tuples compare as Spark's groupBy does: null equals null, NaN
+    * equals NaN, -0.0 equals 0.0 (see [[valueKey]]). */
+  private def compactBaseCell(rows: Iterable[Row], h3Idx: Int,
+      valueIdx: Seq[Int]): Iterator[Row] = {
+    val byRes = Array.fill(H3.MaxRes + 1)(mutable.ArrayBuffer.empty[Pending])
+    rows.foreach { row =>
+      val cell = row.getLong(h3Idx)
+      byRes(H3.getResolution(cell)) += Pending(row, cell, valueIdx.map(i => valueKey(row.get(i))))
+    }
+    var r = H3.MaxRes
+    while (r >= 1) {
+      val atRes = byRes(r)
+      if (atRes.nonEmpty) {
+        val sets = mutable.HashMap.empty[(Long, Seq[Any]), (Pending, Int)]
+        atRes.foreach { p =>
+          val k = (H3ExprUtil.toParentTotal(p.cell, r - 1), p.values)
+          sets.updateWith(k) {
+            case Some((first, n)) => Some((first, n + 1))
+            case None => Some((p, 1))
+          }
+        }
+        val complete = sets.filter { case ((parent, _), (_, n)) =>
+          n == H3ExprUtil.childrenCountTotal(parent, r)
+        }
+        if (complete.nonEmpty) {
+          byRes(r) = atRes.filterNot(p =>
+            complete.contains((H3ExprUtil.toParentTotal(p.cell, r - 1), p.values)))
+          complete.foreach { case ((parent, values), (first, _)) =>
+            byRes(r - 1) += Pending(promote(first.row, h3Idx, parent), parent, values)
+          }
+        }
+      }
+      r -= 1
+    }
+    byRes.iterator.flatMap(_.iterator.map(_.row))
+  }
+
+  /** The parent row of a complete sibling set: the first sibling's values,
+    * floats canonicalized as Spark's groupBy key output is. */
+  private def promote(first: Row, h3Idx: Int, parent: Long): Row =
+    Row.fromSeq(first.toSeq.zipWithIndex.map { case (v, i) =>
+      if (i == h3Idx) parent else canonical(v)
+    })
+
+  /** -0.0 to 0.0 and every NaN to the one NaN, through structs and arrays
+    * (Spark's NormalizeFloatingNumbers on grouping keys). */
+  private def canonical(v: Any): Any = v match {
+    case d: Double => if (d == 0.0) 0.0 else if (d.isNaN) Double.NaN else d
+    case f: Float => if (f == 0.0f) 0.0f else if (f.isNaN) Float.NaN else f
+    case r: Row => Row.fromSeq(r.toSeq.map(canonical))
+    case s: scala.collection.Seq[_] => s.map(canonical)
+    case other => other
+  }
+
+  /** Equality key of one value: floats by the bits of their canonical form
+    * (Scala's `==` on boxed doubles says NaN != NaN), binary by content,
+    * structs and arrays element-wise, null as null. */
+  private def valueKey(v: Any): Any = v match {
+    case d: Double => FloatBits(java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d))
+    case f: Float => FloatBits(java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f).toLong)
+    case b: Array[Byte] => b.toSeq
+    case r: Row => r.toSeq.map(valueKey)
+    case s: scala.collection.Seq[_] => s.map(valueKey)
+    case other => other
+  }
+
+  private final case class FloatBits(bits: Long)
 
   /** Expand every cell to `targetRes`; cells already at/above targetRes pass
     * through unchanged (matches reference uncompaction: only coarser cells
@@ -169,7 +235,6 @@ object Compaction {
       includeTargetRes: Boolean = false,
       driverCells: Option[Seq[Long]] = None,
       broadcastProbes: Boolean = false): DataFrame = {
-    import graft.h3.H3
     val keyResBound = if (includeTargetRes) targetRes + 1 else targetRes
     val q0 = probes.columns.head
     lazy val pn = probes.select(

@@ -546,6 +546,8 @@ class CellStore(spark: SparkSession, rootPath: String) {
     val compacted =
       (if (schema.compactionEnabled) Compaction.compact(deduped, h3Col) else deduped)
         .persist(StorageLevel.MEMORY_AND_DISK)
+    // every rollup step's persisted output, released with `compacted`
+    val rolledUp = mutable.ListBuffer.empty[DataFrame]
     try {
       val maxRes = schema.maxBaseResolution
       val maxFound = compacted.select(max(h3_get_resolution(col(h3Col)))).head()
@@ -576,6 +578,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
         val source = sourceBase.unionByName(interCompacted)
         val target = Rollup.rollupStep(source, schema, srcRes, tgtRes)
           .persist(StorageLevel.MEMORY_AND_DISK)
+        rolledUp += target
         frames += target
           .withColumn("resolution", lit(tgtRes))
           .withColumn("kind", lit("base"))
@@ -602,6 +605,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
         recordSnapshot(name, preexisting)
       }
     } finally {
+      rolledUp.foreach(_.unpersist())
       compacted.unpersist()
     }
   }

@@ -1,5 +1,8 @@
 package graft.insert
 
+import scala.collection.mutable
+import scala.util.Random
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -161,5 +164,121 @@ class CompactionSpec extends AnyFunSuite with Matchers with SparkTestSession {
     val out = Compaction.uncompactRestricted(d, 4, Seq(wantedUnderC2, c4).toDF("cell"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     out shouldBe Map(wantedUnderC2 -> 1, c4 -> 2)
+  }
+
+  // ---- the one-shuffle kernel against the level loop it replaced ----
+
+  private val pairSchema = StructType(Seq(
+    StructField("h3index", LongType, false),
+    StructField("w", DoubleType, true),
+    StructField("tag", StringType, true)))
+
+  /** Value tuples from a small pool, so siblings often agree: a nullable
+    * double with NaN and both zeros, and a nullable string. */
+  private val wPool: Seq[java.lang.Double] =
+    Seq[java.lang.Double](1.5, 1.5, Double.NaN, null, 0.0, -0.0)
+  private val tagPool: Seq[String] = Seq("a", "a", null, "b")
+
+  /** A seeded row-distinct input over several base cells (hexagons 20 and
+    * 21, pentagon base cell 4): under each root's first child a uniform
+    * subtree three levels deep, under the others a random tree whose nodes
+    * stop early, lose children or change value, and sometimes carry their
+    * complete children with the same value beside themselves; plus rows at
+    * resolution 0. */
+  private def randomInput(seed: Long): Seq[Row] = {
+    val rnd = new Random(seed)
+    def value(): (java.lang.Double, String) =
+      (wPool(rnd.nextInt(wPool.length)), tagPool(rnd.nextInt(tagPool.length)))
+    val out = mutable.ArrayBuffer.empty[Row]
+    def emit(c: Long, v: (java.lang.Double, String)): Unit = out += Row(c, v._1, v._2)
+    def grow(cell: Long, leafRes: Int, v: (java.lang.Double, String)): Unit = {
+      val res = H3.getResolution(cell)
+      if (res == leafRes || rnd.nextDouble() < 0.15) {
+        emit(cell, v)
+        if (res < leafRes && rnd.nextDouble() < 0.3)
+          H3.toChildren(cell, res + 1).foreach(emit(_, v)) // overlap
+      } else H3.toChildren(cell, res + 1).foreach { k =>
+        val q = rnd.nextDouble()
+        if (q >= 0.08) grow(k, leafRes, if (q < 0.2) value() else v)
+      }
+    }
+    val roots = Seq(
+      H3.fromParts(20, 2, Seq(rnd.nextInt(7), rnd.nextInt(7))),
+      H3.fromParts(21, 1, Seq(rnd.nextInt(7))),
+      H3.fromParts(4, 1, Seq(2 + rnd.nextInt(5))), // hexagon under a pentagon base cell
+      H3.fromParts(4, 1, Seq(0)))                   // the pentagon itself
+    roots.foreach { root =>
+      val leafRes = H3.getResolution(root) + 4
+      val kids = H3.toChildren(root, H3.getResolution(root) + 1)
+      val uniform = value()
+      H3.toChildren(kids.head, leafRes).foreach(emit(_, uniform))
+      kids.drop(1).foreach(k => grow(k, leafRes, value()))
+    }
+    // res 0: a hexagon beside its complete children (same value), the six
+    // children of a pentagon, and a lone cell
+    val hexRes0 = H3.fromParts(30, 0, Nil)
+    val v0 = value()
+    (hexRes0 +: H3.toChildren(hexRes0, 1).toSeq).foreach(emit(_, v0))
+    val v1 = value()
+    H3.toChildren(H3.fromParts(14, 0, Nil), 1).foreach(emit(_, v1))
+    emit(H3.fromParts(38, 0, Nil), value())
+    val cells = out.map(_.getLong(0))
+    require(cells.distinct.length == cells.length, "generator emitted a cell twice")
+    out.toSeq
+  }
+
+  /** Multiset form of a compacted frame; doubles by their bits, so 0.0,
+    * -0.0 and NaN all stay distinguishable. */
+  private def multiset(rows: Array[Row]): Seq[(Long, Option[Long], Option[String])] =
+    rows.toSeq.map { r =>
+      (r.getLong(0),
+        if (r.isNullAt(1)) None else Some(java.lang.Double.doubleToLongBits(r.getDouble(1))),
+        Option(r.getString(2)))
+    }.sorted
+
+  test("one-shuffle compaction equals the level loop on seeded random inputs") {
+    (1L to 6L).foreach { seed =>
+      val rows = randomInput(seed)
+      val d = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), pairSchema)
+      val expected = multiset(LevelLoopCompaction.compact(d).collect())
+      withClue(s"seed $seed (${rows.length} rows): ") {
+        multiset(Compaction.compact(d).collect()) shouldBe expected
+        expected.length should be < rows.length
+      }
+    }
+    val none = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], pairSchema)
+    Compaction.compact(none).collect() shouldBe empty
+    LevelLoopCompaction.compact(none).collect() shouldBe empty
+  }
+
+  test("compaction runs a few Spark jobs, however deep the subtree") {
+    val cells = H3.toChildren(hexRes3, 7).toSeq // 2401 cells, four levels of merges
+    val d = df(cells, Seq.fill(cells.length)(5))
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    // the listener bus is asynchronous: marker jobs fence the jobs counted
+    def marker(name: String): Unit = {
+      spark.sparkContext.setJobDescription(name)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker("compaction-jobs-start")
+      val out = Compaction.compact(d).collect()
+      marker("compaction-jobs-end")
+      val deadline = System.currentTimeMillis() + 30000
+      while (!jobs.contains("compaction-jobs-end") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      jobs should contain("compaction-jobs-end")
+      val compactionJobs = jobs.toArray.toSeq.map(_.toString)
+        .dropWhile(_ != "compaction-jobs-start").dropWhile(_ == "compaction-jobs-start")
+        .takeWhile(_ != "compaction-jobs-end")
+      out.map(r => r.getLong(0) -> r.getInt(1)).toSeq shouldBe Seq(hexRes3 -> 5)
+      compactionJobs.length should (be >= 1 and be <= 3)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

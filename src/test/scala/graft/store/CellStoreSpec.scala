@@ -626,4 +626,15 @@ class CellStoreSpec extends AnyFunSuite with Matchers with SparkTestSession {
         StructField("elephant_count", LongType, false))))
     an[IllegalArgumentException] should be thrownBy store.insert("okavango_sum", input)
   }
+
+  test("insert leaves no cached frame behind: compaction and every rollup step are unpersisted") {
+    val store = newStore()
+    store.createTableset(elephantSchema) // base resolutions 0..7: seven rollup steps
+    val cacheManager = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    cacheManager.isEmpty shouldBe true
+    store.insert("okavango_delta", elephantInput)
+    cacheManager.isEmpty shouldBe true
+    store.queryCells("okavango_delta", Seq(hexRes5), 7).count() shouldBe 49
+  }
 }
