@@ -62,51 +62,12 @@ object Bench {
     // pass — a steal burst shorter than that cannot inflate both, which is
     // what makes the min steal-robust (the round-8 review caught a
     // back-to-back-passes variant that silently lost this property).
-    //
-    // SPARK_GRAFT_BENCH_EVICT=1 switches to per-family blocks (name prefix
-    // c/d/e/g/h/m/q/s/t/ts) with a ScaleSmoke-style release between them
-    // (evictMemos + RDD unpersist + clearCache — eviction goes through
-    // evictMemos() so no memo key outlives its blocks); each family's two
-    // passes then run back-to-back, trading steal-spacing for a bounded
-    // working set.
-    //
-    // MEASURED (round 8, two interleaved sf0.1 runs, same host session):
-    // the r7 verdict hypothesized that pinned memoized localCheckpoint
-    // blocks caused the suite-wide 1.29x shared-tail drift. The experiment
-    // REFUTED it: the 66-query shared tail ran 86.1 s WITH between-family
-    // eviction vs 73.8 s WITHOUT (r6 64.0, r7 82.4) — at sf0.1 the pinned
-    // blocks are cheaper than rebuilding each family's memos, and the
-    // no-evict number sits between r6 and r7 on identical code, i.e. the
-    // drift was host-window variance plus suite growth, not memo pressure.
-    // Eviction stays OFF by default here (the bench working set fits);
-    // ScaleSmoke keeps its per-dir release, where the 300x one-JVM OOM
-    // showed pinning genuinely matters.
-    val evict = sys.env.contains("SPARK_GRAFT_BENCH_EVICT")
-    def minOf(pass1: Map[String, Double], pass2: Map[String, Double], ns: Seq[String]) =
-      ns.map { n =>
-        val (a, b) = (pass1(n), pass2(n))
-        n -> (if (a < 0) b else if (b < 0) a else math.min(a, b))
-      }
-    val measured: Map[String, Double] =
-      if (!evict) {
-        names.foreach(run) // global warmup
-        val pass1 = names.map(n => n -> run(n)).toMap
-        val pass2 = names.map(n => n -> run(n)).toMap
-        minOf(pass1, pass2, names).toMap
-      } else {
-        val families = names.groupBy(n => n.takeWhile(!_.isDigit)).toSeq.sortBy(_._1)
-        families.flatMap { case (_, fnames) =>
-          PipelineQueries.evictMemos()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-          spark.catalog.clearCache()
-          fnames.foreach(run) // family-local warmup
-          val pass1 = fnames.map(n => n -> run(n)).toMap
-          val pass2 = fnames.map(n => n -> run(n)).toMap
-          minOf(pass1, pass2, fnames)
-        }.toMap
-      }
-
-    val results = names.map(n => n -> measured(n))
+    names.foreach(run) // global warmup
+    val pass1 = names.map(run)
+    val pass2 = names.map(run)
+    val results = names.lazyZip(pass1).lazyZip(pass2).map { (n, a, b) =>
+      n -> (if (a < 0) b else if (b < 0) a else math.min(a, b))
+    }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum

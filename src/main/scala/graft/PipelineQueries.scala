@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ann.Ann
 import graft.text.TextOps
+import graft.util.SessionCache
 
 /**
  * Training-data pipeline queries (dedup / similarity / text analysis) with
@@ -46,7 +47,7 @@ object PipelineQueries {
     * memoization as the tableset stores and cluster labels. At corpus scale
     * this frame is a written intermediate table instead of executor cache. */
   private def shingleCodesExploded(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"shingles:$dir") {
+    memo(spark, ("shingles", dir)) {
       docs(spark, dir).select(col("doc_id"), col("text"))
         .select(col("doc_id"), col("text"), explode_outer(
           when(char_length(col("text")) < 3, array().cast("array<int>"))
@@ -86,57 +87,21 @@ object PipelineQueries {
     * engines compute identical sets on any corpus. At corpus scale this is
     * the one written signature table a dedup pipeline maintains. */
   private def sigSetsFrame(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"sigsets:$dir") {
+    memo(spark, ("sigsets", dir)) {
       val aggs = (0 until 8).map { j =>
         min((pmod(col("code"), lit(P)) * TextOps.hashA(j) + TextOps.hashB(j)) % P).as(s"mh$j")
       } :+ collect_set(pmod(col("code"), lit(P)).cast("int")).as("s")
       shingleCodesExploded(spark, dir).groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
     }
 
-  /** Per-dir memo of derived frames (shingles/signatures): a banded
-    * self-join otherwise recomputes its input once per join side — at
-    * corpus scale these ARE written intermediate tables; localCheckpoint is
-    * the local stand-in. Keys include the SparkContext application id: a
-    * checkpointed frame is bound to its context, so a second session in the
-    * same JVM (restart between verify and bench, a test suite's own
-    * session) must rebuild rather than receive blocks of a stopped
-    * context. */
-  private val frameCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  /** Drop every memoized frame (all sessions). For callers that are about
-    * to unpersist the checkpoint blocks those frames are backed by (the
-    * ScaleSmoke per-decade release): a cached localCheckpointed frame whose
-    * blocks are gone is permanently broken — it must be rebuilt, not
-    * served. */
-  private[graft] def evictMemos(): Unit = frameCache.clear()
-
-  private[graft] def memo(spark: SparkSession, key: String)(f: => DataFrame): DataFrame = {
-    val appId = spark.sparkContext.applicationId
-    // evict entries of OTHER (stopped) contexts: stale checkpointed frames
-    // are unusable and would otherwise pin each dead session's plans forever
-    frameCache.keySet.removeIf(k => !k.startsWith(s"$appId:"))
-    // NOT computeIfAbsent: memoized builders NEST (c1 -> clusters ->
-    // shingle frames; d9 -> trigrams) — which query trips the recursive
-    // update depends on registry iteration order, so it surfaced as
-    // order-dependent gate flakes
-    graft.util.Memo.getOrBuild(frameCache, s"$appId:$key")(f.localCheckpoint())
-  }
-
-  /** Per-(session, key) scalar cache — the [[memo]] device for driver-side
-    * LONGs (base-table row counts, 1-row aggregate reads). A base table is
-    * immutable for the session (the e5 index-cache contract), so its count
-    * is session metadata exactly like the store's file-listing cache;
-    * uncached, every IVF/LSH/TF-IDF gate re-ran a count() JOB per
-    * execution just to size its quantizer stride / band count / idf
-    * constant. Evicted with dead contexts like [[memo]]. */
-  private val scalarCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private[graft] def cachedCount(spark: SparkSession, key: String)(
-      f: => Long): Long = {
-    val appId = spark.sparkContext.applicationId
-    scalarCache.keySet.removeIf(k => !k.startsWith(s"$appId:"))
-    graft.util.Memo.getOrBuild(scalarCache, s"$appId:$key")(java.lang.Long.valueOf(f)).longValue()
-  }
+  /** Memo of derived frames (shingles/signatures): a banded self-join
+    * otherwise recomputes its input once per join side — at corpus scale
+    * these ARE written intermediate tables; localCheckpoint is the local
+    * stand-in. Cached in [[SessionCache]] under `key`, so builders nest
+    * (c1 -> clusters -> shingle frames; d9 -> trigrams) and a new
+    * SparkContext rebuilds rather than receive blocks of a stopped one. */
+  private[graft] def memo(spark: SparkSession, key: Any)(f: => DataFrame): DataFrame =
+    SessionCache(spark, key)(f.localCheckpoint())
 
   private def minhashFrame(spark: SparkSession, dir: String): DataFrame =
     sigSetsFrame(spark, dir).drop("s")
@@ -170,7 +135,7 @@ object PipelineQueries {
     // closure seed, m6's text edges and t8's cluster edges — and the
     // verification joins (two sort-merge joins against the shingle-set
     // frame) were re-run by each of them per bench pass (guide §1.2)
-    memo(spark, s"t2pairs:$dir") {
+    memo(spark, ("t2pairs", dir)) {
       val bands = bandsFrame(spark, dir)
       val reps = bands.groupBy(col("band"), col("bh"))
         .agg(min(col("doc_id")).as("doc_a"), count(lit(1)).as("n"))
@@ -243,7 +208,7 @@ object PipelineQueries {
     val bits = (0 until 31).map { b =>
       when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L))
     }
-    memo(spark, s"simhash:$dir") {
+    memo(spark, ("simhash", dir)) {
       shingleCodesExploded(spark, dir)
         .select(col("doc_id"), h.as("h"))
         .groupBy(col("doc_id")).agg(votes.head, votes.tail: _*)
@@ -268,7 +233,7 @@ object PipelineQueries {
         struct(lit(b).as("band"),
           shiftright(col("simhash31"), sh).bitwiseAND(lit(m)).as("bucket"))
     }
-    memo(spark, s"simhashPairs:$dir") {
+    memo(spark, ("simhashPairs", dir)) {
       val banded = simhashFrame(spark, dir)
         .select(col("doc_id"), col("simhash31"), explode(array(bands: _*)).as("b"))
         .select(col("doc_id"), col("simhash31"), col("b.band").as("band"), col("b.bucket").as("bucket"))
@@ -318,7 +283,7 @@ object PipelineQueries {
     // memoized: each nearDupPairs call materializes its own band frame
     // (Ann.scala persist note) — repeat invocations (verify + bench's
     // double run) would otherwise accumulate executor storage per call
-    val pairs = memo(spark, s"e3pairs:$dir") {
+    val pairs = memo(spark, ("e3pairs", dir)) {
       val data = emb(spark, dir).select(col("vec_id").as("id"), col("embedding").as("vec"))
       Ann.nearDupPairs(data, 0.4, 48, 64, Ann.adaptiveNearDupBands(data.count()))
     }
@@ -414,24 +379,24 @@ object PipelineQueries {
     * pipeline these ARE the ingested media table — paid once at ingest,
     * not per featurizer. */
   private def mediaImages(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"msyn:img:$dir") {
+    memo(spark, ("msyn", "img", dir)) {
       graft.multimodal.Multimodal.synthesizeImageTable(docs(spark, dir))
     }
   private def mediaAudio(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"msyn:aud:$dir") {
+    memo(spark, ("msyn", "aud", dir)) {
       graft.multimodal.Multimodal.synthesizeAudioTable(docs(spark, dir))
     }
   private def mediaGifs(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"msyn:gif:$dir") {
+    memo(spark, ("msyn", "gif", dir)) {
       graft.multimodal.Multimodal.synthesizeGifTable(docs(spark, dir))
     }
   private def mediaTiffs(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"msyn:tif:$dir") {
+    memo(spark, ("msyn", "tif", dir)) {
       graft.multimodal.Multimodal.synthesizeTiffTable(docs(spark, dir))
     }
 
   private def decodedImages(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"mimg:$dir") {
+    memo(spark, ("mimg", dir)) {
       graft.multimodal.Multimodal.withImageAHash(
         graft.multimodal.Multimodal.decodeImage(
           mediaImages(spark, dir), "content"))
@@ -466,7 +431,7 @@ object PipelineQueries {
     // retriever's OUTPUT table rather than re-running the retriever. The
     // memo holds 50 rows; the signature/candidate DAG behind it is the
     // expensive part.
-    memo(spark, s"e2topk:$dir") {
+    memo(spark, ("e2topk", dir)) {
       val e = emb(spark, dir)
       val queries = e.where(col("vec_id") < 10)
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
@@ -609,7 +574,7 @@ object PipelineQueries {
         explode(array((1 to IvfNprobe).map(lit): _*)).as("nprobe"))
     // memoized so the assert collect() below doesn't leave the caller to
     // re-execute the whole sweep DAG a second time
-    val out = memo(spark, s"e14:$dir") {
+    val out = memo(spark, ("e14", dir)) {
       keys.join(hits, Seq("nprobe", "query_id"), "left")
         .select(col("nprobe"), col("query_id"),
           coalesce(col("hits"), lit(0L)).as("hits"),
@@ -655,14 +620,14 @@ object PipelineQueries {
     val v = ivfCorpus(spark, dir)
     val cents = ivfCentroids(spark, dir, v)
     val np = math.max(1L, math.ceil(
-      cachedCount(spark, s"ivfC:$dir")(cents.count()) / IvfAdaptiveDenom.toDouble).toLong)
+      SessionCache(spark, ("count", "ivfC", dir))(cents.count()) / IvfAdaptiveDenom.toDouble).toLong)
     val queries = v.where(col("id") < IvfNumQueries)
     val exact = exactKnnFrame(spark, dir)
     val hits = Ann.knnIvf(queries, v, cents, IvfK, np.toInt)
       .select(col("query_id"), col("neighbor_id"))
       .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
       .groupBy(col("query_id")).agg(count(lit(1)).as("hits"))
-    val out = memo(spark, s"e16:$dir") {
+    val out = memo(spark, ("e16", dir)) {
       exact.select(col("query_id")).distinct()
         .join(hits, Seq("query_id"), "left")
         .select(col("query_id"), lit(np).as("nprobe"),
@@ -724,7 +689,7 @@ object PipelineQueries {
   }
 
   def e15PqDistortion(spark: SparkSession, dir: String): DataFrame = {
-    val out = memo(spark, s"e15:$dir")(e15PqDistortionRaw(spark, dir))
+    val out = memo(spark, ("e15", dir))(e15PqDistortionRaw(spark, dir))
       .orderBy(col("family"), col("query_id"))
     val rows = out.collect()
     def meanRecall(fam: String) = {
@@ -796,7 +761,7 @@ object PipelineQueries {
     * group of 3 docs), so the 16-bit buckets prune ~65k x harder than the
     * stub era's 4-bit bands. */
   def m3PhashNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = memo(spark, s"m3pairs:$dir") {
+    val pairs = memo(spark, ("m3pairs", dir)) {
       val sig = decodedImages(spark, dir) // aHash is part of the feature memo
         .select(col("doc_id"), col("ahash_hi"), col("ahash_lo"))
       val bands = (0 until 2).map { j =>
@@ -834,7 +799,7 @@ object PipelineQueries {
     * asig_hi, asig_lo), ~24 B/row (the [[decodedImages]] rule: features
     * are memoized, raw samples never are). Shared by m8 and m6. */
   private def decodedAudioSigs(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"maud:$dir") {
+    memo(spark, ("maud", dir)) {
       graft.multimodal.Multimodal.audioSignatures(
         mediaAudio(spark, dir), "content")
     }
@@ -854,7 +819,7 @@ object PipelineQueries {
     * evidence links documents no other modality pairs. Only
     * (band, bucket, id, two longs) transit the shuffle — samples never do. */
   def m8AudioNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = memo(spark, s"m8pairs:$dir") {
+    val pairs = memo(spark, ("m8pairs", dir)) {
       val sig = decodedAudioSigs(spark, dir)
       val bands = (0 until 2).map { j =>
         struct(lit(j).as("band"),
@@ -918,7 +883,7 @@ object PipelineQueries {
     * three edge sets are banded (never all-pairs); components shuffle
     * (node, label) pairs only. */
   def m6CrossModalDedup(spark: SparkSession, dir: String): DataFrame = {
-    val labels = memo(spark, s"m6labels:$dir") {
+    val labels = memo(spark, ("m6labels", dir)) {
       val textEdges = t2MinhashLshPairs(spark, dir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val imgEdges = m3PhashNearDup(spark, dir)
@@ -1042,7 +1007,7 @@ object PipelineQueries {
     * decontamination pipeline scans. Both consumers aggregate exact
     * integer counts, so the source swap cannot move any rounded value. */
   private def contamGrams(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"contamGrams:$dir") {
+    memo(spark, ("contamGrams", dir)) {
       TextOps.wordGrams(docs(spark, dir), 4)
     }
 
@@ -1050,27 +1015,22 @@ object PipelineQueries {
     * join (memoized — bench.stat.bloomFilter is an EAGER job, so without
     * the memo the full gram formation would run twice per call). */
   private def contamBench(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"contamBench:$dir") {
+    memo(spark, ("contamBench", dir)) {
       contamGrams(spark, dir)
         .where(pmod(col("doc_id"), lit(23)) === 0).select("g").distinct()
     }
 
   /** Per-(session, dir) Bloom broadcast for c3 — rebuilt per call it would
     * leak one ~1.2 MB broadcast per invocation for the session lifetime
-    * (Bench alone calls c3 three times). Evicted with dead contexts like
+    * (Bench alone calls c3 three times). Cached in [[SessionCache]] like
     * [[memo]]. */
-  private val bloomCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.broadcast.Broadcast[
-      org.apache.spark.util.sketch.BloomFilter]]()
   private def contamBloom(spark: SparkSession, dir: String)
       : org.apache.spark.broadcast.Broadcast[
-        org.apache.spark.util.sketch.BloomFilter] = {
-    val appId = spark.sparkContext.applicationId
-    bloomCache.keySet.removeIf(k => !k.startsWith(s"$appId:"))
-    bloomCache.computeIfAbsent(s"$appId:$dir", _ =>
+        org.apache.spark.util.sketch.BloomFilter] =
+    SessionCache(spark, ("contamBloom", dir)) {
       spark.sparkContext.broadcast(
-        contamBench(spark, dir).stat.bloomFilter("g", 1L << 20, 0.01)))
-  }
+        contamBench(spark, dir).stat.bloomFilter("g", 1L << 20, 0.01))
+    }
 
   /** Bloom-prefiltered decontamination (c3) — same contract and output as
     * c2, but the plan is the one that survives when the benchmark/eval gram
@@ -1104,21 +1064,18 @@ object PipelineQueries {
     * Cached like [[contamBloom]] (rebuilt per call it would leak one
     * broadcast per invocation for the session lifetime).
     *
-    * Invalidation contract: keyed by (appId, dir) and NEVER invalidated
-    * within a session — callers must treat a dir's documents table as
-    * immutable for the SparkSession lifetime (true for the gate/bench
-    * harness, whose dirs are driver-written fixtures). A long-lived service
-    * would key by (dir, listing token) instead. */
-  private val benchSetCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.broadcast.Broadcast[Set[String]]]()
+    * Invalidation contract: a [[SessionCache]] entry keyed by dir, dropped
+    * only with its SparkContext or by `SessionCache.clear()` — callers must
+    * treat a dir's documents table as immutable for the context's lifetime
+    * (true for the gate/bench harness, whose dirs are driver-written
+    * fixtures). A long-lived service would key by (dir, listing token)
+    * instead. */
   private def contamBenchSet(spark: SparkSession, dir: String)
-      : org.apache.spark.broadcast.Broadcast[Set[String]] = {
-    val appId = spark.sparkContext.applicationId
-    benchSetCache.keySet.removeIf(k => !k.startsWith(s"$appId:"))
-    benchSetCache.computeIfAbsent(s"$appId:$dir", _ =>
+      : org.apache.spark.broadcast.Broadcast[Set[String]] =
+    SessionCache(spark, ("contamBenchSet", dir)) {
       spark.sparkContext.broadcast(
-        contamBench(spark, dir).collect().map(_.getString(0)).toSet))
-  }
+        contamBench(spark, dir).collect().map(_.getString(0)).toSet)
+    }
 
   /** Streaming decontamination at ingest (s18): c2/c3's benchmark-overlap
     * check applied where production applies it — as each document ARRIVES,
@@ -1213,9 +1170,9 @@ object PipelineQueries {
     emb(spark, dir).select(col("vec_id").as("id"), col("embedding").as("vec"))
   /** Corpus row count, computed once per (session, dir) — every IVF gate
     * sizes its quantizer stride from it, and uncached each execution paid
-    * a count() job before any real work ([[cachedCount]]). */
+    * a count() job before any real work ([[SessionCache]]). */
   private def embCount(spark: SparkSession, dir: String): Long =
-    cachedCount(spark, s"embN:$dir")(emb(spark, dir).count())
+    SessionCache(spark, ("count", "embN", dir))(emb(spark, dir).count())
   /** Deterministic coarse quantizer with the stride from the CACHED corpus
     * count — every caller's v IS the full per-dir corpus, so the stride is
     * a pure function of the session-immutable table. */
@@ -1244,19 +1201,19 @@ object PipelineQueries {
     * e4's oracle: an index search must return EXACTLY the ad-hoc knnIvf
     * results. The index builds once per dir (like the tableset stores).
     *
-    * Invalidation contract: keyed by dir and NEVER invalidated within the
-    * JVM — a dir's embeddings table is assumed immutable for the session
-    * (true for the gate/bench harness). If a dir's data could change
-    * mid-session, key by (dir, listing token) like the tableset mirrors. */
-  private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * Invalidation contract: a [[SessionCache]] entry keyed by dir, built
+    * once per SparkContext and dropped only with it or by
+    * `SessionCache.clear()` — a dir's embeddings table is assumed
+    * immutable for the context's lifetime (true for the gate/bench
+    * harness). If a dir's data could change mid-session, key by (dir,
+    * listing token) instead. */
   def e5IvfIndex(spark: SparkSession, dir: String): DataFrame = {
     val v = ivfCorpus(spark, dir)
-    val path = ivfIndexCache.computeIfAbsent(dir, _ => {
+    val path = SessionCache(spark, ("ivf", "index", dir)) {
       val p = graft.util.TempDirs.create("graft_ivf_index_")
       graft.ann.IvfIndex.build(spark, v, ivfCentroids(spark, dir, v), p)
       p
-    })
+    }
     ivfProject(graft.ann.IvfIndex.search(spark, path,
       v.where(col("id") < IvfNumQueries), IvfK, IvfNprobe))
   }
@@ -1269,13 +1226,13 @@ object PipelineQueries {
     * index must return exactly the single-pass result — e4's oracle again. */
   def e6IvfAppend(spark: SparkSession, dir: String): DataFrame = {
     val v = ivfCorpus(spark, dir)
-    val path = ivfIndexCache.computeIfAbsent(s"append:$dir", _ => {
+    val path = SessionCache(spark, ("ivf", "append", dir)) {
       val p = graft.util.TempDirs.create("graft_ivf_append_")
       graft.ann.IvfIndex.build(spark, v.where(pmod(col("id"), lit(2)) === 0),
         ivfCentroids(spark, dir, v), p)
       graft.ann.IvfIndex.append(spark, v.where(pmod(col("id"), lit(2)) === 1), p)
       p
-    })
+    }
     ivfProject(graft.ann.IvfIndex.search(spark, path,
       v.where(col("id") < IvfNumQueries), IvfK, IvfNprobe))
   }
@@ -1300,7 +1257,7 @@ object PipelineQueries {
     * loop runs on the arrival feed with a sampled-trained quantizer. */
   def s19StreamIvfMaintain(spark: SparkSession, dir: String): DataFrame = {
     val v = ivfCorpus(spark, dir)
-    val path = ivfIndexCache.computeIfAbsent(s"stream:$dir", _ => {
+    val path = SessionCache(spark, ("ivf", "stream", dir)) {
       val p = graft.util.TempDirs.create("graft_ivf_stream_")
       val cents = ivfCentroids(spark, dir, v).localCheckpoint() // frozen quantizer, reused per batch
       val staging = graft.util.Staging.stageChunks(
@@ -1331,7 +1288,7 @@ object PipelineQueries {
       // the full ingest->maintain->OPTIMIZE->serve loop.
       graft.ann.IvfIndex.compact(spark, p)
       p
-    })
+    }
     ivfProject(graft.ann.IvfIndex.search(spark, path,
       v.where(col("id") < IvfNumQueries), IvfK, IvfNprobe))
   }
@@ -1368,7 +1325,7 @@ object PipelineQueries {
     * full assign -> residual -> encode -> probe -> ADC pipeline
     * bit-for-bit against DuckDB. */
   def e10IvfPq(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"e10:$dir") {
+    memo(spark, ("e10", dir)) {
       val v = ivfCorpus(spark, dir)
       Ann.knnIvfPq(v.where(col("id") < IvfNumQueries), v, ivfCentroids(spark, dir, v),
           IvfK, IvfNprobe, PqNumSub, PqSubDim, PqKsub)
@@ -1382,7 +1339,7 @@ object PipelineQueries {
     * the sampled-query brute-force pass, written once and read by every
     * index-quality report. */
   private def exactKnnFrame(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"e1exact:$dir") {
+    memo(spark, ("e1exact", dir)) {
       graft.Queries.e1KnnBruteForce(spark, dir)
         .select(col("query_id"), col("neighbor_id"))
     }
@@ -1413,7 +1370,7 @@ object PipelineQueries {
   private def e17AssertionAnchor(spark: SparkSession, dir: String): DataFrame =
     assertSampleN match {
       case Some(n) =>
-        memo(spark, s"e1exact:$dir:sample$n") {
+        memo(spark, ("e1exact", dir, "sample", n)) {
           graft.Queries.e1KnnBruteForce(spark, dir)
             .where(col("query_id") < n)
             .select(col("query_id"), col("neighbor_id"))
@@ -1478,7 +1435,7 @@ object PipelineQueries {
   }
 
   def e17IvfPqRerank(spark: SparkSession, dir: String): DataFrame = {
-    val out = memo(spark, s"e17:$dir")(e17IvfPqRerankRaw(spark, dir))
+    val out = memo(spark, ("e17", dir))(e17IvfPqRerankRaw(spark, dir))
       .orderBy(col("query_id"), col("rnk"))
     // Runtime assertion of the per-query dominance proof above, against
     // the exact oracle (e1) and e10's ADC-ranked output. The anchor is
@@ -1532,7 +1489,7 @@ object PipelineQueries {
     // per execution. Bit-identical sums (pos-ordered accumulation ==
     // vec_dot's left-to-right fold; array_sort pins the centroid order),
     // oracle-verified at sf0.001/0.01.
-    val centArr = memo(spark, s"e8cent:$dir") {
+    val centArr = memo(spark, ("e8cent", dir)) {
       vc.select(col("cl"), posexplode(col("v")))
         .groupBy(col("cl"), col("pos"))
         .agg((sum(col("col")) / count(lit(1))).as("c"))
@@ -1575,7 +1532,7 @@ object PipelineQueries {
     * ConnectedComponents.run is an eager driver loop, so without memoization
     * every caller pays the full MinHash+verify+propagation pipeline again. */
   private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"clusters:$dir") {
+    memo(spark, ("clusters", dir)) {
       val edges = t2MinhashLshPairs(spark, dir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val verts = docs(spark, dir).select(col("doc_id").as("id"))
@@ -1687,7 +1644,7 @@ object PipelineQueries {
     // fold; array_sort orders the collected (pos, c) structs by pos, so the
     // centroid array reproduces the old per-(cl,pos) join values in the
     // same order. Oracle-verified identical at sf0.001/0.01.
-    val centArr = memo(spark, s"e9cent:$dir") {
+    val centArr = memo(spark, ("e9cent", dir)) {
       vc.select(col("cl"), posexplode(col("v")))
         .groupBy(col("cl"), col("pos"))
         .agg((sum(col("col")) / count(lit(1))).as("c"))
@@ -1925,14 +1882,13 @@ object PipelineQueries {
 
   /** Train the d33 model: D33Iters rounds of full-batch GD over the
     * memoized feature frame, loss-descent and accuracy floors asserted.
-    * Weights are cached per dir — a trained model is a pure function of
-    * the corpus, reused by the batch gate (d33) and the streaming filter
-    * (s16), exactly like a production offline-train/online-score split. */
-  private val d33WeightCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Double]]()
+    * Weights are cached per dir in [[SessionCache]] — a trained model is a
+    * pure function of the corpus, reused by the batch gate (d33) and the
+    * streaming filter (s16), exactly like a production
+    * offline-train/online-score split. */
   private[graft] def d33TrainWeights(spark: SparkSession, dir: String): Array[Double] =
-    d33WeightCache.computeIfAbsent(dir, _ => {
-      val feats = memo(spark, s"d33feats:$dir")(d33Features(docs(spark, dir)))
+    SessionCache(spark, ("d33weights", dir)) {
+      val feats = memo(spark, ("d33feats", dir))(d33Features(docs(spark, dir)))
       val w = Array.fill(4)(0.0)
       def lossc(s: org.apache.spark.sql.Column) =
         avg(-(col("y") * log(s) + (lit(1.0) - col("y")) * log(lit(1.0) - s)))
@@ -1963,11 +1919,11 @@ object PipelineQueries {
       require(acc >= 0.85 && acc >= base + 0.25,
         f"d33: classifier failed to learn: acc=$acc%.3f base=$base%.3f")
       w
-    })
+    }
 
   def d33QualityClassifier(spark: SparkSession, dir: String): DataFrame = {
     val w = d33TrainWeights(spark, dir)
-    val feats = memo(spark, s"d33feats:$dir")(d33Features(docs(spark, dir)))
+    val feats = memo(spark, ("d33feats", dir))(d33Features(docs(spark, dir)))
     val q = round(d33SigmoidOf(w), 4)
     feats.select(col("doc_id"), q.as("quality"),
         (q >= 0.5).cast("int").as("keep"))
@@ -2243,7 +2199,7 @@ object PipelineQueries {
     * term is measured rather than pinned away (r9 verdict #1). */
   private[graft] def streamCurationFunnel(spark: SparkSession, dir: String,
       parts: Int): DataFrame =
-    memo(spark, s"s20:$dir:$parts") {
+    memo(spark, ("s20", dir, parts)) {
       val bc = contamBenchSet(spark, dir) // offline benchmark set (s18)
       val wts = d33TrainWeights(spark, dir) // offline-trained model (s16)
       val shares = udf((gs: Seq[String]) =>
@@ -2393,10 +2349,11 @@ object PipelineQueries {
     * per-batch store-consult AND store-append terms are measured rather
     * than pinned away (round-10 verdict #2). Returns (result, storeDir) so
     * the store-growth contract — store rows == distinct signatures SEEN,
-    * not arrivals — is assertable from outside (S21ParitySpec). */
-  private val s21StoreDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** `foldEvery` amortization (measured, 300x decade, 81 batches): each
+    * not arrivals — is assertable from outside (S21ParitySpec). The pair
+    * is ONE [[SessionCache]] value: the memoized result and the store it
+    * was built against live and die together.
+    *
+    * `foldEvery` amortization (measured, 300x decade, 81 batches): each
     * fold rewrites the whole committed prefix — O(|store|), ~6 s at the
     * 1.1M-row 300x store — so K=16 costs 5 rewrites (+31% cold) while
     * K=64 costs one (~6%); K=64 still bounds the consult's planned path
@@ -2405,16 +2362,14 @@ object PipelineQueries {
     * footer opens per consult; locally listing is nearly free and fold
     * is pure insurance). Results are fold-invariant (BatchStoreSpec). */
   private[graft] def streamAudioDedup(spark: SparkSession, dir: String,
-      parts: Int, foldEvery: Int = 64): (DataFrame, String) = {
-    val dirKey = s"${spark.sparkContext.applicationId}:s21:$dir:$parts:$foldEvery"
-    val out = memo(spark, s"s21:$dir:$parts:$foldEvery") {
+      parts: Int, foldEvery: Int = 64): (DataFrame, String) =
+    SessionCache(spark, ("s21", dir, parts, foldEvery)) {
       val raw = docs(spark, dir)
       val staging = graft.util.Staging.stageChunks(
         raw.select(col("doc_id")), "doc_id", parts, "s21", dropKey = false)
       val storeDir = graft.util.TempDirs.create("graft_s21_sig_")
       val outDir = graft.util.TempDirs.create("graft_s21_out_")
       val ckpt = graft.util.TempDirs.create("graft_s21_ckpt_")
-      s21StoreDirs.put(dirKey, storeDir)
       val sigSeed = spark.range(0)
         .select(lit(0L).as("asig_hi"), lit(0L).as("asig_lo"))
       graft.streaming.BatchStore.seed(sigSeed, storeDir)
@@ -2488,10 +2443,8 @@ object PipelineQueries {
         }
         .start()
       q.awaitTermination()
-      graft.streaming.BatchStore.readAll(spark, outDir)
+      (graft.streaming.BatchStore.readAll(spark, outDir).localCheckpoint(), storeDir)
     }
-    (out, s21StoreDirs.get(dirKey))
-  }
 
   /** s21 on the KEYED-STREAMING-STATE backend (s22): the same streaming
     * multimodal ingest dedup — real per-arrival WAV synthesize + decode,
@@ -2517,7 +2470,7 @@ object PipelineQueries {
     * versioned by the checkpoint, the engine's own contract). */
   private[graft] def streamAudioDedupKeyed(spark: SparkSession, dir: String,
       parts: Int, stateParts: Int = 0): DataFrame =
-    memo(spark, s"s22:$dir:$parts:$stateParts") {
+    memo(spark, ("s22", dir, parts, stateParts)) {
       // conf isolation (round-11 ADVICE): the RocksDB provider — and a
       // workload-sized state partition count — are set on a CHILD session
       // (same SparkContext, own SQLConf), so nothing leaks into or out of
@@ -2606,7 +2559,7 @@ object PipelineQueries {
     * O(batch) thereafter — the handoff a real deployment needs to adopt
     * the flat-cost backend mid-stream. */
   def s23StreamDedupMigrated(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"s23:$dir") {
+    memo(spark, ("s23", dir)) {
       // child session: RocksDB provider scoped to this stream only
       // (round-11 ADVICE — no conf leak into concurrent gates)
       val ss = spark.newSession()
@@ -2697,7 +2650,7 @@ object PipelineQueries {
     * are duplicates. Scale shape: tombstones are ordinary keyed rows —
     * O(batch) per batch, no rebuild, no full-state sweep. */
   def s24StreamDedupTakedown(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"s24:$dir") {
+    memo(spark, ("s24", dir)) {
       val ss = spark.newSession()
       ss.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.h3.expr.functions._
+import graft.util.SessionCache
 
 /**
  * The correctness-gate query suite: every entry is a Spark implementation
@@ -966,7 +967,7 @@ object Queries {
     * passes; see [[graft.text.Bpe]] for the training/application contract
     * and its oracle-parity bounds. */
   private def bpeDocCounts(spark: SparkSession, dir: String): DataFrame =
-    PipelineQueries.memo(spark, s"bpe:$dir") {
+    PipelineQueries.memo(spark, ("bpe", dir)) {
       graft.text.Bpe.docTokenCounts(spark, t(spark, dir, "documents"))
     }
 
@@ -974,7 +975,7 @@ object Queries {
     * and d14 (shard packing, round 10: the budget packs what a canonical
     * tokenizer actually consumes) share the R training rounds. */
   private def bpeIterDocCounts(spark: SparkSession, dir: String): DataFrame =
-    PipelineQueries.memo(spark, s"bpeIter:$dir") {
+    PipelineQueries.memo(spark, ("bpeIter", dir)) {
       graft.text.Bpe.docTokenCountsIterative(spark, t(spark, dir, "documents"))
     }
 
@@ -1111,7 +1112,7 @@ object Queries {
     * implementations; rounding the AVERAGE at 1e-4 is ~8 orders above that
     * noise. */
   def d15LmQuality(spark: SparkSession, dir: String): DataFrame = {
-    val bi = PipelineQueries.memo(spark, s"bigrams_lm:$dir") {
+    val bi = PipelineQueries.memo(spark, ("bigrams_lm", dir)) {
       graft.text.TextOps.wordGrams(t(spark, dir, "documents"), 2)
         .select(col("doc_id"), sha2(col("g"), 256).as("gh"),
           sha2(element_at(split(col("g"), " "), 1), 256).as("w1h"))
@@ -1191,24 +1192,22 @@ object Queries {
     * decade corpus sizes (q8's rule). Factored out so Q28SkewSpec can
     * execute it under test-scale thresholds and assert on the FINAL
     * adaptive plan. */
-  /** The q28 fact side, staged as a MULTI-FILE parquet once per dir: the
-    * synthetic corpus is a single parquet row group, so a direct scan
-    * yields ONE map task — and AQE's skew split is per MAP OUTPUT, so a
-    * one-map partition can never split, regardless of thresholds
-    * (measured: left max 20 KB vs median 2.7 KB and 0 partitions deemed
-    * skewed). Production fact tables have thousands of row groups; the
-    * 16-file staging restores that multi-map shuffle shape WITHOUT
-    * touching the measured plan (the gate query is a plain scan of the
-    * staged dir — no extra exchange inside the join). */
-  private val q28StageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The q28 fact side, staged as a MULTI-FILE parquet once per dir per
+    * SparkContext ([[SessionCache]]): the synthetic corpus is a single
+    * parquet row group, so a direct scan yields ONE map task — and AQE's
+    * skew split is per MAP OUTPUT, so a one-map partition can never split,
+    * regardless of thresholds (measured: left max 20 KB vs median 2.7 KB
+    * and 0 partitions deemed skewed). Production fact tables have thousands
+    * of row groups; the 16-file staging restores that multi-map shuffle
+    * shape WITHOUT touching the measured plan (the gate query is a plain
+    * scan of the staged dir — no extra exchange inside the join). */
   private def q28EventsPath(spark: SparkSession, dir: String): String =
-    q28StageCache.computeIfAbsent(dir, _ => {
+    SessionCache(spark, ("q28events", dir)) {
       val p = graft.util.TempDirs.create("graft_q28_ev_")
       events(spark, dir).select(col("user_id"), col("value"))
         .repartition(16).write.mode("overwrite").parquet(p)
       p
-    })
+    }
 
   /** On-disk bytes of an arbitrary parquet dir (tableBytes without the
     * `<table>.parquet` naming convention). */
@@ -1486,7 +1485,7 @@ object Queries {
     val u = (pmod(h, lit(P - 1)) + 1).cast("double") / lit(P.toDouble)
     // memoized: the bias asserts below run two aggregates over this frame
     // before the caller executes the returned top-k — one scan, not four
-    val keyed = PipelineQueries.memo(spark, s"d34keyed:$dir") {
+    val keyed = PipelineQueries.memo(spark, ("d34keyed", dir)) {
       t(spark, dir, "documents")
         .select(col("doc_id"), q.as("weight"), (log(u) / q).as("k"))
     }
@@ -1542,7 +1541,7 @@ object Queries {
   def d9DupNgramFrac(spark: SparkSession, dir: String): DataFrame = {
     // Shared shuffle-free gram formation (TextOps.wordGrams), hashed
     // before the shuffle.
-    val keyed = PipelineQueries.memo(spark, s"trigrams:$dir") {
+    val keyed = PipelineQueries.memo(spark, ("trigrams", dir)) {
       graft.text.TextOps.wordGrams(t(spark, dir, "documents"), 3)
         .select(col("doc_id"), sha2(col("g"), 256).as("h"))
     }
@@ -1580,15 +1579,15 @@ object Queries {
   /** One tokenization pass shared by d10 and d12 (memoized like the
     * signature frames — at corpus scale this is a written terms table). */
   private def termsFrame(spark: SparkSession, dir: String): DataFrame =
-    PipelineQueries.memo(spark, s"terms:$dir") {
+    PipelineQueries.memo(spark, ("terms", dir)) {
       t(spark, dir, "documents").select(col("doc_id"),
         explode(filter(split(col("text"), "\\s+"), x => x =!= "")).as("term"))
     }
 
   def d10TfidfTopk(spark: SparkSession, dir: String): DataFrame = {
     // N cached per (session, dir): a base table is session-immutable, so
-    // re-running the count JOB per execution bought nothing (cachedCount)
-    val n = PipelineQueries.cachedCount(spark, s"nDocs:$dir")(
+    // re-running the count JOB per execution bought nothing
+    val n = SessionCache(spark, ("count", "nDocs", dir))(
       t(spark, dir, "documents").count())
     val words = termsFrame(spark, dir)
     val tf = words.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
@@ -1638,18 +1637,18 @@ object Queries {
     // gate and e12's sparse-retriever side, which in production reads the
     // retriever's OUTPUT table. 20 rows; the per-row score arithmetic has
     // a fixed pivot order, so no accumulation depends on the plan.
-    PipelineQueries.memo(spark, s"d18topk:$dir") {
+    PipelineQueries.memo(spark, ("d18topk", dir)) {
       val words = termsFrame(spark, dir)
-      val nDocs = PipelineQueries.cachedCount(spark, s"nDocs:$dir")(
+      val nDocs = SessionCache(spark, ("count", "nDocs", dir))(
         t(spark, dir, "documents").count())
       // per-doc length frame memoized (termsFrame precedent): each d18
       // invocation consumes it TWICE (the sumDl scalar below and the perTerm
       // join) — uncached, the full terms pass ran twice per gate per bench
       // pass (guide §1.2); sumDl is a 1-row read off it, cached as a scalar
-      val dl = PipelineQueries.memo(spark, s"doclens:$dir") {
+      val dl = PipelineQueries.memo(spark, ("doclens", dir)) {
         words.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
       }
-      val sumDl = PipelineQueries.cachedCount(spark, s"sumDl:$dir")(
+      val sumDl = SessionCache(spark, ("count", "sumDl", dir))(
         dl.agg(sum(col("dl"))).first().getLong(0))
       val avgdl = sumDl.toDouble / nDocs.toDouble
       val tf = words.where(col("term").isin(Bm25Terms: _*))
@@ -1681,16 +1680,16 @@ object Queries {
     * term-bucket-partitioned posting lists once per corpus, answer d18's
     * exact query through [[graft.text.InvertedIndex.search]] — query terms
     * prune `tb=` partition directories at planning, and the ranking must
-    * stay bit-identical to the ad-hoc d18 path (same oracle). */
-  private val invIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * stay bit-identical to the ad-hoc d18 path (same oracle). The index
+    * dir is a [[SessionCache]] entry: built once per SparkContext, the
+    * documents table assumed immutable for its lifetime. */
   def d20InvertedIndex(spark: SparkSession, dir: String): DataFrame = {
-    val path = invIndexCache.computeIfAbsent(dir, _ => {
+    val path = SessionCache(spark, ("invIndex", "index", dir)) {
       val p = graft.util.TempDirs.create("graft_inv_index_")
       graft.text.InvertedIndex.build(spark,
         t(spark, dir, "documents").select(col("doc_id"), col("text")), p)
       p
-    })
+    }
     graft.text.InvertedIndex.search(spark, path, Bm25Terms, 20)
       .select(col("rnk"), col("doc_id"), round(col("score"), 4).as("bm25"))
       .orderBy(col("rnk"))
@@ -1758,7 +1757,7 @@ object Queries {
     * single-pass build (d18's oracle), because search derives df from the
     * postings at query time and the stats fold forward. */
   def d21IndexAppend(spark: SparkSession, dir: String): DataFrame = {
-    val path = invIndexCache.computeIfAbsent(s"append:$dir", _ => {
+    val path = SessionCache(spark, ("invIndex", "append", dir)) {
       val p = graft.util.TempDirs.create("graft_inv_append_")
       val d = t(spark, dir, "documents").select(col("doc_id"), col("text"))
       graft.text.InvertedIndex.build(spark,
@@ -1766,7 +1765,7 @@ object Queries {
       graft.text.InvertedIndex.append(spark,
         d.where(pmod(col("doc_id"), lit(2)) === 1), p)
       p
-    })
+    }
     graft.text.InvertedIndex.search(spark, path, Bm25Terms, 20)
       .select(col("rnk"), col("doc_id"), round(col("score"), 4).as("bm25"))
       .orderBy(col("rnk"))
@@ -1819,7 +1818,7 @@ object Queries {
     val k = D11SpanWords
     // memoized: the frame feeds the df-count agg, the cap join, and BOTH
     // sides of the pair self-join — uncached it would be recomputed 4x
-    val grams = PipelineQueries.memo(spark, s"d11grams:$dir") {
+    val grams = PipelineQueries.memo(spark, ("d11grams", dir)) {
       graft.text.TextOps.wordGrams(t(spark, dir, "documents"), k)
         .select(col("doc_id"), sha2(col("g"), 256).as("h"))
         .distinct()
@@ -1866,7 +1865,7 @@ object Queries {
 
   private def spanGramsFrame(spark: SparkSession, dir: String): DataFrame = {
     val k = D11SpanWords
-    PipelineQueries.memo(spark, s"posgrams:$dir") {
+    PipelineQueries.memo(spark, ("posgrams", dir)) {
       spanWordsFrame(spark, dir)
         .select(col("doc_id"), explode(
           when(size(col("ws")) >= k, sequence(lit(1), size(col("ws")) - (k - 1)))
@@ -1883,7 +1882,7 @@ object Queries {
     * survivor election — the same groupBy(h) over the same frame ran once
     * per gate per pass as two separate corpus-wide shuffles. */
   private def spanSurvFrame(spark: SparkSession, dir: String): DataFrame =
-    PipelineQueries.memo(spark, s"spansurv:$dir") {
+    PipelineQueries.memo(spark, ("spansurv", dir)) {
       spanGramsFrame(spark, dir).groupBy(col("h"))
         .agg(count(lit(1)).as("n"), min(struct(col("doc_id"), col("s"))).as("sv"))
         .where(col("n") >= 2)
@@ -2031,10 +2030,9 @@ object Queries {
   /** Scratch parquet for h4: (cell, qty) range-partitioned and sorted on the
     * raw cell — files and row groups carry disjoint h3index min/max stats,
     * the layout [[graft.store.CellStore]] produces at write. Built once per
-    * sf dir (files outlive sessions; keyed by dir only). */
-  private val h4CellsDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * sf dir per SparkContext ([[SessionCache]]). */
   private def h4CellsPath(spark: SparkSession, dir: String): String =
-    h4CellsDirs.computeIfAbsent(dir, _ => {
+    SessionCache(spark, ("h4cells", dir)) {
       val out = graft.util.TempDirs.create("graft_h4_cells_")
       t(spark, dir, "lineitem")
         .select(synthCell.as("cell"), col("l_quantity").as("qty"))
@@ -2042,7 +2040,7 @@ object Queries {
         .sortWithinPartitions("cell")
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
 
   /** h4 gate: the [[graft.plans.H3ParentPredicateRewrite]] optimizer rule
     * under the oracle. The filter is `h3_to_parent(cell, 5) IN (3 parents)`

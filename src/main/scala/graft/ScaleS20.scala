@@ -75,7 +75,7 @@ object ScaleS20 {
       val (st1, tt1) = cpuTicks
       val steal = if (tt1 > tt0) 100.0 * (st1 - st0) / (tt1 - tt0) else 0.0
       println(f"""${gate.toUpperCase} {"dir":"$dir","parts":$parts,"cold_sec":$t%.1f,"steal_pct":$steal%.2f}""")
-      PipelineQueries.evictMemos()
+      graft.util.SessionCache.clear()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       spark.catalog.clearCache()
       (gate, dir, parts, t)

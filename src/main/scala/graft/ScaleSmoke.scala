@@ -51,11 +51,12 @@ object ScaleSmoke {
       // the FOURTH decade (300x) the accumulated earlier-decade caches
       // OOMed an 80g heap mid-t2. Dropping them here keeps the one-JVM
       // protocol (same host window, warm JIT) while each decade is
-      // measured against its own working set only. The memo registry is
-      // evicted WITH the blocks: a cached frame whose checkpoint blocks
+      // measured against its own working set only. The session cache is
+      // cleared WITH the blocks: a cached frame whose checkpoint blocks
       // are gone is permanently broken, so a repeated dir (variance
-      // re-measures) must rebuild, not die on 'Checkpoint block not found'.
-      PipelineQueries.evictMemos()
+      // re-measures) must rebuild, not die on 'Checkpoint block not found'
+      // (its stores, indexes and staged copies rebuild too).
+      graft.util.SessionCache.clear()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       spark.catalog.clearCache()
       rows

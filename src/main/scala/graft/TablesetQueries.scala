@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.h3.expr.functions._
 import graft.schema.{AggregationMethod => Agg, GraftDataType => T, _}
 import graft.store.CellStore
+import graft.util.SessionCache
 
 /**
  * Correctness-gate queries that exercise the COMPACTED-TABLESET ENGINE end
@@ -29,15 +30,13 @@ import graft.store.CellStore
  */
 object TablesetQueries {
 
-  private val builtRoots = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def lineitem(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(graft.util.Restage.tablePath(spark, dir, "lineitem"))
 
-  /** Root dir holding the tablesets for one sfDir (created lazily, removed
-    * best-effort at JVM exit). */
-  private def rootFor(dir: String): String =
-    builtRoots.computeIfAbsent(dir, _ => graft.util.TempDirs.create("graft_ts_gate_"))
+  /** Root dir holding the tablesets for one sfDir: created lazily once per
+    * SparkContext ([[SessionCache]]), removed best-effort at JVM exit. */
+  private def rootFor(spark: SparkSession, dir: String): String =
+    SessionCache(spark, ("tsRoot", dir))(graft.util.TempDirs.create("graft_ts_gate_"))
 
   // ------------------------------------------------------------------- ts1
 
@@ -47,7 +46,7 @@ object TablesetQueries {
     .build()
 
   private def ts1Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_sum")) {
       val input = lineitem(spark, dir)
         .select(Queries.synthCell.as("h3index"), col("l_quantity").as("qty"))
@@ -85,7 +84,7 @@ object TablesetQueries {
   }
 
   private def ts2Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_compact")) {
       store.insert("gate_compact", ts2Input(spark, dir), createSchema = Some(ts2Schema))
     }
@@ -98,23 +97,10 @@ object TablesetQueries {
     * AND per gate per bench pass: ts2 consumes it up to three times inside
     * queryCells, ts16/ts18 collect driver-side subsets of it). */
   private def ts2Parents(spark: SparkSession, dir: String): DataFrame =
-    PipelineQueries.memo(spark, s"ts2parents:$dir") {
+    PipelineQueries.memo(spark, ("ts2parents", dir)) {
       ts2Input(spark, dir)
         .select(h3_to_parent(col("h3index"), lit(8)).as("p")).distinct()
     }
-
-  /** The DRIVER-side probe Seqs ts16/ts18 cut from [[ts2Parents]], cached
-    * per (session, dir) like the frame itself (round 13): each execution
-    * re-ran a collect() job over the memoized frame just to re-derive the
-    * identical Seq — a pure function of a session-immutable input. */
-  private val probeSeqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Long]]()
-  private def cachedProbes(spark: SparkSession, key: String)(
-      f: => Seq[Long]): Seq[Long] = {
-    val appId = spark.sparkContext.applicationId
-    probeSeqCache.keySet.removeIf(k => !k.startsWith(s"$appId:"))
-    graft.util.Memo.getOrBuild(probeSeqCache, s"$appId:$key")(f)
-  }
 
   /** Compaction round-trip through the full query path: res-8 parent probes,
     * uncompacted back to res 9 — must equal the distinct input rows. */
@@ -141,7 +127,7 @@ object TablesetQueries {
     .build()
 
   private def ts3Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_mixed")) {
       val input = lineitem(spark, dir).select(
         Queries.synthCell.as("h3index"),
@@ -176,7 +162,7 @@ object TablesetQueries {
     ts3Store(spark, dir) // ensure gate_mixed exists
     Graft.register(spark)
     spark.sql(
-      s"SELECT * FROM graft_stats('${rootFor(dir)}', 'gate_mixed') ORDER BY resolution")
+      s"SELECT * FROM graft_stats('${rootFor(spark, dir)}', 'gate_mixed') ORDER BY resolution")
   }
 
   // ------------------------------------------------------------------ ts24
@@ -196,7 +182,7 @@ object TablesetQueries {
     require(aoi.nonEmpty, "ts24 AOI subset is empty at this scale factor")
     spark.sql(
       s"""SELECT traversal_cell, h3index, round(qty, 2) AS qty
-         |FROM graft_traverse('${rootFor(dir)}', 'gate_sum', 9,
+         |FROM graft_traverse('${rootFor(spark, dir)}', 'gate_sum', 9,
          |  array(${aoi.mkString("L, ")}L), 2401)
          |ORDER BY h3index""".stripMargin)
   }
@@ -276,7 +262,7 @@ object TablesetQueries {
   def ts41SqlTraverseDf(spark: SparkSession, dir: String): DataFrame = {
     ts1Store(spark, dir) // ensure gate_sum exists
     Graft.register(spark)
-    val root = rootFor(dir)
+    val root = rootFor(spark, dir)
     spark.sql(
       s"""SELECT traversal_cell, h3index, round(qty, 2) AS qty
          |FROM graft_traverse_df('$root', 'gate_sum', 9,
@@ -302,7 +288,7 @@ object TablesetQueries {
     .build()
 
   private def ts6Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_optimize")) {
       def batch(mod: Int) = lineitem(spark, dir)
         .where(pmod(col("l_orderkey"), lit(mod)) === 0)
@@ -326,7 +312,7 @@ object TablesetQueries {
     * must be exactly what declaring res 5 up front would have produced, so
     * the gate shares ts1's first-principles oracle. */
   private def ts20Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_backfill")) {
       val input = lineitem(spark, dir)
         .select(Queries.synthCell.as("h3index"), col("l_quantity").as("qty"))
@@ -355,7 +341,7 @@ object TablesetQueries {
     * exists to avoid) — then read the res-5 rollup. Results must be
     * layout-invisible: ts1's first-principles oracle again. */
   private def ts23Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_repart")) {
       val input = lineitem(spark, dir)
         .select(Queries.synthCell.as("h3index"), col("l_quantity").as("qty"))
@@ -380,7 +366,7 @@ object TablesetQueries {
     * snapshot — the second insert's rows must be invisible. The oracle is
     * batch a alone (within-batch distinct), re-derived relationally. */
   private def ts21Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_travel")) {
       def batch(mod: Int) = lineitem(spark, dir)
         .where(pmod(col("l_orderkey"), lit(mod)) === 0)
@@ -414,7 +400,7 @@ object TablesetQueries {
     val first = store.snapshotIds("gate_travel").head
     spark.sql(
       s"""SELECT h3index, v
-         |FROM graft_asof('${rootFor(dir)}', 'gate_travel', 9, ${first}L)
+         |FROM graft_asof('${rootFor(spark, dir)}', 'gate_travel', 9, ${first}L)
          |ORDER BY h3index, v""".stripMargin)
   }
 
@@ -426,7 +412,7 @@ object TablesetQueries {
     * equal inserts 1+2 exactly — the state the cutoff represented BEFORE
     * the vacuum — proving retention rewrites history lists, not history. */
   private def ts36Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_vacuum")) {
       def batch(mod: Int) = lineitem(spark, dir)
         .where(pmod(col("l_orderkey"), lit(mod)) === 0)
@@ -465,7 +451,7 @@ object TablesetQueries {
     * Both phases must hash-match the same relational derivation — the
     * masked read and the rewrite are two implementations of one delete. */
   private def ts37Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_delete")) {
       def batch(mod: Int) = lineitem(spark, dir)
         .where(pmod(col("l_orderkey"), lit(mod)) === 0)
@@ -502,7 +488,7 @@ object TablesetQueries {
     * (the op that must NOT dedup, where ts6 gates the op that must). The
     * oracle is each batch's within-batch-distinct rows, UNION ALL. */
   private def ts19Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_filecompact")) {
       def batch(mod: Int) = lineitem(spark, dir)
         .where(pmod(col("l_orderkey"), lit(mod)) === 0)
@@ -534,7 +520,7 @@ object TablesetQueries {
     * machinery must be result-invisible (ZorderSpec pins that the pruning
     * actually pruned). */
   private def ts33Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_zorder")) {
       val input = lineitem(spark, dir)
         .select(Queries.synthCell.as("h3index"),
@@ -565,7 +551,7 @@ object TablesetQueries {
     Graft.register(spark)
     spark.sql(
       s"""SELECT h3index, v
-         |FROM graft_range('${rootFor(dir)}', 'gate_zorder', 9, 100L, 199L)
+         |FROM graft_range('${rootFor(spark, dir)}', 'gate_zorder', 9, 100L, 199L)
          |ORDER BY h3index, v""".stripMargin)
   }
 
@@ -629,7 +615,7 @@ object TablesetQueries {
     .build()
 
   private def ts38Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_retention")) {
       val input = spark.read.parquet(graft.util.Restage.tablePath(spark, dir, "orders")).select(
         synthOrderCell.as("h3index"),
@@ -652,7 +638,7 @@ object TablesetQueries {
   }
 
   private def ts8Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_temporal")) {
       val input = spark.read.parquet(graft.util.Restage.tablePath(spark, dir, "orders")).select(
         synthOrderCell.as("h3index"),
@@ -691,13 +677,13 @@ object TablesetQueries {
     * gate proves is that a tableset stays discoverable and queryable from
     * its data layout alone (lost sidecar / foreign writer). */
   private def ts9Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_recover")) {
       // failure-idempotent build: insert appends, so a retry after a crash
       // between the sidecar delete and the recovery write must NOT re-run
       // it — gate the insert on the data directory, not the sidecar
       val dataDir = new org.apache.hadoop.fs.Path(
-        s"${rootFor(dir)}/gate_recover/data")
+        s"${rootFor(spark, dir)}/gate_recover/data")
       val fs = dataDir.getFileSystem(spark.sessionState.newHadoopConf())
       if (!fs.exists(dataDir)) {
         val input = lineitem(spark, dir)
@@ -709,7 +695,7 @@ object TablesetQueries {
             .build()))
       }
       val sidecar = new org.apache.hadoop.fs.Path(
-        s"${rootFor(dir)}/gate_recover/schema.json")
+        s"${rootFor(spark, dir)}/gate_recover/schema.json")
       if (fs.exists(sidecar)) fs.delete(sidecar, false)
       store.recoverTableset("gate_recover")
     }
@@ -755,7 +741,7 @@ object TablesetQueries {
 
   private def versionedStore(spark: SparkSession, dir: String, name: String,
       optimize: Boolean): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains(name)) {
       val (a, b) = versionedBatches(spark, dir)
       store.insert(name, a, createSchema = Some(replaceSchema(name)))
@@ -787,7 +773,7 @@ object TablesetQueries {
     Graft.register(spark)
     spark.sql(
       s"""SELECT h3index, version, val
-         |FROM graft_final('${rootFor(dir)}', 'gate_final', 9)
+         |FROM graft_final('${rootFor(spark, dir)}', 'gate_final', 9)
          |ORDER BY h3index""".stripMargin)
   }
 
@@ -810,7 +796,7 @@ object TablesetQueries {
 
   private def summingStore(spark: SparkSession, dir: String, name: String,
       optimize: Boolean): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains(name)) {
       val li = lineitem(spark, dir)
       val a = li.where(pmod(col("l_orderkey"), lit(2)) === 0)
@@ -849,7 +835,7 @@ object TablesetQueries {
     val store = ts1Store(spark, dir)
     Seq((store.databaseExists,
       store.listTablesets().contains("gate_sum"),
-      CellStore(spark, rootFor(dir) + "_absent").databaseExists,
+      CellStore(spark, rootFor(spark, dir) + "_absent").databaseExists,
       store.listTablesets().contains("gate_absent")))
       .toDF("db_exists", "ts_exists", "missing_db_exists", "missing_ts_exists")
   }
@@ -873,7 +859,7 @@ object TablesetQueries {
     .build()
 
   private def aggingStore(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_agging")) {
       def batch(m: Int) = lineitem(spark, dir)
         .where(pmod(col("l_orderkey"), lit(m)) === 0)
@@ -902,7 +888,7 @@ object TablesetQueries {
     * raw scan stay oracle-derivable. */
   private val randStoreName = "gate_rand"
   private def randStore(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains(randStoreName)) {
       store.insert(randStoreName, lineitem(spark, dir)
         .select(Queries.synthCell.as("h3index"),
@@ -963,23 +949,22 @@ object TablesetQueries {
     * ts12 rollups once, then run ts12's cross-tableset join from PURE SQL —
     * `graft_scan` serves the bucketed relations while they are fresh, so
     * the join plans with zero Exchange (plan pinned in MirrorTvfSpec); the
-    * mirror layer must be result-invisible, hence ts12's oracle. */
-  private val ts30Mirrors = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
+    * mirror layer must be result-invisible, hence ts12's oracle. The
+    * mirrors build once per root ([[SessionCache]]): they write fixed
+    * paths under it, so two concurrent builds must not both run. */
   def ts30SqlMirrorJoin(spark: SparkSession, dir: String): DataFrame = {
     val store = ts1Store(spark, dir)
     ts3Store(spark, dir)
     Graft.register(spark)
-    ts30Mirrors.computeIfAbsent(dir, { _ =>
+    SessionCache(spark, ("ts30mirrors", dir)) {
       store.buildMirror("gate_sum", 5, numBuckets = 8)
       store.buildMirror("gate_mixed", 5, numBuckets = 8)
-      java.lang.Boolean.TRUE
-    })
+    }
     spark.sql(
       s"""SELECT a.h3index AS parent5, round(a.qty, 2) AS sum_qty,
          |  round(b.q_avg, 4) AS avg_qty, b.cat
-         |FROM graft_scan('${rootFor(dir)}', 'gate_sum', 5) a
-         |JOIN graft_scan('${rootFor(dir)}', 'gate_mixed', 5) b
+         |FROM graft_scan('${rootFor(spark, dir)}', 'gate_sum', 5) a
+         |JOIN graft_scan('${rootFor(spark, dir)}', 'gate_mixed', 5) b
          |  ON a.h3index = b.h3index
          |ORDER BY parent5""".stripMargin)
   }
@@ -1411,7 +1396,7 @@ object TablesetQueries {
     * first-principles oracle as the batch ts1 path: streaming ingest and
     * batch ingest are required to be indistinguishable to a reader. */
   private def s5Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_stream")) {
       val raw = lineitem(spark, dir)
       val src = spark.readStream.schema(raw.schema).parquet(s"$dir/lineitem.*")
@@ -1472,7 +1457,7 @@ object TablesetQueries {
     * Oracle: per-chunk within-batch-distinct rows; chunk 0 loses
     * `v%11=3` and `v%7=0`, chunks 1/2 lose `v%7=0` only. */
   private def s15Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_stream_del")) {
       // Staging.stageChunks pins strictly increasing mtimes so batch i ==
       // chunk i (FileStreamSource schedules oldest-modification-first)
@@ -1553,7 +1538,7 @@ object TablesetQueries {
     * all-pairs. At 100 TB the store is partitioned by the synthetic cell's
     * base cell like any tableset, so bucket probes partition-prune. */
   private def s17Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_sig")) {
       val staging = graft.util.Staging.stageChunks(
         spark.read.parquet(s"$dir/documents.parquet")
@@ -1650,7 +1635,7 @@ object TablesetQueries {
     * re-derives both batches relationally with an explicit NULL column for
     * the pre-evolution rows. */
   private def ts13Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_evolve")) {
       val li = lineitem(spark, dir)
       store.insert("gate_evolve",
@@ -1686,7 +1671,7 @@ object TablesetQueries {
     * (including those physically carrying it), and the rename must lose
     * nothing. The oracle re-derives the surviving projection relationally. */
   private def ts14Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_renamed")) {
       // the build guard checks the POST-rename name but inserts under the
       // pre-rename one — drop any half-built leftover first so a failed
@@ -1729,7 +1714,7 @@ object TablesetQueries {
     spark.sql(
       s"""SELECT h3_to_parent(h3index, 5) AS parent5,
          |  round(sum(qty), 2) AS sum_qty
-         |FROM graft_scan('${rootFor(dir)}', 'gate_sum', 9)
+         |FROM graft_scan('${rootFor(spark, dir)}', 'gate_sum', 9)
          |GROUP BY 1 ORDER BY parent5""".stripMargin)
   }
 
@@ -1744,7 +1729,9 @@ object TablesetQueries {
   def ts16SqlCells(spark: SparkSession, dir: String): DataFrame = {
     ts2Store(spark, dir) // ensure gate_compact exists
     Graft.register(spark)
-    val probes = cachedProbes(spark, s"ts16:$dir") {
+    // the driver-side probe Seq is cached per (session, dir) like the frame
+    // itself: re-collecting it per execution re-derived an identical Seq
+    val probes = SessionCache(spark, ("probes", "ts16", dir)) {
       ts2Parents(spark, dir)
         .where(pmod(col("p"), lit(97)) === 0)
         .orderBy(col("p")).collect().map(_.getLong(0)).toSeq
@@ -1752,7 +1739,7 @@ object TablesetQueries {
     require(probes.nonEmpty, "ts16 probe subset is empty at this scale factor")
     spark.sql(
       s"""SELECT h3index, v
-         |FROM graft_cells('${rootFor(dir)}', 'gate_compact', 9,
+         |FROM graft_cells('${rootFor(spark, dir)}', 'gate_compact', 9,
          |  array(${probes.mkString("L, ")}L))
          |ORDER BY h3index""".stripMargin)
   }
@@ -1767,7 +1754,7 @@ object TablesetQueries {
   def ts18ManifestQuery(spark: SparkSession, dir: String): DataFrame = {
     val store = ts2Store(spark, dir)
     if (!store.hasManifest("gate_compact")) store.buildManifest("gate_compact")
-    val probes = cachedProbes(spark, s"ts18:$dir") {
+    val probes = SessionCache(spark, ("probes", "ts18", dir)) {
       ts2Parents(spark, dir).collect().map(_.getLong(0)).toSeq
     }
     store.queryCells("gate_compact", probes, 9, doUncompact = true, template = None)
@@ -1784,24 +1771,24 @@ object TablesetQueries {
     * cell-keyed table is joined repeatedly. Same oracle as ts12: the mirror
     * layer must be result-indistinguishable from the direct join (the
     * no-Exchange/no-Sort plan shape itself is pinned by BucketingSpec). */
-  private val mirrorsBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val mirrorTags = new java.util.concurrent.atomic.AtomicLong()
 
   def ts17BucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    // catalog table names are session-global — suffix per sfDir so gates at
-    // different scale factors in one JVM cannot read each other's mirrors
-    val tag = mirrorsBuilt.computeIfAbsent(dir, { d =>
-      val t = java.lang.Integer.toHexString(d.hashCode)
-      val sums = ts1Store(spark, d).scanForResolution("gate_sum", 5)
+    // catalog table names are session-global — each build takes a fresh
+    // tag, so mirrors of different sfDirs can never share a table name
+    val tag = SessionCache(spark, ("ts17mirrors", dir)) {
+      val t = mirrorTags.incrementAndGet()
+      val sums = ts1Store(spark, dir).scanForResolution("gate_sum", 5)
         .select(col("h3index"), col("qty"))
-      val mixed = ts3Store(spark, d).scanForResolution("gate_mixed", 5)
+      val mixed = ts3Store(spark, dir).scanForResolution("gate_mixed", 5)
         .select(col("h3index"), col("q_avg"), col("cat"))
-      val root = rootFor(d)
+      val root = rootFor(spark, dir)
       graft.store.Bucketing.writeMirror(spark, sums,
         s"gate_mirror_sums_$t", s"$root/mirror_sums", numBuckets = 8)
       graft.store.Bucketing.writeMirror(spark, mixed,
         s"gate_mirror_mixed_$t", s"$root/mirror_mixed", numBuckets = 8)
       t
-    })
+    }
     graft.store.Bucketing.colocatedJoin(spark,
         s"gate_mirror_sums_$tag", s"gate_mirror_mixed_$tag")
       .select(col("h3index").as("parent5"),
@@ -1820,7 +1807,7 @@ object TablesetQueries {
     * reinsert them. The final read must equal the all-valid derivation:
     * the quarantine loop loses nothing and invents nothing. */
   private def ts29Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_quarantine")) {
       val li = lineitem(spark, dir)
       val base = li.select(
@@ -1894,7 +1881,7 @@ object TablesetQueries {
     * read must equal the batch replace oracle: the whole
     * stream-upsert-read pipeline is under one relational derivation. */
   private def s6Store(spark: SparkSession, dir: String): CellStore = {
-    val store = CellStore(spark, rootFor(dir))
+    val store = CellStore(spark, rootFor(spark, dir))
     if (!store.listTablesets().contains("gate_vstream")) {
       val raw = lineitem(spark, dir)
       val versioned = spark.readStream.schema(raw.schema).parquet(s"$dir/lineitem.*")

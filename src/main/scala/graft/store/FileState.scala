@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
 import graft.store.CellStore.{DeleteMutation, ManifestSelection}
+import graft.util.Memo
 
 /** Everything the store caches about one tableset's files, as one value per
   * (root, tableset), built in one pass by [[CellStore]]:
@@ -36,9 +37,9 @@ private[store] final class FileState(
   val dataPaths: Seq[String] = dataFiles.map(_.getPath.toString)
   lazy val byPath: Map[String, FileStatus] = dataPaths.zip(dataFiles).toMap
 
-  private val memo = new ConcurrentHashMap[Any, AnyRef]()
-  private def memoized[T <: AnyRef](key: Any)(build: => T): T =
-    graft.util.Memo.getOrBuild(memo, key)(build).asInstanceOf[T]
+  private val memo = new ConcurrentHashMap[Any, Memo.Cell[Any]]()
+  private def memoized[T](key: Any)(build: => T): T =
+    Memo.getOrBuild(memo, key)(build).asInstanceOf[T]
 
   /** (manifest entry count, relative paths of live files it does not cover). */
   def coverage(build: => (Long, Seq[String])): (Long, Seq[String]) =

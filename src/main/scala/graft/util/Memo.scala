@@ -2,20 +2,28 @@ package graft.util
 
 import java.util.concurrent.ConcurrentHashMap
 
-/** The get / build / putIfAbsent memo shape, for builds that run Spark jobs
-  * or nest. `computeIfAbsent` runs the build while it holds the map's bin
-  * lock: a nested build on the same map throws IllegalStateException
-  * ("Recursive update"), and a slow build blocks every key of its bin. Here
-  * a rare concurrent double build is harmless: both values are valid and
-  * one wins the publish. */
+/** The memo shape every cache shares: the map holds one [[Memo.Cell]] per
+  * key, published with `putIfAbsent`, and the cell's lazy val runs the
+  * build.
+  *  - A key builds at most once, even with concurrent callers: a caller
+  *    that loses the publish waits on the winner's cell.
+  *  - No map lock is held while a build runs (building inside the map's
+  *    compute methods holds a bin lock: a nested build on the same map
+  *    throws "Recursive update" and a slow build blocks its whole bin). A
+  *    build may read other keys of the same map; it blocks only callers of
+  *    its own key.
+  *  - A build that throws is not cached: its cell leaves the map and the
+  *    next call builds again. */
 object Memo {
-  def getOrBuild[K, V <: AnyRef](cache: ConcurrentHashMap[K, V], key: K)(build: => V): V = {
-    val hit = cache.get(key)
-    if (hit != null) hit
-    else {
-      val built = build
-      val prev = cache.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
+  final class Cell[V](build: => V) {
+    lazy val value: V = build
+  }
+
+  def getOrBuild[K, V](cache: ConcurrentHashMap[K, Cell[V]], key: K)(build: => V): V = {
+    val fresh = new Cell(build)
+    val prev = cache.putIfAbsent(key, fresh)
+    val cell = if (prev == null) fresh else prev
+    try cell.value
+    catch { case t: Throwable => cache.remove(key, cell); throw t }
   }
 }

@@ -15,14 +15,14 @@ import org.apache.spark.sql.SparkSession
   * faithful to — q28 already stages its fact side multi-file for exactly
   * this reason ("restores production's multi-map shuffle shape").
   *
-  * This generalizes that device: the first batch read of a qualifying table
-  * per JVM rewrites it once into an N-file copy under a temp dir (N sized
-  * by bytes / 64 KB, capped at the session's core count), and every later
-  * read scans the copy — a plain multi-file directory scan, NO added
-  * exchange in any measured plan. Qualifying = a single FILE of >= 256 KB:
-  * directory-shaped tables (the decade Inflate outputs, engine-written
-  * stores) and tiny dimensions pass through untouched, so at scale this is
-  * a no-op and nothing is ever staged twice.
+  * This generalizes that device: the first batch read of a qualifying
+  * table per SparkContext rewrites it once into an N-file copy under a temp
+  * dir (N sized by bytes / 64 KB, capped at the session's core count), and
+  * every later read scans the copy — a plain multi-file directory scan, NO
+  * added exchange in any measured plan. Qualifying = a single FILE of >=
+  * 256 KB: directory-shaped tables (the decade Inflate outputs,
+  * engine-written stores) and tiny dimensions pass through untouched, so at
+  * scale this is a no-op and nothing is ever staged twice.
   *
   * Results are unaffected: the copy holds exactly the same rows (one
   * round-robin repartition of the source), and every gate is already
@@ -31,8 +31,6 @@ import org.apache.spark.sql.SparkSession
   * decimal accumulation or explicit total orders — see the q8 rule).
   */
 object Restage {
-  private val staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Tables below this size stay on their original single file: the scan is
     * trivially cheap and the dimensions are broadcast anyway. */
   private val MinBytes = 256L * 1024
@@ -73,10 +71,11 @@ object Restage {
 
   /** The path batch readers should scan for `$dir/$table.parquet`:
     * the original path, or the staged multi-file copy for single-file
-    * tables large enough to matter. Staged once per JVM per table. */
+    * tables large enough to matter. Staged once per table per
+    * [[SessionCache]] scope. */
   def tablePath(spark: SparkSession, dir: String, table: String): String = {
     val src = s"$dir/$table.parquet"
-    staged.computeIfAbsent(src, _ => stageIfNeeded(spark, src,
+    SessionCache(spark, ("restage", src))(stageIfNeeded(spark, src,
       if (HeavyPerByte(table)) HeavySplit else ColumnarSplit))
   }
 
@@ -90,18 +89,15 @@ object Restage {
     val n = math.min(spark.sparkContext.defaultParallelism.toLong,
       math.max(2L, st.getLen / targetSplit)).toInt
     val out = TempDirs.create("graft_stage_")
-    // scoped nanosAsLong: one fixture SF stores event timestamps as
-    // TIMESTAMP(NANOS), which Spark 4 refuses to read without the legacy
-    // conf; the staged copy then carries the same long column the normal
-    // readers see (convertEventTs dispatches on the read type either way)
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try spark.read.parquet(src).repartition(n).write.mode("overwrite").parquet(out)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+    // nanosAsLong on a CLONED session (isolated SQLConf, shared context):
+    // one fixture SF stores event timestamps as TIMESTAMP(NANOS), which
+    // Spark 4 refuses to read without the legacy conf; the staged copy then
+    // carries the same long column the normal readers see (convertEventTs
+    // dispatches on the read type either way). The caller's conf is never
+    // touched, so concurrent readers cannot observe the flag.
+    val staging = spark.newSession()
+    staging.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    staging.read.parquet(src).repartition(n).write.mode("overwrite").parquet(out)
     out
   }
 }

@@ -45,6 +45,38 @@ class RestageSpec extends AnyFunSuite with graft.SparkTestSession {
     assert(Restage.tablePath(spark, dir, "t") == staged)
   }
 
+  test("staging never sets nanosAsLong on the caller's session conf") {
+    val dir = writeOneFile(6000)
+    assume(new java.io.File(dir, "t.parquet").length() >= 256L * 1024)
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    // event readers set the flag on the shared session: watch from unset
+    val before = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    val start = spark.conf.getOption(key) // the default, "false"
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val sawTrue = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val polls = new java.util.concurrent.atomic.AtomicLong()
+    val poller = new Thread(() => {
+      while (!done.get) {
+        if (spark.conf.getOption(key).contains("true")) sawTrue.set(true)
+        polls.incrementAndGet()
+      }
+    })
+    poller.start()
+    var after: Option[String] = None
+    val staged = try Restage.tablePath(spark, dir, "t")
+    finally {
+      done.set(true)
+      poller.join()
+      after = spark.conf.getOption(key)
+      before.foreach(spark.conf.set(key, _))
+    }
+    assert(staged != s"$dir/t.parquet", "the fixture must actually stage")
+    assert(polls.get > 0)
+    assert(!sawTrue.get, s"a concurrent reader saw $key=true on the caller's session")
+    assert(after == start)
+  }
+
   test("small single-file tables and directory tables pass through") {
     val small = writeOneFile(10)
     assert(Restage.tablePath(spark, small, "t") == s"$small/t.parquet")
