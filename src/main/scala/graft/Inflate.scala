@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale inflation for the 10x scale-smoke (round-3 verdict
@@ -20,57 +20,51 @@ object Inflate {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorS) = args
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val Off = 1000000000L
+    GateRunner.run { runner =>
+      val spark = runner.spark
+      val Off = 1000000000L
 
-    def copies(table: String)(remap: (org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.DataFrame): Unit = {
-      val src = spark.read.parquet(s"$srcDir/$table.parquet")
-      (1 until factor).foldLeft(src)((acc, i) => acc.unionByName(remap(src, i)))
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/$table.parquet")
-      ()
-    }
+      def copies(table: String)(remap: (org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.DataFrame): Unit = {
+        val src = spark.read.parquet(s"$srcDir/$table.parquet")
+        (1 until factor).foldLeft(src)((acc, i) => acc.unionByName(remap(src, i)))
+          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/$table.parquet")
+        ()
+      }
 
-    copies("lineitem")((df, i) =>
-      df.withColumn("l_orderkey", col("l_orderkey") + lit(i * Off)))
-    // orders remap BOTH keys: o_custkey follows customer's inflated copies
-    // (below) so orders->customer stays a real FK at Nx instead of piling
-    // every copy onto the original customers
-    copies("orders")((df, i) =>
-      df.withColumn("o_orderkey", col("o_orderkey") + lit(i * Off))
-        .withColumn("o_custkey", col("o_custkey") + lit(i * Off)))
-    // customer inflates WITH key offsets (not a pass-through dimension):
-    // events.user_id and orders.o_custkey reference c_custkey, so a
-    // same-offset copy keeps the FK valid for every inflated copy — the
-    // round-4 scheme copied customer unchanged, which silently shrank
-    // s7's stream-static join to copy-0 events (both engines agreed, so
-    // the gate stayed green while exercising 1/N of the data)
-    copies("customer")((df, i) =>
-      df.withColumn("c_custkey", col("c_custkey") + lit(i * Off)))
-    copies("documents")((df, i) =>
-      df.withColumn("doc_id", col("doc_id") + lit(i * Off))
-        .withColumn("text", concat(col("text"), lit(s" c$i")))
-        .withColumn("n_chars", col("n_chars") + lit(3L)))
-    copies("embeddings")((df, i) =>
-      df.withColumn("vec_id", col("vec_id") + lit(i * Off)))
-    // remap event AND user keys: a plain volume copy would multiply every
-    // user's activity density 10x, quadratically inflating per-user joins
-    // (s10 attribution) by data construction rather than plan behavior —
-    // remapping keeps per-user structure identical to the source
-    copies("events")((df, i) =>
-      df.withColumn("event_id", col("event_id") + lit(i * Off))
-        .withColumn("user_id", col("user_id") + lit(i * Off)))
-    Seq("region", "nation", "supplier", "part").foreach { t =>
-      spark.read.parquet(s"$srcDir/$t.parquet")
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/$t.parquet")
+      copies("lineitem")((df, i) =>
+        df.withColumn("l_orderkey", col("l_orderkey") + lit(i * Off)))
+      // orders remap BOTH keys: o_custkey follows customer's inflated copies
+      // (below) so orders->customer stays a real FK at Nx instead of piling
+      // every copy onto the original customers
+      copies("orders")((df, i) =>
+        df.withColumn("o_orderkey", col("o_orderkey") + lit(i * Off))
+          .withColumn("o_custkey", col("o_custkey") + lit(i * Off)))
+      // customer inflates WITH key offsets (not a pass-through dimension):
+      // events.user_id and orders.o_custkey reference c_custkey, so a
+      // same-offset copy keeps the FK valid for every inflated copy — the
+      // round-4 scheme copied customer unchanged, which silently shrank
+      // s7's stream-static join to copy-0 events (both engines agreed, so
+      // the gate stayed green while exercising 1/N of the data)
+      copies("customer")((df, i) =>
+        df.withColumn("c_custkey", col("c_custkey") + lit(i * Off)))
+      copies("documents")((df, i) =>
+        df.withColumn("doc_id", col("doc_id") + lit(i * Off))
+          .withColumn("text", concat(col("text"), lit(s" c$i")))
+          .withColumn("n_chars", col("n_chars") + lit(3L)))
+      copies("embeddings")((df, i) =>
+        df.withColumn("vec_id", col("vec_id") + lit(i * Off)))
+      // remap event AND user keys: a plain volume copy would multiply every
+      // user's activity density 10x, quadratically inflating per-user joins
+      // (s10 attribution) by data construction rather than plan behavior —
+      // remapping keeps per-user structure identical to the source
+      copies("events")((df, i) =>
+        df.withColumn("event_id", col("event_id") + lit(i * Off))
+          .withColumn("user_id", col("user_id") + lit(i * Off)))
+      Seq("region", "nation", "supplier", "part").foreach { t =>
+        spark.read.parquet(s"$srcDir/$t.parquet")
+          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/$t.parquet")
+      }
+      println(s"inflated $srcDir -> $outDir x$factor")
     }
-    println(s"inflated $srcDir -> $outDir x$factor")
-    spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Measurement tool (optimization guide §1): dump `.explain("formatted")`
@@ -18,35 +17,21 @@ import org.apache.spark.sql.execution.ExplainMode
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <queriesCsv|ALL> [sfDir]")
-    val outDir = args(0)
-    val suffix = args(1)
-    val names =
-      if (args(2) == "ALL") SparkEntry.queries.keys.toSeq.sorted
-      else args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val Array(outDir, suffix, spec) = args.take(3)
+    val names = GateRunner.gates(spec)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    names.foreach { name =>
-      try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
-          plan.getBytes("UTF-8"))
-        println(s"[plandump] $name -> $outDir/${name}_$suffix.txt")
-      } catch { case e: Throwable =>
-        System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
+    GateRunner.run { runner =>
+      new java.io.File(outDir).mkdirs()
+      names.foreach { name =>
+        runner.attempt(name) {
+          val plan = SparkEntry.queries(name)(runner.spark, sfDir)
+            .queryExecution.explainString(ExplainMode.fromString("formatted"))
+          java.nio.file.Files.write(
+            java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
+            plan.getBytes("UTF-8"))
+          println(s"[plandump] $name -> $outDir/${name}_$suffix.txt")
+        }
       }
     }
-    spark.stop()
   }
 }

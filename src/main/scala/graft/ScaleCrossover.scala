@@ -203,47 +203,39 @@ object ScaleCrossover {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
       "usage: ScaleCrossover s21:<N>:<B>:<K> s22:<N>:<B>:<K>:<P> ...")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val stagings = scala.collection.mutable.Map.empty[(Long, Long, Int), String]
-    args.foreach { a =>
-      // s22cl = keyed with changelog checkpointing (state DELTA per
-      // commit); s22 = keyed with Spark's default full-snapshot commits
-      val (backend, n, b, k, p) = a.split(":") match {
-        case Array("s21", n, b, k)      => ("s21", n.toLong, b.toLong, k.toInt, 0)
-        case Array("s21", n, b, k, p)   => ("s21", n.toLong, b.toLong, k.toInt, p.toInt)
-        case Array("s22", n, b, k, p)   => ("s22", n.toLong, b.toLong, k.toInt, p.toInt)
-        case Array("s22cl", n, b, k, p) => ("s22cl", n.toLong, b.toLong, k.toInt, p.toInt)
-        case _ => sys.error(s"bad arg '$a'")
+    GateRunner.run { runner =>
+      val spark = runner.spark
+      val stagings = scala.collection.mutable.Map.empty[(Long, Long, Int), String]
+      args.foreach { a =>
+        // s22cl = keyed with changelog checkpointing (state DELTA per
+        // commit); s22 = keyed with Spark's default full-snapshot commits
+        val (backend, n, b, k, p) = a.split(":") match {
+          case Array("s21", n, b, k)      => ("s21", n.toLong, b.toLong, k.toInt, 0)
+          case Array("s21", n, b, k, p)   => ("s21", n.toLong, b.toLong, k.toInt, p.toInt)
+          case Array("s22", n, b, k, p)   => ("s22", n.toLong, b.toLong, k.toInt, p.toInt)
+          case Array("s22cl", n, b, k, p) => ("s22cl", n.toLong, b.toLong, k.toInt, p.toInt)
+          case _ => sys.error(s"bad arg '$a'")
+        }
+        val staging = stagings.getOrElseUpdate((n, b, k),
+          stageArrivals(spark, n, b, k))
+        val store = storeFrame(spark, n)
+        val t0 = System.nanoTime()
+        val secs = backend match {
+          case "s21"   => runParquet(spark, staging, store, foldEvery = 16, p)
+          case "s22"   => runKeyed(spark, staging, store, p, changelog = false)
+          case "s22cl" => runKeyed(spark, staging, store, p, changelog = true)
+        }
+        val total = (System.nanoTime() - t0) / 1e9
+        val steady = secs.drop(1)
+        val json = f"""CROSSOVER {"backend":"$backend","store":$n,"batch":$b,""" +
+          f""""batches":$k,"state_parts":$p,"first_batch_sec":${secs.head}%.2f,""" +
+          f""""steady_median_sec":${percentile(steady, 0.5)}%.3f,""" +
+          f""""steady_p90_sec":${percentile(steady, 0.9)}%.3f,""" +
+          s""""per_batch_sec":[${secs.map(s => f"$s%.3f").mkString(",")}],""" +
+          f""""total_sec":$total%.1f}"""
+        println(json)
+        runner.release()
       }
-      val staging = stagings.getOrElseUpdate((n, b, k),
-        stageArrivals(spark, n, b, k))
-      val store = storeFrame(spark, n)
-      val t0 = System.nanoTime()
-      val secs = backend match {
-        case "s21"   => runParquet(spark, staging, store, foldEvery = 16, p)
-        case "s22"   => runKeyed(spark, staging, store, p, changelog = false)
-        case "s22cl" => runKeyed(spark, staging, store, p, changelog = true)
-      }
-      val total = (System.nanoTime() - t0) / 1e9
-      val steady = secs.drop(1)
-      val json = f"""CROSSOVER {"backend":"$backend","store":$n,"batch":$b,""" +
-        f""""batches":$k,"state_parts":$p,"first_batch_sec":${secs.head}%.2f,""" +
-        f""""steady_median_sec":${percentile(steady, 0.5)}%.3f,""" +
-        f""""steady_p90_sec":${percentile(steady, 0.9)}%.3f,""" +
-        s""""per_batch_sec":[${secs.map(s => f"$s%.3f").mkString(",")}],""" +
-        f""""total_sec":$total%.1f}"""
-      println(json)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
     }
-    spark.stop()
   }
 }

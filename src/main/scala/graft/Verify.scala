@@ -1,11 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * plus oracle_sql.json, for the driver's DuckDB compare. A gate that
+  * throws leaves no output dir (a stale one from an earlier run is
+  * deleted), and the failed names are printed last.
   *
   * With a trailing `--check` argument, the dump is followed by the full
-  * local gate in one command (fails loudly on any mismatch):
+  * local gate in one command (fails loudly on any mismatch, and on any
+  * failed gate):
   *   1. tools/compare_oracle.py — every oracle SQL re-run in DuckDB and
   *      hash-compared against the Spark parquet (the driver's gate, local);
   *   2. tools/independent_check.py — the third-implementation checks
@@ -18,42 +20,8 @@ object Verify {
     val (Array(sfDir, outDir), runCheck) =
       if (args.lastOption.contains("--check")) (args.dropRight(1), true)
       else (args, false)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => SparkEntry.onlySelected(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => SparkEntry.onlySelected(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-    if (runCheck) {
+    val failed = GateRunner.run(dump(_, sfDir, outDir))
+    val (compare, indep) = if (!runCheck) (0, 0) else {
       import scala.sys.process._
       // resolve tools/ against the REPO ROOT, not the cwd: sbt forks mains
       // in the repo root but a bare java/spark-submit launch may not, and a
@@ -70,11 +38,47 @@ object Verify {
       }
       // driver-side python3 (duckdb/pandas) — the same tools the round
       // gate runs; inherit stdio so per-gate ok/FAIL lines stay visible
-      val compare = Seq("python3", s"$root/tools/compare_oracle.py", sfDir, outDir).!
-      val indep = Seq("python3", s"$root/tools/independent_check.py", sfDir, outDir).!
-      if (compare != 0 || indep != 0)
-        sys.error(s"--check FAILED (compare_oracle=$compare, independent_check=$indep)")
+      (Seq("python3", s"$root/tools/compare_oracle.py", sfDir, outDir).!,
+        Seq("python3", s"$root/tools/independent_check.py", sfDir, outDir).!)
+    }
+    failed.foreach(n => System.err.println(s"[verify] FAILED gate: $n"))
+    if (runCheck) {
+      if (compare != 0 || indep != 0 || failed.nonEmpty)
+        sys.error(s"--check FAILED (compare_oracle=$compare, " +
+          s"independent_check=$indep, failed gates=${failed.size})")
       println("[verify] --check: oracle compare + independent checks PASS")
     }
+  }
+
+  /** Writes each of `names`' results to `<outDir>/<gate>` and their oracle
+    * SQL to `<outDir>/oracle_sql.json`; returns the gates that threw, whose
+    * output dirs are deleted so no earlier run's copy is ever compared. */
+  def dump(runner: GateRunner, sfDir: String, outDir: String,
+      names: Seq[String] = GateRunner.gates("ALL")): Seq[String] = {
+    new java.io.File(outDir).mkdirs()
+    val conf = runner.spark.sparkContext.hadoopConfiguration
+    names.foreach { name =>
+      val out = new org.apache.hadoop.fs.Path(outDir, name)
+      if (runner.attempt(name)(SparkEntry.queries(name)(runner.spark, sfDir)
+          .coalesce(1).write.mode("overwrite").parquet(out.toString)).isEmpty)
+        out.getFileSystem(conf).delete(out, true)
+    }
+    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    // — a tab or CR in builder-authored SQL would otherwise make the
+    // driver's json.load fail and silently zero the round's correctness.
+    def q(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    val json = SparkEntry.oracleSql
+      .filter { case (k, _) => names.contains(k) }
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    runner.failed
   }
 }

@@ -1244,9 +1244,14 @@ class CellStore(spark: SparkSession, rootPath: String) {
   }
 
   /** Catalog identity of a mirror — unique per (store root, tableset, res),
-    * so stores at different roots sharing one session never collide. */
-  private def mirrorTableName(name: String, targetRes: Int): String =
-    s"graft_mirror_${Integer.toHexString(rootPath.hashCode)}_${name}_r$targetRes"
+    * so stores at different roots sharing one session never collide. The
+    * root is named by 128 bits of the sha-256 of its qualified path: a
+    * 32-bit `hashCode` lets two roots ("Aa" and "BB") share one table. */
+  private def mirrorTableName(name: String, targetRes: Int): String = {
+    val root = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(fs.makeQualified(new Path(rootPath)).toString.getBytes("UTF-8"))
+    s"graft_mirror_${root.take(16).map("%02x".format(_)).mkString}_${name}_r$targetRes"
+  }
 
   /** Persist the D7 resolution scan of `name` as a hash-BUCKETED,
     * per-bucket-sorted mirror ([[Bucketing.writeMirror]]) registered in the

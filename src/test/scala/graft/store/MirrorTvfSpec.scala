@@ -17,21 +17,22 @@ import graft.schema.{GraftDataType => T, _}
   * write to the tableset must flip the TVF back to the live scan. */
 class MirrorTvfSpec extends AnyFunSuite with Matchers with SparkTestSession {
 
+  private val cells = H3.toChildren(H3.fromParts(20, 5, Seq(0, 0, 0, 0, 0)), 7).toSeq
+  private def frame(f: Int => Long) = spark.createDataFrame(
+    spark.sparkContext.parallelize(
+      cells.zipWithIndex.map { case (c, i) => Row(c, f(i)) }.toIndexedSeq, 4),
+    StructType(Seq(
+      StructField("h3index", LongType, false),
+      StructField("v", LongType, false))))
+  private def schema(n: String) = CompactedTableSchema.builder(n)
+    .h3BaseResolutions(Seq(7))
+    .useCompaction(false)
+    .addSimpleColumn("v", T.Int64)
+    .build()
+
   private def mkStore(nameA: String, nameB: String): (CellStore, String) = {
     val root = Files.createTempDirectory("graft_mirror_tvf_").toString
     val s = CellStore(spark, root)
-    val cells = H3.toChildren(H3.fromParts(20, 5, Seq(0, 0, 0, 0, 0)), 7).toSeq
-    def frame(f: Int => Long) = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        cells.zipWithIndex.map { case (c, i) => Row(c, f(i)) }.toIndexedSeq, 4),
-      StructType(Seq(
-        StructField("h3index", LongType, false),
-        StructField("v", LongType, false))))
-    def schema(n: String) = CompactedTableSchema.builder(n)
-      .h3BaseResolutions(Seq(7))
-      .useCompaction(false)
-      .addSimpleColumn("v", T.Int64)
-      .build()
     s.insert(nameA, frame(_.toLong), createSchema = Some(schema(nameA)))
     s.insert(nameB, frame(i => i * 2L), createSchema = Some(schema(nameB)))
     (s, root)
@@ -92,5 +93,23 @@ class MirrorTvfSpec extends AnyFunSuite with Matchers with SparkTestSession {
     s.mirrorFor("mir_a", 7) should not be empty
     spark.sql(s"SELECT v FROM graft_scan('$root', 'mir_a', 7) WHERE h3index = $extra")
       .collect().map(_.getLong(0)).toSeq shouldBe Seq(999L)
+  }
+
+  test("roots with equal String.hashCode keep their own mirror tables") {
+    Graft.register(spark)
+    val tmp = Files.createTempDirectory("graft_mirror_hash_").toString
+    val (aa, bb) = (s"$tmp/Aa", s"$tmp/BB")
+    assert(aa.hashCode == bb.hashCode, "the fixture must collide on String.hashCode")
+    def mirrored(root: String, v: Long): CellStore = {
+      val s = CellStore(spark, root)
+      s.insert("mir", frame(_ => v), createSchema = Some(schema("mir")))
+      s.buildMirror("mir", 7, numBuckets = 4)
+      s
+    }
+    val a = mirrored(aa, 1L)
+    mirrored(bb, 2L)
+    a.mirrorFor("mir", 7) should not be empty
+    spark.sql(s"SELECT DISTINCT v FROM graft_scan('$aa', 'mir', 7)")
+      .collect().map(_.getLong(0)).toSeq shouldBe Seq(1L)
   }
 }
