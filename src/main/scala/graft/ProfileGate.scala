@@ -45,10 +45,12 @@ object ProfileGate {
       })
       spark.sparkContext.addSparkListener(new SparkListener {
         override def onJobStart(js: SparkListenerJobStart): Unit = {
-          val desc = Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description"))
-              .orElse(Option(p.getProperty("callSite.short"))))
-            .getOrElse("")
+          // gate jobs set neither property: the first stage's name is its
+          // call site
+          val desc = Option(js.properties).toSeq
+            .flatMap(p => Seq("spark.job.description", "callSite.short").map(p.getProperty))
+            .++(js.stageInfos.headOption.map(_.name))
+            .find(d => d != null && d.nonEmpty).getOrElse("")
           starts.put(js.jobId, (js.time, desc, js.stageInfos.map(_.numTasks).sum))
         }
         override def onJobEnd(je: SparkListenerJobEnd): Unit =

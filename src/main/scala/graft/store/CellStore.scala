@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -774,6 +774,11 @@ class CellStore(spark: SparkSession, rootPath: String) {
     (col("kind") === "compacted" && col("resolution") <= targetRes) ||
       (col("kind") === "base" && col("resolution") === targetRes)
 
+  /** [[resolutionFilter]] on one file's driver-known partition values. */
+  private def keepsResolution(kind: String, resolution: Int, targetRes: Int): Boolean =
+    (kind == "compacted" && resolution <= targetRes) ||
+      (kind == "base" && resolution == targetRes)
+
   /** Data read under the DECLARED schema (partition columns are inferred
     * from the layout and appended): a column added by [[addColumn]] is
     * absent from historical files, and a footer-inferred read would pick a
@@ -914,7 +919,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * base-cell group)) that bound every stored row matching some probe —
     * shared by the pushed row-group filter ([[probeRangeFilter]]) and the
     * manifest's file-level pruning, so both prune from the SAME bounds. */
-  private def probeEnvelopes(cells: Seq[Long],
+  private[store] def probeEnvelopes(cells: Seq[Long],
       physRes: Seq[Int]): Seq[(Long, Long)] = {
     val groups: Seq[Seq[Long]] = {
       val byBc = cells.groupBy(H3.getBaseCell).values.toSeq
@@ -1111,30 +1116,33 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * than the target (scanForResolution returns base rows at exactly
     * targetRes plus compacted rows at res <= targetRes; a compacted row AT
     * targetRes needs no expansion). Driver-side partition metadata (the
-    * cached [[FileState]] listing's Hive segments), so compaction-free tablesets —
-    * the Sum engine disables compaction entirely — skip the fine/coarse
-    * split and the uncompaction join in EVERY cell query's plan. Same
-    * plan-time file-set semantics as the directory scan itself (a file
-    * index is fixed when the frame is built; mutations invalidate the
-    * [[FileState]] for frames built after them). */
-  private def hasCompactedBelow(name: String, targetRes: Int): Boolean =
-    fileState(name).dataPaths.exists { p =>
-      // segment-wise parse, not a raw substring match: if the listing ever
-      // yields a differently-normalized layout, a silent non-match here
-      // would skip uncompaction and return coarse rows (wrong results with
-      // no error) — so a compacted segment whose resolution= neighbor does
-      // not parse fails LOUDLY instead (ADVICE r8)
-      val segs = p.split('/')
-      val i = segs.indexOf("kind=compacted")
-      i >= 0 && {
-        val res = segs.lift(i + 1).filter(_.startsWith("resolution="))
+    * cached [[FileState]] listing's Hive segments, parsed once per state),
+    * so compaction-free tablesets — the Sum engine disables compaction
+    * entirely — skip the fine/coarse split and the uncompaction join in
+    * EVERY cell query's plan. Same plan-time file-set semantics as the
+    * directory scan itself (a file index is fixed when the frame is built;
+    * mutations invalidate the [[FileState]] for frames built after them). */
+  private def hasCompactedBelow(name: String, targetRes: Int): Boolean = {
+    val st = fileState(name)
+    st.compactedResolutions {
+      st.dataPaths.flatMap { p =>
+        // segment-wise parse, not a raw substring match: if the listing ever
+        // yields a differently-normalized layout, a silent non-match here
+        // would skip uncompaction and return coarse rows (wrong results with
+        // no error) — so a compacted segment whose resolution= neighbor does
+        // not parse fails LOUDLY instead (ADVICE r8)
+        val segs = p.split('/')
+        val i = segs.indexOf("kind=compacted")
+        if (i < 0) None
+        else Some(segs.lift(i + 1).filter(_.startsWith("resolution="))
           .map(_.stripPrefix("resolution=")).filter(s => s.nonEmpty && s.forall(_.isDigit))
           .getOrElse(throw new IllegalStateException(
             s"tableset '$name': kind=compacted segment without a parseable " +
               s"resolution= segment in data file path: $p"))
-        res.toInt < targetRes
-      }
-    }
+          .toInt)
+      }.toSet
+    }.exists(_ < targetRes)
+  }
 
   /** P4: templated query. `<[table]>` is replaced by a temp view over the
     * pruned scan, `<[h3indexes]>` by a subquery of the probe cells
@@ -1840,7 +1848,9 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * ranges within a directory.
     *
     * An explicit maintenance op (like [[deduplicate]]): one parallel scan of
-    * the data, one tiny parquet overwrite. Queries stay CORRECT without
+    * the data, one tiny parquet overwrite. Readers load the manifest's stats
+    * rows once per [[FileState]] ([[loadedManifest]]) and pick each probe
+    * set's files from them on the driver. Queries stay CORRECT without
     * rebuilding after writes — [[selectFilesForProbes]] unions files the
     * manifest doesn't cover (post-build appends) and drops entries whose
     * file vanished (post-build rewrites); rebuild to restore full pruning. */
@@ -1873,7 +1883,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
       s"tableset '$name' has no manifest to refresh — run buildManifest first")
     if (manifestIsLegacyLayout(name)) { buildManifest(name); return }
     val st = fileState(name)
-    val (_, uncoveredRel) = manifestCoverage(name, st)
+    val uncoveredRel = loadedManifest(name, st).uncovered
     if (uncoveredRel.isEmpty) return
     val base = qualifiedDataDir(name)
     manifestStats(name, readDataFiles(name, uncoveredRel.map(rel => st.byPath(s"$base/$rel"))))
@@ -1924,24 +1934,25 @@ class CellStore(spark: SparkSession, rootPath: String) {
   private def secondaryOrderKey(schema: CompactedTableSchema): Option[String] =
     schema.orderByKey.filterNot(_ == CompactedTableSchema.ColH3Index).headOption
 
-  /** (manifest entry count, current files the manifest does NOT cover) —
-    * the coverage diff [[selectFilesForProbes]] needs to union post-build
-    * appends. Computed as a distributed anti-join (the manifest's path
-    * column is never collected whole to the driver — at 100 TB it is
-    * millions of rows) and memoized in the [[FileState]] until the next
-    * write or manifest build invalidates it; per probe query this is a map
-    * lookup. */
-  private def manifestCoverage(name: String, st: FileState): (Long, Seq[String]) =
-    st.coverage {
-      val m = manifestFrame(name, st).select("path")
-      val currentRel = st.dataPaths.map(relToData(name, _))
-      val uncovered =
-        if (currentRel.isEmpty) Seq.empty[String]
-        else spark.createDataset(currentRel)(org.apache.spark.sql.Encoders.STRING)
-          .toDF("path")
-          .join(m, Seq("path"), "left_anti")
-          .collect().map(_.getString(0)).toSeq
-      (m.count(), uncovered)
+  /** The manifest's stats rows, loaded by one collect and held in the
+    * [[FileState]] until the next write or manifest build: grouped by `bc`
+    * for [[selectFilesForProbes]], with the coverage diff (the live relative
+    * paths minus the loaded path set) that [[refreshManifest]] and every
+    * selection need. A row with a null stat passes no selection predicate
+    * (as in SQL), so it joins no group, but its path counts as covered. */
+  private def loadedManifest(name: String, st: FileState): ManifestStats =
+    st.manifestStats {
+      val rows = manifestFrame(name, st)
+        .select(col("path"), col("kind"), col("resolution").cast("int"),
+          col("bc").cast("long"), col("min_h3"), col("max_h3"))
+        .collect()
+      val covered = rows.map(_.getString(0)).toSet
+      val entries = rows.toSeq.collect {
+        case Row(path: String, kind: String, res: Int, bc: Long, lo: Long, hi: Long) =>
+          ManifestEntry(path, kind, res, bc, lo, hi)
+      }
+      ManifestStats(rows.length, entries.groupBy(_.bc),
+        st.dataPaths.map(relToData(name, _)).filterNot(covered))
     }
 
   /** Every parquet file under `dir`, with fully-qualified paths
@@ -2001,75 +2012,52 @@ class CellStore(spark: SparkSession, rootPath: String) {
     st.read(spark, fs.makeQualified(manifestPath(name)), files, files, schema)
   }
 
-  /** The filtered manifest read a probe selection collects — every predicate
-    * is DECLARATIVE so it prunes before any row reaches the driver: `bc` is
-    * the manifest's partition column (probed base cells -> directory
-    * pruning on the manifest itself), kind/resolution reuse
-    * [[resolutionFilter]] and the h3index envelope disjunction lands in
-    * `PushedFilters` (row-group skipping on the manifest's own files).
-    * Exposed for the spec that audits exactly that plan. */
-  private[graft] def manifestCandidates(name: String, targetRes: Int,
-      cells: Seq[Long]): DataFrame = {
-    val envs = probeEnvelopes(cells, (0 to targetRes).toSeq)
-    val bcs = cells.map(H3.getBaseCell(_).toLong).distinct
-    val envOk = envs.map { case (lo, hi) =>
-      col("min_h3") <= lit(hi) && col("max_h3") >= lit(lo) }.reduce(_ || _)
-    manifestFrame(name, fileState(name))
-      .where(col("bc").isin(bcs: _*))
-      .where(resolutionFilter(targetRes))
-      .where(envOk)
-      .select("path")
-  }
-
   /** Driver-side file selection for a probe query: manifest entries that
     * survive the SAME three predicates the scan would apply — kind/resolution
-    * (D7), probe base cells (bc), and h3index envelope intersection — plus
-    * every current file the manifest does not cover (appended since the
-    * build; no stats -> must be read). Entries whose file no longer exists
-    * (rewritten partitions) are dropped against the live listing. None when
-    * no manifest exists.
+    * ([[resolutionFilter]]'s rule), probe base cells (bc), and intersection
+    * with the scan's own [[probeEnvelopes]] — plus every current file the
+    * manifest does not cover (appended since the build; no stats -> must be
+    * read). Entries whose file no longer exists (rewritten partitions) are
+    * dropped against the live listing. None when no manifest exists.
     *
-    * Per-query driver cost is O(selected + uncovered), NOT O(all files):
-    * the manifest read is partition-pruned/pushed ([[manifestCandidates]]),
-    * and the listing + coverage diff come from the cached [[FileState]]
-    * (round-3 verdict: the previous full-manifest collect per query was the
-    * one remaining driver-side scale bottleneck). */
+    * No Spark job: the predicates run in memory over the stats rows the
+    * [[FileState]] loaded once ([[loadedManifest]]), and only the probed
+    * base cells' entries are visited, so a selection costs
+    * O(entries of the probed base cells + uncovered), not O(all files). */
   private[graft] def selectFilesForProbes(name: String, targetRes: Int,
       cells: Seq[Long]): Option[ManifestSelection] = {
     val st = fileState(name)
     if (cells.isEmpty || st.manifest.isEmpty) return None
-    // memoized per probe set in the FileState: uncached, every execution
-    // of a manifest probe query re-ran the manifest-collect JOB to
-    // recompute an identical file list (round 13; ts18 paid it twice per
-    // bench pass)
-    Some(st.selection(targetRes, cells) {
-      val selected = manifestCandidates(name, targetRes, cells).collect().map(_.getString(0))
-      manifestSelection(name, st, selected)
-    })
+    val envs = probeEnvelopes(cells, (0 to targetRes).toSeq)
+    val byBc = loadedManifest(name, st).byBc
+    val selected = cells.map(H3.getBaseCell(_).toLong).distinct
+      .flatMap(bc => byBc.getOrElse(bc, Nil))
+      .filter(e => keepsResolution(e.kind, e.resolution, targetRes) &&
+        envs.exists { case (lo, hi) => e.minH3 <= hi && e.maxH3 >= lo })
+    Some(manifestSelection(name, st, selected.map(_.path)))
   }
 
   /** A [[ManifestSelection]] from the manifest entries (relative paths) a
-    * pruned manifest read kept: those whose file is still live, plus every
-    * live file the manifest does not cover. */
+    * selection kept: those whose file is still live, plus every live file
+    * the manifest does not cover. */
   private def manifestSelection(name: String, st: FileState,
       selectedRel: Seq[String]): ManifestSelection = {
     val base = qualifiedDataDir(name)
-    val (manifestEntries, uncoveredRel) = manifestCoverage(name, st)
-    val uncovered = uncoveredRel.map(rel => s"$base/$rel")
+    val manifest = loadedManifest(name, st)
+    val uncovered = manifest.uncovered.map(rel => s"$base/$rel")
     ManifestSelection(
       (selectedRel.map(rel => s"$base/$rel").filter(st.byPath.contains) ++ uncovered).distinct,
-      manifestFiles = manifestEntries.toInt, currentFiles = st.dataFiles.size,
+      manifestFiles = manifest.entries, currentFiles = st.dataFiles.size,
       uncoveredFiles = uncovered.size)
   }
 
-  /** The filtered manifest read a value-range selection collects — the
-    * k2 analogue of [[manifestCandidates]]. kind/resolution are the
-    * manifest's OUTER partition directories (round-5 layout), so
-    * [[resolutionFilter]] directory-prunes to the target resolutions
-    * before any file is opened — bc pruning cannot help here (the value
-    * dimension crosses base cells), but the per-resolution nesting keeps
-    * the read O(files at target resolution), flat in the total manifest
-    * size; the k2 interval predicate lands in `PushedFilters` (row-group
+  /** The filtered manifest read a value-range selection collects.
+    * kind/resolution are the manifest's OUTER partition directories
+    * (round-5 layout), so [[resolutionFilter]] directory-prunes to the
+    * target resolutions before any file is opened — bc pruning cannot help
+    * here (the value dimension crosses base cells), but the per-resolution
+    * nesting keeps the read O(files at target resolution), flat in the
+    * total manifest size; the k2 interval predicate lands in `PushedFilters` (row-group
     * skipping inside the surviving directories). Exposed for the spec
     * that audits exactly that plan. None when the manifest predates k2
     * stats. */

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRela
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
-import graft.store.CellStore.{DeleteMutation, ManifestSelection}
+import graft.store.CellStore.DeleteMutation
 import graft.util.Memo
 
 /** Everything the store caches about one tableset's files, as one value per
@@ -18,9 +18,12 @@ import graft.util.Memo
   *  - `deletes`: the pending lightweight-delete markers, in id order;
   *  - `manifest`: the manifest's files and footer schema, when one is built;
   *  - memoized on first use: the declared read schema, the parsed Hive
-  *    partitions of the data and manifest files, the manifest coverage diff
-  *    and the probe-file selections, keyed by content
-  *    `(targetRes, cells.distinct.sorted)`.
+  *    partitions of the data and manifest files, the stored compacted
+  *    resolutions, and the manifest's stats rows ([[ManifestStats]], one
+  *    collect), against which every probe set picks its files on the
+  *    driver with no Spark job (selections are not memoized). The stats
+  *    add one small row per manifest entry to the state's one `FileStatus`
+  *    per data file: the same order of driver memory.
   *
   * The value holds no session-bound object, so one JVM-wide map serves
   * every session and every [[CellStore]] instance at a root (the SQL TVFs
@@ -41,13 +44,12 @@ private[store] final class FileState(
   private def memoized[T](key: Any)(build: => T): T =
     Memo.getOrBuild(memo, key)(build).asInstanceOf[T]
 
-  /** (manifest entry count, relative paths of live files it does not cover). */
-  def coverage(build: => (Long, Seq[String])): (Long, Seq[String]) =
-    memoized("coverage")(build)
+  /** The manifest's stats rows, loaded on first use. */
+  def manifestStats(load: => ManifestStats): ManifestStats = memoized("manifestStats")(load)
 
-  def selection(targetRes: Int, cells: Seq[Long])(
-      build: => ManifestSelection): ManifestSelection =
-    memoized((targetRes, cells.distinct.sorted))(build)
+  /** The resolutions of the stored compacted partitions. */
+  def compactedResolutions(build: => Set[Int]): Set[Int] =
+    memoized("compactedResolutions")(build)
 
   /** The declared read schema of the data files. */
   def readSchema(build: => StructType): StructType = memoized("readSchema")(build)
@@ -76,6 +78,16 @@ private[store] final class FileState(
       dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
   }
 }
+
+/** One manifest row: a data file's path relative to the data dir, its
+  * partition values and its h3index range. */
+private[store] final case class ManifestEntry(path: String, kind: String,
+    resolution: Int, bc: Long, minH3: Long, maxH3: Long)
+
+/** The manifest's row count, its rows by base cell, and the live files
+  * (relative paths) no row covers. */
+private[store] final case class ManifestStats(entries: Int,
+    byBc: Map[Long, Seq[ManifestEntry]], uncovered: Seq[String])
 
 private[store] object FileState {
   private val states = scala.collection.concurrent.TrieMap.empty[String, FileState]

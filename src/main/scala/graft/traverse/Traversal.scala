@@ -1,7 +1,10 @@
 package graft.traverse
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.h3.H3
 import graft.h3.expr.functions._
@@ -196,8 +199,8 @@ object Traversal {
 
   /** T2 compat: pull-based iterator of per-traversal-cell DataFrames, like
     * the reference's `Traverser` stream. `batchSize` traversal cells are
-    * fetched per Spark job (the reference fetches 1 per gRPC query across 3
-    * connections; a Spark job batches better). Cells yielding no rows are
+    * fetched per cell query (the reference fetches 1 per gRPC query across 3
+    * connections; a Spark query batches better). Cells yielding no rows are
     * skipped (T4), so the iterator may be shorter than its size hint. */
   def traverseIterator(store: CellStore, name: String, aoiCells: Seq[Long],
       targetRes: Int, options: TraversalOptions = TraversalOptions(),
@@ -208,34 +211,21 @@ object Traversal {
     options.prefilterTemplate.foreach { ft =>
       cells = prefilter(store, name, cells, travRes, ft)
     }
-    val batches = cells.grouped(batchSize)
-    // Each batch's DataFrame is cached while its cells are being consumed and
-    // unpersisted when the iterator moves to the next batch (and after the
-    // last batch) — long traversals hold at most ONE batch of executor
-    // storage. A TraversedCell.df used after its batch is passed over simply
-    // recomputes from the store (correct, just uncached).
-    new Iterator[TraversedCell] {
-      private var current: Iterator[TraversedCell] = Iterator.empty
-      private var cached: DataFrame = _
-      private def release(): Unit =
-        if (cached != null) { cached.unpersist(false); cached = null }
-      private def advance(): Unit = {
-        while (!current.hasNext && batches.hasNext) {
-          release()
-          val batch = batches.next()
-          val df = store.queryCells(name, batch, targetRes, options.doUncompact, options.template)
-            .withColumn("_tc", h3_to_parent(col(CompactedTableSchema.ColH3Index), lit(travRes)))
-            .cache()
-          cached = df
-          val present = df.select("_tc").distinct().collect().map(_.getLong(0)).toSet
-          current = batch.filter(present.contains).map { tc =>
-            TraversedCell(tc, df.where(col("_tc") === tc).drop("_tc"))
-          }.iterator
-        }
-        if (!current.hasNext && !batches.hasNext) release()
+    // Each batch is one query whose rows are collected to the driver once
+    // (small by construction: at most `batchSize` traversal cells of at most
+    // maxFetchCount target cells each) and handed out as local frames, so
+    // collecting a TraversedCell.df starts no Spark job and an abandoned
+    // iterator leaves nothing cached.
+    cells.grouped(batchSize).flatMap { batch =>
+      val df = store.queryCells(name, batch, targetRes, options.doUncompact, options.template)
+        .withColumn("_tc", h3_to_parent(col(CompactedTableSchema.ColH3Index), lit(travRes)))
+      val cellSchema = StructType(df.schema.dropRight(1))
+      val tcIdx = cellSchema.size
+      val byTc = df.collect().filterNot(_.isNullAt(tcIdx)).groupBy(_.getLong(tcIdx))
+      batch.filter(byTc.contains).map { tc =>
+        val rows = byTc(tc).map(r => Row.fromSeq(r.toSeq.take(tcIdx))).toSeq
+        TraversedCell(tc, df.sparkSession.createDataFrame(rows.asJava, cellSchema))
       }
-      override def hasNext: Boolean = { advance(); current.hasNext }
-      override def next(): TraversedCell = { advance(); current.next() }
     }
   }
 }

@@ -112,18 +112,21 @@ class ManifestSpec extends AnyFunSuite with Matchers with SparkTestSession {
   }
 
   test("manifest read is itself pruned: bc partition filter + pushed h3 envelope") {
+    // the selection runs on the driver over the state's stats rows: the
+    // probed base cell and the h3 envelope prune, with no Spark job
     store.buildManifest(name)
-    val df = store.manifestCandidates(name, 7, Seq(probe))
-    df.collect()
-    val scan = df.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-    }.getOrElse(fail("no file scan in the manifest-candidates plan"))
-    // the probed base cells prune the manifest's OWN partition directories
-    scan.metadata("PartitionFilters") should include("bc")
-    // ...and the h3index envelope disjunction reaches the parquet reader
-    val pushed = scan.metadata("PushedFilters")
-    pushed should include("min_h3")
-    pushed should include("max_h3")
+    store.selectFilesForProbes(name, 7, Seq(cellsOf(bcB).head)) // loads the stats
+    val (sel, jobs) = graft.JobCount.of(spark)(store.selectFilesForProbes(name, 7, Seq(probe)).get)
+    jobs shouldBe 0
+    sel.paths should not be empty
+    // the probed base cell prunes to its own directory...
+    all(sel.paths) should include("ph3=" + bcA + "/")
+    SparkProbeSelection.relative(storeRoot, name, sel.paths) shouldBe
+      SparkProbeSelection.select(spark, store, storeRoot, name, 7, Seq(probe))
+    // ...and the h3 envelope prunes inside it: a bc-20 cell under another
+    // res-5 parent than the stored ones selects no file
+    val outside = H3.fromParts(bcA, 7, Seq(1, 0, 0, 0, 0, 0, 0))
+    store.selectFilesForProbes(name, 7, Seq(outside)).get.paths shouldBe empty
   }
 
   /** Synthetic 50k-entry manifest at the round-5 layout
@@ -168,17 +171,30 @@ class ManifestSpec extends AnyFunSuite with Matchers with SparkTestSession {
 
   test("50k-file manifest: selection reads one bc partition, not the manifest") {
     // selection cost must be O(probed bc), flat in the total file count —
-    // the round-3 verdict's scale criterion
+    // the round-3 verdict's scale criterion: once the stats are loaded, a
+    // probe set's selection visits its bc's entries on the driver, with no
+    // Spark job. bc 20's res-7 entries name live (empty) files, so they
+    // survive the selection's liveness check.
     val (s, cs) = bigManifestFixture()
-    val df = s.manifestCandidates(name, 7, Seq(cs(30)))
-    val selected = df.collect().map(_.getString(0))
+    val data = java.nio.file.Paths.get(s.dataDir(name))
+    val bc20 = spark.read.parquet(s.manifestPath(name).toString)
+      .where("bc = 20 AND resolution = 7").select("path").collect().map(_.getString(0))
+    bc20 should have size 100
+    bc20.foreach { rel =>
+      Files.createDirectories(data.resolve(rel).getParent)
+      Files.createFile(data.resolve(rel))
+    }
+    s.invalidateFileCaches(name)
+    def entries(sel: CellStore.ManifestSelection): Seq[String] = {
+      sel.manifestFiles shouldBe 50000
+      sel.paths.dropRight(sel.uncoveredFiles)
+    }
+    val selected = entries(s.selectFilesForProbes(name, 7, Seq(cs(30))).get)
     selected should have size 50 // the straddling half of bc 20's res-7 entries
     all(selected) should include("ph3=20/")
-    val scan = df.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case sc: org.apache.spark.sql.execution.FileSourceScanExec => sc
-    }.getOrElse(fail("no file scan in the manifest-candidates plan"))
-    // 500 leaf directories on disk; bc + resolution pruning touched one
-    scan.metrics("numFiles").value shouldBe 1L
+    val (second, jobs) = graft.JobCount.of(spark)(s.selectFilesForProbes(name, 7, Seq(cs(31))).get)
+    jobs shouldBe 0
+    entries(second) shouldBe selected
   }
 
   test("50k-file manifest: value-range selection directory-prunes to the target resolution") {
@@ -341,5 +357,62 @@ class ManifestSpec extends AnyFunSuite with Matchers with SparkTestSession {
       spark.sparkContext.removeSparkListener(listener)
       spark.conf.unset(key)
     }
+  }
+
+  /** A compacted store over base resolutions 5 and 7: bcA's res-5 cell is
+    * complete (compacts to res 5), bcB's loses three children (compacted
+    * res-6 rows beside base res-7 rows), so entries of both kinds and of
+    * several resolutions reach the manifest. */
+  private def compactedStore(prefix: String, ts: String): (String, CellStore) = {
+    val dir = Files.createTempDirectory(prefix).toString
+    val s = CellStore(spark, dir)
+    s.insert(ts, frame(cellsOf(bcA) ++ cellsOf(bcB).drop(3), 0),
+      createSchema = Some(CompactedTableSchema.builder(ts)
+        .h3BaseResolutions(Seq(5, 7))
+        .addAggregatedColumn("v", T.Int64, Agg.Max)
+        .build()))
+    (dir, s)
+  }
+
+  test("driver-side selection equals the Spark manifest read: fresh, after an append, after a rewrite") {
+    val ts = "diff_ts"
+    val (root, s) = compactedStore("graft_manifest_diff_", ts)
+    s.buildManifest(ts)
+    val rng = new scala.util.Random(7)
+    val universe = cellsOf(bcA) ++ cellsOf(bcB) ++
+      Seq(H3.fromParts(bcA, 7, Seq(1, 0, 0, 0, 0, 0, 0)), H3.fromParts(30, 7, Seq.fill(7)(0)))
+    def probeSet(): Seq[Long] = Seq.fill(1 + rng.nextInt(6)) {
+      val c = universe(rng.nextInt(universe.size))
+      H3.toParentUnsafe(c, 5 + rng.nextInt(3)) // probes at res 5, 6 and 7
+    }.distinct
+    def check(stage: String, expectUncovered: Boolean): Unit =
+      (1 to 8).foreach { _ =>
+        val probes = probeSet()
+        val targetRes = 5 + rng.nextInt(3)
+        val sel = s.selectFilesForProbes(ts, targetRes, probes).get
+        withClue(s"$stage, res $targetRes, probes $probes: ") {
+          (sel.uncoveredFiles > 0) shouldBe expectUncovered
+          SparkProbeSelection.relative(root, ts, sel.paths) shouldBe
+            SparkProbeSelection.select(spark, s, root, ts, targetRes, probes)
+        }
+      }
+    check("fresh manifest", expectUncovered = false)
+    s.insert(ts, frame(cellsOf(bcB).take(3), 5000)) // uncovered files
+    check("after an append", expectUncovered = true)
+    s.deduplicate(ts) // every manifest entry now names a dead file
+    check("after a rewrite", expectUncovered = true)
+  }
+
+  test("with the stats loaded, a new probe set selects with no Spark job and queries in at most 2") {
+    val ts = "jobs_ts"
+    val (_, s) = compactedStore("graft_manifest_jobs_", ts)
+    s.buildManifest(ts)
+    val cells = cellsOf(bcB)
+    s.selectFilesForProbes(ts, 7, Seq(cells(5))) shouldBe defined // loads the stats
+    graft.JobCount.of(spark)(s.selectFilesForProbes(ts, 7, Seq(cells(10), cells(11))))._2 shouldBe 0
+    val (rows, jobs) = graft.JobCount.of(spark)(
+      s.queryCells(ts, Seq(cells(20), cellsOf(bcA)(3)), 7).select("h3index", "v").collect())
+    jobs should be <= 2
+    rows.map(_.getLong(0)).sorted shouldBe Seq(cells(20), cellsOf(bcA)(3)).sorted
   }
 }

@@ -182,6 +182,19 @@ class TraversalSpec extends AnyFunSuite with Matchers with SparkTestSession {
     it.map(_.df.count()).sum shouldBe 343L
   }
 
+  test("T2 iterator: an abandoned iterator leaves nothing cached; its frames read with no job") {
+    spark.catalog.clearCache()
+    val it = Traversal.traverseIterator(store, "trav_ts", Seq(hexRes3), 6,
+      Traversal.TraversalOptions(maxFetchCount = 10), batchSize = 16)
+    val firstHalf = it.take(24).toList // two of the four batches, then abandoned
+    firstHalf should have length 24
+    spark.sharedState.cacheManager.isEmpty shouldBe true
+    val (counts, jobs) = graft.JobCount.of(spark)(firstHalf.map(_.df.collect().length))
+    jobs shouldBe 0
+    all(counts) shouldBe 7
+    firstHalf.head.df.columns should not contain "_tc"
+  }
+
   test("T3 prefilter: excluding filter query yields zero frames (test_traversal.py:63-83)") {
     val it = Traversal.traverseIterator(store, "trav_ts", Seq(hexRes3), 6,
       Traversal.TraversalOptions(maxFetchCount = 10,
