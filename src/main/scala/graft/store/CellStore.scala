@@ -1,15 +1,24 @@
 package graft.store
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BindReferences, Predicate}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graft.shims
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.h3.H3
 import graft.h3.expr.functions._
@@ -63,22 +72,21 @@ class CellStore(spark: SparkSession, rootPath: String) {
   /** The tableset's cached [[FileState]], loaded on first use. */
   private def fileState(name: String): FileState =
     FileState.get(cacheKey(name)) {
-      val dels = {
-        val p = deletesPath(name)
-        if (!fs.exists(p)) Seq.empty
-        else fs.listStatus(p).toSeq.map(_.getPath.getName)
-          .filter(_.endsWith(".delete")).map(_.stripSuffix(".delete").toLong)
-          .sorted.map(readDeleteMarker(name, _))
-      }
-      val manifest = Some(listParquet(manifestPath(name)))
-        .filter(files => files.nonEmpty && hasManifest(name))
-        .map(files => (files, parquetSchema(files.head)))
-      new FileState(listParquet(dataPath(name)), dels, manifest)
+      val p = deletesPath(name)
+      val dels = if (!fs.exists(p)) Seq.empty else fs.listStatus(p).toSeq.map(_.getPath.getName)
+        .filter(_.endsWith(".delete")).map(_.stripSuffix(".delete").toLong)
+        .sorted.map(readDeleteMarker(name, _))
+      new FileState(listParquet(dataPath(name)), dels, listManifest(name))
     }
 
+  /** The manifest's files and footer schema, when one is built. */
+  private def listManifest(name: String): Option[(Seq[FileStatus], StructType)] =
+    Some(listParquet(manifestPath(name))).filter(files => files.nonEmpty && hasManifest(name))
+      .map(files => (files, parquetSchema(files.head)))
+
   /** Drop the cached [[FileState]] of `name` — required after out-of-band
-    * writes (another JVM, manual file surgery). All same-JVM mutators call
-    * it automatically, whichever instance they go through. */
+    * writes (another JVM, manual file surgery). Same-JVM mutators keep it
+    * current themselves, whichever instance they go through. */
   def invalidateFileCaches(name: String): Unit = FileState.invalidate(cacheKey(name))
 
   // ---------------------------------------------------------------- catalog
@@ -294,11 +302,10 @@ class CellStore(spark: SparkSession, rootPath: String) {
     // same append-commit critical section as insert() (shared _temporary
     // staging + atomic listing diff)
     CellStore.commitLock(cacheKey(name)).synchronized {
-      val preexisting =
-        if (fs.exists(dataPath(name))) listDataFiles(name).toSet else Set.empty[String]
+      val preexisting = listDataFiles(name).toSet // empty without a data dir
       writePartitioned(target, updated, name)
       invalidateFileCaches(name)
-      recordSnapshot(name, preexisting) // the backfill is its own commit
+      recordSnapshot(name, preexisting, listDataFiles(name)) // the backfill is its own commit
       writeSchema(name, updated)
     }
   }
@@ -586,23 +593,21 @@ class CellStore(spark: SparkSession, rootPath: String) {
       }
 
       val all = frames.reduce(_ unionByName _)
-      // the commit critical section — serialized per (root, tableset) JVM-wide:
-      // (a) Hadoop's FileOutputCommitter stages EVERY job under the same
-      // <data>/_temporary/0 dir, so a concurrent writer's cleanupJob would
-      // delete this writer's in-flight task files (lost rows, not just lost
-      // metadata); (b) the before/after listing diff must not interleave with
-      // another commit, or this snapshot would list the other writer's files
-      // (phantom rows in earlier-id as-of reads). Cross-JVM writers: snapshot
-      // id claims stay collision-safe (exclusive create), but concurrent data
-      // commits to the SAME tableset from separate drivers share _temporary
-      // and need an external coordinator — the documented multi-writer
-      // contract (per-writer tablesets + cross-tableset union, or serialize).
+      // the commit critical section, serialized per (root, tableset) JVM-wide:
+      // (a) FileOutputCommitter stages EVERY job under <data>/_temporary/0,
+      // so a concurrent writer's cleanupJob would delete this writer's task
+      // files; (b) the listing diff must not take in another commit's files
+      // (phantom rows in earlier-id as-of reads). Writers in separate drivers
+      // share _temporary too and need an external coordinator (the
+      // multi-writer contract: per-writer tablesets, or serialize).
       CellStore.commitLock(cacheKey(name)).synchronized {
-        val preexisting =
-          if (fs.exists(dataPath(name))) listDataFiles(name).toSet else Set.empty[String]
+        val read = FileState.peek(cacheKey(name))
+        val preexisting = listDataFiles(name).toSet
         writePartitioned(all, schema, name)
-        invalidateFileCaches(name)
-        recordSnapshot(name, preexisting)
+        // the new files are uncovered by the manifest, whose stats carry over
+        val listed = listParquet(dataPath(name))
+        FileState.replace(cacheKey(name), read, _.next(dataFiles = listed))
+        recordSnapshot(name, preexisting, listed.map(_.getPath.toString))
       }
     } finally {
       rolledUp.foreach(_.unpersist())
@@ -656,10 +661,9 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * upgrade path. The staged data carries a `_layout.json` marker naming
     * its h3Partitioning, so schema and layout publish ATOMICALLY: a crash
     * after the publish renames but before the sidecar write is healed by
-    * [[reconcileLayout]] on the next read instead of silently mispruning
-    * (ADVICE r3, medium). Rewritten paths invalidate the manifest (dropped
-    * here; rebuild at will) and snapshot history (fails loudly at
-    * [[scanAsOf]]). */
+    * [[reconcileLayout]] on the next read instead of silently mispruning.
+    * Rewritten paths invalidate the manifest (dropped here; rebuild at
+    * will) and snapshot history (fails loudly at [[scanAsOf]]). */
   def alterPartitioning(name: String, newPartitioning: H3Partitioning): Unit =
       CellStore.commitLock(cacheKey(name)).synchronized {
     // serialized with deleteWhere/insert: the staged full rewrite reads
@@ -784,7 +788,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * absent from historical files, and a footer-inferred read would pick a
     * random file's schema — declared reads resolve it to NULL everywhere
     * instead. */
-  private def readDeclared(name: String): DataFrame = {
+  private[store] def readDeclared(name: String): DataFrame = {
     val st = fileState(name)
     if (st.deletes.isEmpty) readDeclaredRaw(name)
     else readFilesMasked(name, st.dataFiles, st.deletes)
@@ -973,11 +977,9 @@ class CellStore(spark: SparkSession, rootPath: String) {
             case H3Partitioning.LowerResolution(_) =>
               h3_get_base_cell(col("ph3")).cast("long").isin(bcs: _*)
           }
-          // file-level manifest pruning (never under a template — file
-          // envelopes are a row-range restriction in disguise, and the
-          // template contract exposes the UNRESTRICTED pruned scan); all
-          // row-level filters still apply on top, so manifest staleness can
-          // only cost IO, never rows
+          // file-level manifest pruning, never under a template (whose
+          // contract exposes the UNRESTRICTED pruned scan); row filters
+          // still apply on top, so a stale manifest costs IO, never rows
           val fileSel =
             if (template.isEmpty) selectFilesForProbes(name, targetRes, knownCells.get)
             else None
@@ -1112,16 +1114,11 @@ class CellStore(spark: SparkSession, rootPath: String) {
   }
 
   /** True iff the tableset stores ANY compacted partition strictly below
-    * `targetRes` — the only rows a doUncompact query could see coarser
-    * than the target (scanForResolution returns base rows at exactly
-    * targetRes plus compacted rows at res <= targetRes; a compacted row AT
-    * targetRes needs no expansion). Driver-side partition metadata (the
-    * cached [[FileState]] listing's Hive segments, parsed once per state),
-    * so compaction-free tablesets — the Sum engine disables compaction
-    * entirely — skip the fine/coarse split and the uncompaction join in
-    * EVERY cell query's plan. Same plan-time file-set semantics as the
-    * directory scan itself (a file index is fixed when the frame is built;
-    * mutations invalidate the [[FileState]] for frames built after them). */
+    * `targetRes`, the only rows a doUncompact query could see coarser than
+    * the target: read from the [[FileState]] listing's Hive segments,
+    * parsed once per state, so compaction-free tablesets (the Sum engine)
+    * skip the fine/coarse split and the uncompaction join in EVERY cell
+    * query's plan. Like a scan's file index, fixed when the frame is built. */
   private def hasCompactedBelow(name: String, targetRes: Int): Boolean = {
     val st = fileState(name)
     st.compactedResolutions {
@@ -1314,8 +1311,8 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * RELATIVE to the data dir, so a tableset rename keeps history valid).
     * Local listing diff; a distributed commit protocol would report the
     * written files directly — same contract, cheaper capture. */
-  private def recordSnapshot(name: String, before: Set[String]): Unit = {
-    val added = listDataFiles(name).filterNot(before).map(relToData(name, _)).sorted
+  private def recordSnapshot(name: String, before: Set[String], after: Seq[String]): Unit = {
+    val added = after.filterNot(before).map(relToData(name, _)).sorted
     if (added.isEmpty) return
     writeSnapshotList(name, claimSnapshotId(name), added)
   }
@@ -1836,129 +1833,147 @@ class CellStore(spark: SparkSession, rootPath: String) {
   def hasManifest(name: String): Boolean =
     fs.exists(new Path(manifestPath(name), "_SUCCESS"))
 
-  /** Build the FILE-LEVEL data-skipping index: one row per data file with
-    * its partition values and the h3index min/max + row count — the
-    * Iceberg-manifest idea applied to this layout. With millions of files at
-    * 100 TB, partition pruning alone still leaves every file of a surviving
-    * directory to be listed, footer-read, and task-scheduled; the manifest
-    * lets the DRIVER intersect a probe query's h3index envelopes with each
-    * file's [min, max] and hand Spark only the files that can match —
-    * typically one or two per touched partition, because
-    * [[rangedForWrite]]/[[sortedForWrite]] give files DISJOINT h3index
-    * ranges within a directory.
+  /** Build the FILE-LEVEL data-skipping index, the Iceberg/Delta manifest
+    * applied to this layout: one row per data file with its partition
+    * values, h3index min/max and row count, so the DRIVER hands Spark only
+    * the files whose range meets a probe's envelopes — typically one or two
+    * per partition, as [[sortedForWrite]] gives them DISJOINT ranges.
     *
-    * An explicit maintenance op (like [[deduplicate]]): one parallel scan of
-    * the data, one tiny parquet overwrite. Readers load the manifest's stats
-    * rows once per [[FileState]] ([[loadedManifest]]) and pick each probe
-    * set's files from them on the driver. Queries stay CORRECT without
-    * rebuilding after writes — [[selectFilesForProbes]] unions files the
-    * manifest doesn't cover (post-build appends) and drops entries whose
-    * file vanished (post-build rewrites); rebuild to restore full pruning. */
+    * A maintenance op (like [[deduplicate]]) that reads no data: the rows
+    * come from parquet footers ([[footerEntries]]) and replace the manifest
+    * as one flat file ([[writeManifest]]). Queries stay CORRECT without
+    * rebuilding after writes: [[selectFilesForProbes]] unions uncovered
+    * files and drops entries whose file vanished. */
   def buildManifest(name: String): Unit = {
-    manifestStats(name, readDeclared(name))
-      .repartition(col("bc"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("kind", "resolution", "bc")
-      .parquet(manifestPath(name).toString)
-    invalidateFileCaches(name)
+    val st = fileState(name)
+    val entries = footerEntries(name, st.dataFiles)
+    writeManifest(name, st, entries, SaveMode.Overwrite,
+      ManifestStats(Nil, Set.empty, secondaryOrderKey(getTableset(name)).map(_._2)) ++ entries)
   }
 
-  /** Round-4 manifests were partitioned by `bc` alone; round 5 nests
-    * kind/resolution ABOVE bc so [[selectFilesForValueRange]]'s
-    * resolution predicate directory-prunes too (the value dimension
-    * crosses base cells, so bc pruning can never help it). Appending the
-    * new layout into a legacy directory would corrupt partition
-    * discovery, so refresh falls back to a full rebuild there. */
-  private def manifestIsLegacyLayout(name: String): Boolean =
-    fs.listStatus(manifestPath(name))
-      .exists(st => st.isDirectory && st.getPath.getName.startsWith("bc="))
-
-  /** Incremental manifest maintenance: stat ONLY the files the manifest
-    * does not cover (inserts since the last build/refresh) and append their
-    * rows — one scan of the new files, never the table. Entries whose file
-    * a rewrite deleted stay behind harmlessly (selection intersects the
-    * live listing); a full [[buildManifest]] clears them. */
+  /** Incremental manifest maintenance: footer rows for ONLY the files the
+    * manifest does not cover, appended as one more flat file (no job when
+    * none is). Entries of deleted files stay behind harmlessly until a
+    * [[buildManifest]]. A manifest with subdirectories (the partitioned
+    * layouts of earlier versions, which still read) is rebuilt flat. */
   def refreshManifest(name: String): Unit = {
     require(hasManifest(name),
       s"tableset '$name' has no manifest to refresh — run buildManifest first")
-    if (manifestIsLegacyLayout(name)) { buildManifest(name); return }
     val st = fileState(name)
-    val uncoveredRel = loadedManifest(name, st).uncovered
-    if (uncoveredRel.isEmpty) return
+    if (st.manifest.isEmpty || fs.listStatus(manifestPath(name)).exists(f =>
+        f.isDirectory && !f.getPath.getName.startsWith("_"))) return buildManifest(name)
     val base = qualifiedDataDir(name)
-    manifestStats(name, readDataFiles(name, uncoveredRel.map(rel => st.byPath(s"$base/$rel"))))
-      .repartition(col("bc"))
-      .write.mode(SaveMode.Append)
-      .partitionBy("kind", "resolution", "bc")
-      .parquet(manifestPath(name).toString)
-    invalidateFileCaches(name)
+    val entries = footerEntries(name, uncovered(name, st).map(rel => st.byPath(s"$base/$rel")))
+    if (entries.nonEmpty)
+      writeManifest(name, st, entries, SaveMode.Append, loadedManifest(name, st) ++ entries)
   }
 
-  /** One stats row per data file. `path` is RELATIVE to the data dir (like
-    * the snapshot lists: scheme-free, so manifests survive a filesystem
-    * move and compare exactly against relativized listings); `bc` is the
-    * file's base cell — the manifest's own PARTITION column, so a probe
-    * query's manifest read prunes to the probed base cells' directories
-    * instead of scanning stats for every file in the store. */
-  private def manifestStats(name: String, data: DataFrame): DataFrame = {
-    val h3Col = CompactedTableSchema.ColH3Index
-    // input_file_name is a fully-qualified URI whose exact scheme spelling
-    // (file:/// vs file:/) differs from Path normalization — relativize on
-    // the scheme-less data-dir marker, which is identical in every spelling
-    val marker = dataPath(name).toUri.getPath.stripSuffix("/") + "/"
+  /** The manifest rows of `files` from their parquet footers, read on the
+    * driver: partition values from the relative path, the h3index and k2
+    * ranges and row count from the row groups (k2 null, "unknown", unless
+    * its stats order values as Spark does). A file without h3index stats
+    * gets no row: it stays uncovered, so every query reads it. Stats cover
+    * the physical rows, a safe superset of the live ones under deletes. */
+  private def footerEntries(name: String, files: Seq[FileStatus]): Seq[ManifestEntry] = {
     val schema = getTableset(name)
-    val bc = schema.h3Partitioning match {
-      case H3Partitioning.BaseCell => col("ph3")
-      case H3Partitioning.LowerResolution(_) => h3_get_base_cell(col("ph3")).cast("long")
+    val conf = spark.sessionState.newHadoopConf()
+    files.flatMap { file =>
+      val rel = relToData(name, file.getPath.toString)
+      val parts = rel.split('/').map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
+      val groups = ParquetFileReader.readFooter(conf, file, ParquetMetadataConverter.NO_FILTER)
+        .getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
+      // column `c`'s stats per row group, when every group has a value range
+      def stats(c: String) = Some(groups.map(_.getColumns.asScala
+        .find(_.getPath.toDotString == c).map(_.getStatistics).orNull))
+        .filter(ss => ss.nonEmpty && ss.forall(s => s != null && s.hasNonNullValue))
+      for (kind <- parts.get("kind"); res <- parts.get("resolution").flatMap(_.toIntOption);
+           ph3 <- parts.get("ph3").flatMap(_.toLongOption); h3 <- stats(CompactedTableSchema.ColH3Index))
+      yield {
+        val bc = if (schema.h3Partitioning == H3Partitioning.BaseCell) ph3
+          else H3.getBaseCell(ph3).toLong
+        val k2 = for {
+          (c, t) <- secondaryOrderKey(schema); ss <- stats(c); f <- k2Value(t, ss.head.`type`)
+        } yield {
+          val ord = TypeUtils.getInterpretedOrdering(t)
+          (ss.map(s => f(s.genericGetMin)).min(ord), ss.map(s => f(s.genericGetMax)).max(ord))
+        }
+        ManifestEntry(rel, kind, res, ph3, bc, h3.map(_.genericGetMin.asInstanceOf[Long]).min,
+          h3.map(_.genericGetMax.asInstanceOf[Long]).max, groups.map(_.getRowCount).sum,
+          k2.map(_._1).orNull, k2.map(_._2).orNull)
+      }
     }
-    // secondary-key file stats: when the ORDER BY declares a column after
-    // h3index, record its per-file min/max too — after [[zorderFiles]] these
-    // ranges are tight, so [[scanForValueRange]] prunes at FILE level (the
-    // Z-ORDER + manifest-stats combination, per Delta/Iceberg practice).
-    // Older manifests lack the columns; every reader guards on presence.
-    val k2Aggs = secondaryOrderKey(schema).toSeq.flatMap(k2 =>
-      Seq(min(col(k2)).as("k2_min"), max(col(k2)).as("k2_max")))
-    data
-      .groupBy(substring_index(input_file_name(), marker, -1).as("path"),
-        col("kind"),
-        col("resolution").cast("int").as("resolution"),
-        col("ph3").cast("long").as("ph3"))
-      .agg(min(col(h3Col)).as("min_h3"),
-        (max(col(h3Col)).as("max_h3") +: count(lit(1)).as("rows") +: k2Aggs): _*)
-      .withColumn("bc", bc)
   }
 
-  /** The first ORDER BY column after h3index, if the schema declares one —
-    * the key [[zorderFiles]] co-clusters with h3index and whose per-file
-    * min/max the manifest records for [[scanForValueRange]] pruning. */
-  private def secondaryOrderKey(schema: CompactedTableSchema): Option[String] =
-    schema.orderByKey.filterNot(_ == CompactedTableSchema.ColH3Index).headOption
+  /** The Catalyst value of a footer stat of type `p`, for a k2 of type `t`
+    * whose parquet order is Spark's: signed integers, dates, microsecond
+    * timestamps, UTF-8 strings (bytewise). Float stats skip NaN, which Spark
+    * orders last, and INT96 timestamps have none: both stay unknown. */
+  private def k2Value(t: DataType, p: PrimitiveType): Option[Any => Any] = {
+    import LogicalTypeAnnotation._
+    import PrimitiveType.PrimitiveTypeName._
+    (t, p.getPrimitiveTypeName, p.getLogicalTypeAnnotation) match {
+      case (LongType, INT64, null) | (IntegerType, INT32, null) |
+          (DateType, INT32, _: DateLogicalTypeAnnotation) => Some(identity)
+      case (TimestampType, INT64, ts: TimestampLogicalTypeAnnotation)
+          if ts.isAdjustedToUTC && ts.getUnit == TimeUnit.MICROS => Some(identity)
+      case (StringType, BINARY, _: StringLogicalTypeAnnotation) =>
+        Some(v => UTF8String.fromBytes(v.asInstanceOf[Binary].getBytes))
+      case _ => None
+    }
+  }
 
-  /** The manifest's stats rows, loaded by one collect and held in the
-    * [[FileState]] until the next write or manifest build: grouped by `bc`
-    * for [[selectFilesForProbes]], with the coverage diff (the live relative
-    * paths minus the loaded path set) that [[refreshManifest]] and every
-    * selection need. A row with a null stat passes no selection predicate
-    * (as in SQL), so it joins no group, but its path counts as covered. */
+  /** Write `entries` as one flat manifest file (a single-task job), then
+    * install `stats`, the rows after the write, in the successor of `st`. */
+  private def writeManifest(name: String, st: FileState, entries: Seq[ManifestEntry],
+      mode: SaveMode, stats: ManifestStats): Unit = {
+    val rows = entries.map(e => InternalRow.fromSeq(Seq(UTF8String.fromString(e.path),
+      UTF8String.fromString(e.kind), e.resolution, e.ph3, e.bc, e.minH3, e.maxH3, e.rows) ++
+      stats.k2Type.toSeq.flatMap(_ => Seq(e.k2Min, e.k2Max))))
+    shims.ofRows(spark, LocalRelation(manifestColumns(stats.k2Type), rows)).coalesce(1)
+      .write.mode(mode).parquet(manifestPath(name).toString)
+    FileState.replace(cacheKey(name), Some(st), _.next(manifest = listManifest(name), stats = Some(stats)))
+  }
+
+  /** The first ORDER BY column after h3index and its type, if declared:
+    * the key [[zorderFiles]] co-clusters with h3index and whose per-file
+    * range the manifest records for [[scanForValueRange]]. */
+  private def secondaryOrderKey(schema: CompactedTableSchema): Option[(String, DataType)] =
+    schema.orderByKey.filterNot(_ == CompactedTableSchema.ColH3Index).headOption
+      .map(k2 => k2 -> schema.columns(k2).dataType.sparkType)
+
+  /** The flat manifest's columns, the k2 range's when `k2` is its type. */
+  private def manifestColumns(k2: Option[DataType]): Seq[AttributeReference] =
+    (Seq("path" -> StringType, "kind" -> StringType, "resolution" -> IntegerType,
+      "ph3" -> LongType, "bc" -> LongType, "min_h3" -> LongType, "max_h3" -> LongType,
+      "rows" -> LongType) ++ k2.toSeq.flatMap(t => Seq("k2_min" -> t, "k2_max" -> t)))
+      .map { case (n, t) => AttributeReference(n, t)() }
+
+  /** The manifest's stats rows (with k2 when present), held in the
+    * [[FileState]]: installed by a manifest writer, or loaded by one
+    * collect, flat or partitioned. A row with a null stat is no entry
+    * (it passes no predicate, as in SQL), but its path counts as covered. */
   private def loadedManifest(name: String, st: FileState): ManifestStats =
     st.manifestStats {
-      val rows = manifestFrame(name, st)
-        .select(col("path"), col("kind"), col("resolution").cast("int"),
-          col("bc").cast("long"), col("min_h3"), col("max_h3"))
-        .collect()
-      val covered = rows.map(_.getString(0)).toSet
+      val (files, schema) = st.manifest.get
+      val k2Type = schema.find(_.name == "k2_min").map(_.dataType)
+      val rows = st.read(spark, fs.makeQualified(manifestPath(name)), files, files, schema)
+        .select(manifestColumns(k2Type).map(a => col(a.name).cast(a.dataType)): _*).collect()
+      val k2 = k2Type.map(CatalystTypeConverters.createToCatalystConverter)
       val entries = rows.toSeq.collect {
-        case Row(path: String, kind: String, res: Int, bc: Long, lo: Long, hi: Long) =>
-          ManifestEntry(path, kind, res, bc, lo, hi)
+        case r @ Row(path: String, kind: String, res: Int, ph3: Long, bc: Long,
+            lo: Long, hi: Long, n: Long, _*) =>
+          ManifestEntry(path, kind, res, ph3, bc, lo, hi, n,
+            k2.map(_(r.get(8))).orNull, k2.map(_(r.get(9))).orNull)
       }
-      ManifestStats(rows.length, entries.groupBy(_.bc),
-        st.dataPaths.map(relToData(name, _)).filterNot(covered))
+      ManifestStats(entries, rows.map(_.getString(0)).toSet, k2Type)
     }
 
-  /** Every parquet file under `dir`, with fully-qualified paths
-    * (fs.makeQualified — ADVICE r3: scheme-less paths fed back into
-    * spark.read resolve against the DEFAULT filesystem, which breaks
-    * rootPaths on s3a:// or a non-default HDFS namenode). */
+  /** The live files (relative paths) the manifest does not cover. */
+  private def uncovered(name: String, st: FileState): Seq[String] = st.uncovered(
+    st.dataPaths.map(relToData(name, _)).filterNot(loadedManifest(name, st).covered))
+
+  /** Every parquet file under `dir`, with fully-qualified paths (scheme-less
+    * ones would resolve against the DEFAULT filesystem in spark.read). */
   private def listParquet(dir: Path): Seq[FileStatus] = {
     // manual walk, NOT fs.listFiles(recursive): a concurrent writer's
     // transient `_temporary` subtree must be (a) skipped — its in-flight
@@ -2003,27 +2018,11 @@ class CellStore(spark: SparkSession, rootPath: String) {
   private def qualifiedDataDir(name: String): String =
     fs.makeQualified(dataPath(name)).toString.stripSuffix("/")
 
-  /** The manifest read over the [[FileState]]'s manifest files: partition
-    * DISCOVERY over the manifest's own kind/resolution/bc tree would
-    * re-list 122+ directories on EVERY probe query (the manifest exists to
-    * avoid per-query file work). Callers check that a manifest exists. */
-  private def manifestFrame(name: String, st: FileState): DataFrame = {
-    val (files, schema) = st.manifest.get
-    st.read(spark, fs.makeQualified(manifestPath(name)), files, files, schema)
-  }
-
-  /** Driver-side file selection for a probe query: manifest entries that
-    * survive the SAME three predicates the scan would apply — kind/resolution
-    * ([[resolutionFilter]]'s rule), probe base cells (bc), and intersection
-    * with the scan's own [[probeEnvelopes]] — plus every current file the
-    * manifest does not cover (appended since the build; no stats -> must be
-    * read). Entries whose file no longer exists (rewritten partitions) are
-    * dropped against the live listing. None when no manifest exists.
-    *
-    * No Spark job: the predicates run in memory over the stats rows the
-    * [[FileState]] loaded once ([[loadedManifest]]), and only the probed
-    * base cells' entries are visited, so a selection costs
-    * O(entries of the probed base cells + uncovered), not O(all files). */
+  /** Driver-side file selection for a probe query, with no Spark job: the
+    * probed base cells' entries of the loaded stats ([[loadedManifest]])
+    * that pass the scan's own kind/resolution ([[resolutionFilter]]) and
+    * [[probeEnvelopes]] predicates and name a live file, plus every live
+    * file the manifest does not cover. None when no manifest exists. */
   private[graft] def selectFilesForProbes(name: String, targetRes: Int,
       cells: Seq[Long]): Option[ManifestSelection] = {
     val st = fileState(name)
@@ -2043,58 +2042,41 @@ class CellStore(spark: SparkSession, rootPath: String) {
   private def manifestSelection(name: String, st: FileState,
       selectedRel: Seq[String]): ManifestSelection = {
     val base = qualifiedDataDir(name)
-    val manifest = loadedManifest(name, st)
-    val uncovered = manifest.uncovered.map(rel => s"$base/$rel")
+    val rest = uncovered(name, st).map(rel => s"$base/$rel")
     ManifestSelection(
-      (selectedRel.map(rel => s"$base/$rel").filter(st.byPath.contains) ++ uncovered).distinct,
-      manifestFiles = manifest.entries, currentFiles = st.dataFiles.size,
-      uncoveredFiles = uncovered.size)
+      (selectedRel.map(rel => s"$base/$rel").filter(st.byPath.contains) ++ rest).distinct,
+      manifestFiles = loadedManifest(name, st).covered.size, currentFiles = st.dataFiles.size,
+      uncoveredFiles = rest.size)
   }
 
-  /** The filtered manifest read a value-range selection collects.
-    * kind/resolution are the manifest's OUTER partition directories
-    * (round-5 layout), so [[resolutionFilter]] directory-prunes to the
-    * target resolutions before any file is opened — bc pruning cannot help
-    * here (the value dimension crosses base cells), but the per-resolution
-    * nesting keeps the read O(files at target resolution), flat in the
-    * total manifest size; the k2 interval predicate lands in `PushedFilters` (row-group
-    * skipping inside the surviving directories). Exposed for the spec
-    * that audits exactly that plan. None when the manifest predates k2
-    * stats. */
-  private[graft] def valueRangeCandidates(name: String, targetRes: Int,
-      lo: Any, hi: Any): Option[DataFrame] = {
-    val m = manifestFrame(name, fileState(name))
-    if (!m.columns.contains("k2_min")) return None
-    Some(m
-      .where(resolutionFilter(targetRes))
-      .where(col("k2_max") >= lit(lo) && col("k2_min") <= lit(hi))
-      .select("path"))
-  }
-
-  /** Driver-side file selection for a secondary-key range query: manifest
-    * entries whose [k2_min, k2_max] interval intersects [lo, hi] at the
-    * target resolution, plus uncovered (post-build) files — the same
-    * contract as [[selectFilesForProbes]] but pruning on the VALUE
-    * dimension. Only effective after [[zorderFiles]] has co-clustered the
-    * secondary key (unclustered files span the whole value domain and
-    * nothing prunes — correct either way, the row filter still applies).
-    * None when no manifest exists or the manifest predates k2 stats. */
+  /** [[selectFilesForProbes]]'s contract on the VALUE dimension: entries
+    * at the target resolution whose [k2_min, k2_max] meets [lo, hi] by
+    * Spark's own comparison (analyzed, for coercion and time zone, then
+    * evaluated on the driver), or whose k2 is unknown. Prunes once
+    * [[zorderFiles]] co-clusters the key. None without k2 stats. */
   private[graft] def selectFilesForValueRange(name: String, targetRes: Int,
       lo: Any, hi: Any): Option[ManifestSelection] = {
     val st = fileState(name)
     if (st.manifest.isEmpty) return None
-    valueRangeCandidates(name, targetRes, lo, hi)
-      .map(cand => manifestSelection(name, st, cand.collect().map(_.getString(0))))
+    val manifest = loadedManifest(name, st)
+    manifest.k2Type.map { t =>
+      val stats = LocalRelation(Seq("k2_min", "k2_max").map(AttributeReference(_, t)()))
+      val Filter(cond, _) = shims.ofRows(spark, stats)
+        .where(col("k2_max") >= lit(lo) && col("k2_min") <= lit(hi)).queryExecution.analyzed
+      val inRange = Predicate.createInterpreted(BindReferences.bindReference(cond, stats.output))
+      manifestSelection(name, st, manifest.entries.filter(e =>
+        keepsResolution(e.kind, e.resolution, targetRes) &&
+          (e.k2Min == null || e.k2Max == null || inRange.eval(InternalRow(e.k2Min, e.k2Max))))
+        .map(_.path))
+    }
   }
 
-  /** Secondary-key range scan at `targetRes`: rows whose declared secondary
-    * ORDER BY column lands in [lo, hi], with file-level manifest pruning
-    * when available ([[selectFilesForValueRange]]) and the row filter always
-    * applied on top — manifest staleness can only cost extra reads, never
-    * wrong rows. The scan that makes [[zorderFiles]] pay off. */
+  /** Secondary-key range scan at `targetRes`: rows whose secondary ORDER BY
+    * column lands in [lo, hi], file-pruned by [[selectFilesForValueRange]]
+    * when it can, with the row filter always on top. */
   def scanForValueRange(name: String, targetRes: Int, lo: Any, hi: Any): DataFrame = {
     val schema = getTableset(name)
-    val k2 = secondaryOrderKey(schema).getOrElse(throw new IllegalArgumentException(
+    val (k2, _) = secondaryOrderKey(schema).getOrElse(throw new IllegalArgumentException(
       s"tableset '$name' declares no ORDER BY column after h3index — " +
         "scanForValueRange needs a secondary sort key"))
     val base = selectFilesForValueRange(name, targetRes, lo, hi) match {
@@ -2105,10 +2087,8 @@ class CellStore(spark: SparkSession, rootPath: String) {
       .where(col(k2) >= lit(lo) && col(k2) <= lit(hi))
   }
 
-  /** Read exactly the manifest-selected files, with the full partition-aware
-    * schema (the data dir as base path keeps the Hive partition columns; the
-    * declared read schema pins their types independently of which subset of
-    * directories survived). An empty selection is an empty frame, not a scan. */
+  /** Read exactly the manifest-selected files under the declared schema,
+    * partition columns included; an empty selection is an empty frame. */
   private def manifestScan(name: String, sel: ManifestSelection): DataFrame =
     readFilesMasked(name, statusesOf(name, sel.paths), pendingDeletes(name))
 
@@ -2214,7 +2194,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
 
   def zorderFilesWhere(name: String, touched: org.apache.spark.sql.Column): Unit = {
     val schema = getTableset(name)
-    val k2 = secondaryOrderKey(schema).getOrElse(throw new IllegalArgumentException(
+    val (k2, _) = secondaryOrderKey(schema).getOrElse(throw new IllegalArgumentException(
       s"tableset '$name' declares no ORDER BY column after h3index — " +
         "zorderFiles needs a second dimension to interleave"))
     // the Morton bucketing normalizes via a double cast — a non-numeric key

@@ -2,11 +2,13 @@ package graft.store
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.util.Try
+
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.store.CellStore.DeleteMutation
 import graft.util.Memo
@@ -18,24 +20,21 @@ import graft.util.Memo
   *  - `deletes`: the pending lightweight-delete markers, in id order;
   *  - `manifest`: the manifest's files and footer schema, when one is built;
   *  - memoized on first use: the declared read schema, the parsed Hive
-  *    partitions of the data and manifest files, the stored compacted
-  *    resolutions, and the manifest's stats rows ([[ManifestStats]], one
-  *    collect), against which every probe set picks its files on the
-  *    driver with no Spark job (selections are not memoized). The stats
-  *    add one small row per manifest entry to the state's one `FileStatus`
-  *    per data file: the same order of driver memory.
+  *    partitions, the stored compacted resolutions, the manifest's stats
+  *    ([[ManifestStats]], unless a writer installed them) and the live
+  *    files they do not cover.
   *
   * The value holds no session-bound object, so one JVM-wide map serves
-  * every session and every [[CellStore]] instance at a root (the SQL TVFs
-  * build a fresh instance per call). It is invalidated as a whole: every
-  * same-JVM mutator and both manifest writers drop it through
-  * [[CellStore.invalidateFileCaches]], and the next read rebuilds it.
-  * Writers outside this JVM (or manual file surgery) are not seen until
-  * the caller runs `invalidateFileCaches` itself. */
+  * every session and every [[CellStore]] instance at a root. Same-JVM
+  * mutators drop it ([[CellStore.invalidateFileCaches]]), except that an
+  * insert keeps the loaded stats over its new listing and the manifest
+  * writers install the stats they wrote ([[FileState.replace]]). Writers
+  * outside this JVM are not seen until the caller invalidates. */
 private[store] final class FileState(
     val dataFiles: Seq[FileStatus],
     val deletes: Seq[DeleteMutation],
-    val manifest: Option[(Seq[FileStatus], StructType)]) {
+    val manifest: Option[(Seq[FileStatus], StructType)],
+    stats: Option[ManifestStats] = None) {
 
   val dataPaths: Seq[String] = dataFiles.map(_.getPath.toString)
   lazy val byPath: Map[String, FileStatus] = dataPaths.zip(dataFiles).toMap
@@ -43,9 +42,21 @@ private[store] final class FileState(
   private val memo = new ConcurrentHashMap[Any, Memo.Cell[Any]]()
   private def memoized[T](key: Any)(build: => T): T =
     Memo.getOrBuild(memo, key)(build).asInstanceOf[T]
+  stats.foreach(s => memo.put("manifestStats", new Memo.Cell(s)))
 
   /** The manifest's stats rows, loaded on first use. */
   def manifestStats(load: => ManifestStats): ManifestStats = memoized("manifestStats")(load)
+
+  /** The live files (relative paths) the manifest does not cover. */
+  def uncovered(build: => Seq[String]): Seq[String] = memoized("uncovered")(build)
+
+  /** A successor with the same deletes, carrying the stats, if loaded,
+    * unless `manifest` and `stats` replace them. */
+  def next(dataFiles: Seq[FileStatus] = dataFiles,
+      manifest: Option[(Seq[FileStatus], StructType)] = manifest,
+      stats: Option[ManifestStats] = loadedStats.map(_.asInstanceOf[ManifestStats])): FileState =
+    new FileState(dataFiles, deletes, manifest, stats)
+  private def loadedStats = Option(memo.get("manifestStats")).flatMap(c => Try(c.value).toOption)
 
   /** The resolutions of the stored compacted partitions. */
   def compactedResolutions(build: => Set[Int]): Set[Int] =
@@ -55,13 +66,11 @@ private[store] final class FileState(
   def readSchema(build: => StructType): StructType = memoized("readSchema")(build)
 
   /** A parquet read over exactly `files`, a subset of `all` (the data files
-    * or the manifest files) under `root`, with no filesystem call and no
-    * listing job at planning. `root` is the base path: Hive partition
-    * columns are parsed from the paths below it, typed by `schema` where it
-    * names them. The partitions of `all` are parsed once per state and
-    * serve every `files` whose directories they cover (a partition none of
-    * `files` is in reads empty). An empty `files` plans a relation without
-    * partition columns; callers build their own empty frame instead. */
+    * or the manifest files) under the base path `root`, with no filesystem
+    * call at planning. Hive partition columns are parsed from the paths
+    * below `root` (typed by `schema` where it names them) once per state
+    * for `all`, serving every `files` whose directories they cover. An
+    * empty `files` plans a relation without partition columns. */
   def read(spark: SparkSession, root: Path, all: Seq[FileStatus], files: Seq[FileStatus],
       schema: StructType): DataFrame = {
     val (allPartitions, dirs) = memoized(root) {
@@ -80,20 +89,31 @@ private[store] final class FileState(
 }
 
 /** One manifest row: a data file's path relative to the data dir, its
-  * partition values and its h3index range. */
-private[store] final case class ManifestEntry(path: String, kind: String,
-    resolution: Int, bc: Long, minH3: Long, maxH3: Long)
+  * partition values, h3index range, row count and k2 range (Catalyst
+  * values, both null when unknown). */
+private[store] final case class ManifestEntry(path: String, kind: String, resolution: Int,
+    ph3: Long, bc: Long, minH3: Long, maxH3: Long, rows: Long, k2Min: Any, k2Max: Any)
 
-/** The manifest's row count, its rows by base cell, and the live files
-  * (relative paths) no row covers. */
-private[store] final case class ManifestStats(entries: Int,
-    byBc: Map[Long, Seq[ManifestEntry]], uncovered: Seq[String])
+/** The manifest's entries with h3index stats, every path it covers, and
+  * the type of its k2 columns when it has them. */
+private[store] final case class ManifestStats(entries: Seq[ManifestEntry],
+    covered: Set[String], k2Type: Option[DataType]) {
+  lazy val byBc: Map[Long, Seq[ManifestEntry]] = entries.groupBy(_.bc)
+  def ++(more: Seq[ManifestEntry]): ManifestStats =
+    copy(entries = entries ++ more, covered = covered ++ more.map(_.path))
+}
 
 private[store] object FileState {
   private val states = scala.collection.concurrent.TrieMap.empty[String, FileState]
 
   def get(key: String)(load: => FileState): FileState = states.getOrElseUpdate(key, load)
   def invalidate(key: String): Unit = { states.remove(key); () }
+  def peek(key: String): Option[FileState] = states.get(key)
+
+  /** Install `next` in place of `prev`, the state its writer read, or only
+    * invalidate when another writer replaced or dropped `prev` meanwhile. */
+  def replace(key: String, prev: Option[FileState], next: FileState => FileState): Unit =
+    if (!prev.exists(p => states.replace(key, p, next(p)))) invalidate(key)
 
   /** A file index whose listing answers from `files`, not the filesystem. */
   private def index(spark: SparkSession, root: Path, files: Seq[FileStatus],

@@ -199,25 +199,36 @@ class ManifestSpec extends AnyFunSuite with Matchers with SparkTestSession {
 
   test("50k-file manifest: value-range selection directory-prunes to the target resolution") {
     // the value dimension crosses base cells, so bc pruning cannot help a
-    // k2 range probe — the round-5 resolution-major layout keeps the read
-    // O(files at target resolution): a res-7 probe must plan res-7's 250
-    // leaf files, not all 500, with the k2 interval pushed to parquet
+    // k2 range probe: the selection filters every entry's resolution and
+    // k2 range on the driver, with no Spark job once the stats are loaded.
+    // The entries of both resolutions with k2_min < 300 name live (empty)
+    // files, so the predicates alone, not the liveness check, pick the
+    // survivors.
     val (s, _) = bigManifestFixture()
-    val df = s.valueRangeCandidates(name, 7, 120L, 180L)
-      .getOrElse(fail("manifest has k2 stats — candidates expected"))
-    val selected = df.collect().map(_.getString(0))
+    val data = java.nio.file.Paths.get(s.dataDir(name))
+    val manifest = spark.read.parquet(s.manifestPath(name).toString)
+    val live = manifest.where("k2_min < 300").select("path").collect().map(_.getString(0))
+    live should have size 1500
+    live.foreach { rel =>
+      Files.createDirectories(data.resolve(rel).getParent)
+      Files.createFile(data.resolve(rel))
+    }
+    s.invalidateFileCaches(name)
+    def entries(sel: CellStore.ManifestSelection): Seq[String] = {
+      sel.manifestFiles shouldBe 50000
+      sel.paths.dropRight(sel.uncoveredFiles)
+    }
+    entries(s.selectFilesForValueRange(name, 7, 0L, 0L)
+      .getOrElse(fail("manifest has k2 stats — a selection expected"))) should have size 250
+    val (sel, jobs) = graft.JobCount.of(spark)(s.selectFilesForValueRange(name, 7, 120L, 180L).get)
+    jobs shouldBe 0
     // [120, 180] intersects exactly files i=1 ([100,199]) of each res-7 bc
+    val selected = entries(sel)
     selected should have size 250
     all(selected) should include("kind=base/resolution=7/")
-    val scan = df.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case sc: org.apache.spark.sql.execution.FileSourceScanExec => sc
-    }.getOrElse(fail("no file scan in the value-range candidates plan"))
-    scan.metadata("PartitionFilters") should include("resolution")
-    val pushed = scan.metadata("PushedFilters")
-    pushed should include("k2_min")
-    pushed should include("k2_max")
-    // res-6 directories are never listed into the scan
-    scan.metrics("numFiles").value shouldBe 250L
+    selected.map(p => data.relativize(java.nio.file.Paths.get(new java.net.URI(p))).toString)
+      .toSet shouldBe
+      manifest.where("resolution = 7 AND k2_min = 100").select("path").collect().map(_.getString(0)).toSet
   }
 
   test("the SQL graft_cells TVF engages the manifest (file-pruned scan from pure SQL)") {
