@@ -425,24 +425,20 @@ object PipelineQueries {
   /** Banded LSH ANN (32 random hyperplanes, 8 bands x 4 bits, dim 64) for
     * the first 10 vectors, k=5 candidate re-rank. */
   def e2LshAnn(spark: SparkSession, dir: String): DataFrame = {
-    // the ranked top-k frame is memoized (t2-pairs precedent, round 13):
-    // TWO consumers execute this DAG per bench pass — the e2 gate itself
-    // and e13's recall measurement, which in production reads the
-    // retriever's OUTPUT table rather than re-running the retriever. The
-    // memo holds 50 rows; the signature/candidate DAG behind it is the
-    // expensive part.
-    memo(spark, ("e2topk", dir)) {
-      val e = emb(spark, dir)
-      val queries = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val corpus = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      // band count scales with the corpus (Ann.adaptiveKnnBands) — fixed
-      // 4-bit bands left candidates at ~n/2 per query (measured 27s at 100x
-      // sf0.1); the oracle derives the same count from its own COUNT(*)
-      Ann.knnLsh(queries, corpus, 5, 32, 64, Ann.adaptiveKnnBands(e.count()))
-        .select(col("query_id"), col("rnk"), col("neighbor_id"),
-          round(col("cos"), 4).as("cos_sim"))
-    }.orderBy(col("query_id"), col("rnk"))
+    // the gate's answer is computed per call, not memoized: e13's recall
+    // measurement re-runs this DAG, so both gates time the retriever
+    // (the shared intermediate, the embeddings frame, stays memoized)
+    val e = emb(spark, dir)
+    val queries = e.where(col("vec_id") < 10)
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val corpus = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
+    // band count scales with the corpus (Ann.adaptiveKnnBands) — fixed
+    // 4-bit bands left candidates at ~n/2 per query (measured 27s at 100x
+    // sf0.1); the oracle derives the same count from its own COUNT(*)
+    Ann.knnLsh(queries, corpus, 5, 32, 64, Ann.adaptiveKnnBands(e.count()))
+      .select(col("query_id"), col("rnk"), col("neighbor_id"),
+        round(col("cos"), 4).as("cos_sim"))
+      .orderBy(col("query_id"), col("rnk"))
   }
 
   /** Multiprobe LSH ANN (e11): e2 with query-side 1-bit-flip probing —

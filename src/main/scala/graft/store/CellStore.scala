@@ -5,15 +5,14 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BindReferences, Predicate}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.types._
@@ -36,6 +35,7 @@ import graft.schema._
  *
  *   <root>/<name>/schema.json                  declared schema (JSON, §1.3)
  *   <root>/<name>/data/kind=.../resolution=.../ph3=.../[pt=.../]  parquet
+ *   <root>/<name>/_log/<version>.json           the commit log ([[FileState]])
  *
  * Partition columns:
  *  - `kind`: base | compacted  (the reference's table-name suffix)
@@ -50,8 +50,10 @@ import graft.schema._
  * At scale this layout gives Hive-style partition pruning on kind/resolution
  * (the D7 query predicate), spatial pruning on ph3, and temporal pruning on
  * pt — the same skip-index effects the reference gets from ClickHouse
- * PARTITION BY, but free in Catalyst. Temporary staging tables (D6) collapse
- * into Spark job lineage: data becomes visible only on successful write.
+ * PARTITION BY, but free in Catalyst. Temporary staging tables (D6) become
+ * a per-job `_staging/<uuid>` dir: data becomes visible only when one log
+ * entry commits it, so the log, not the directory listing, is the
+ * tableset's state — every instance and JVM sees the same commits.
  */
 class CellStore(spark: SparkSession, rootPath: String) {
   import CellStore._
@@ -69,24 +71,9 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * every instance at this root shares them. */
   private def cacheKey(name: String): String = rootPath + "\u0000" + name
 
-  /** The tableset's cached [[FileState]], loaded on first use. */
-  private def fileState(name: String): FileState =
-    FileState.get(cacheKey(name)) {
-      val p = deletesPath(name)
-      val dels = if (!fs.exists(p)) Seq.empty else fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .filter(_.endsWith(".delete")).map(_.stripSuffix(".delete").toLong)
-        .sorted.map(readDeleteMarker(name, _))
-      new FileState(listParquet(dataPath(name)), dels, listManifest(name))
-    }
-
-  /** The manifest's files and footer schema, when one is built. */
-  private def listManifest(name: String): Option[(Seq[FileStatus], StructType)] =
-    Some(listParquet(manifestPath(name))).filter(files => files.nonEmpty && hasManifest(name))
-      .map(files => (files, parquetSchema(files.head)))
-
-  /** Drop the cached [[FileState]] of `name` — required after out-of-band
-    * writes (another JVM, manual file surgery). Same-JVM mutators keep it
-    * current themselves, whichever instance they go through. */
+  /** Drop the cached [[FileState]] of `name`, so the next read replays the
+    * log from disk — needed only after manual surgery on the tableset's
+    * files. Commits through any instance or JVM are seen without it. */
   def invalidateFileCaches(name: String): Unit = FileState.invalidate(cacheKey(name))
 
   // ---------------------------------------------------------------- catalog
@@ -232,8 +219,9 @@ class CellStore(spark: SparkSession, rootPath: String) {
     // declared schema, so the narrowed schema would make the tableset
     // unreadable AND un-materializable (applyDeletes reads masked too).
     // The probe frame must carry the PARTITION columns too (kind/resolution/
-    // ph3/pt*): deleteWhere analyzes against readDeclaredRaw, which includes
-    // them, so a pending delete on e.g. `resolution = 7` is perfectly legal —
+    // ph3/pt*): deleteWhere analyzes against the unmasked declared read,
+    // which includes them, so a pending delete on e.g. `resolution = 7` is
+    // perfectly legal —
     // probing the narrowed declared columns alone would make EVERY unrelated
     // dropColumn fail with a misleading "references it" error (ADVICE r5).
     // Built as a LEAF frame (createDataFrame of the narrowed struct), not
@@ -293,20 +281,18 @@ class CellStore(spark: SparkSession, rootPath: String) {
       updated, srcRes, newRes)
       .withColumn("resolution", lit(newRes))
       .withColumn("kind", lit("base"))
-    // retry safety: a previous attempt that died mid-write left partial
-    // kind=base/resolution=newRes files WITHOUT the schema update (it is
-    // written last) — since the schema says newRes does not exist, any such
-    // directory is garbage from a failed run; drop it so the retry cannot
-    // double-append
-    fs.delete(new Path(dataPath(name), s"kind=base/resolution=$newRes"), true)
-    // same append-commit critical section as insert() (shared _temporary
-    // staging + atomic listing diff)
-    CellStore.commitLock(cacheKey(name)).synchronized {
-      val preexisting = listDataFiles(name).toSet // empty without a data dir
-      writePartitioned(target, updated, name)
-      invalidateFileCaches(name)
-      recordSnapshot(name, preexisting, listDataFiles(name)) // the backfill is its own commit
-      writeSchema(name, updated)
+    // the backfill is its own append commit. Retry safety: an attempt that
+    // committed but died before the schema update (written last) left live
+    // kind=base/resolution=newRes files the schema does not declare — this
+    // commit removes them, so a retry never double-appends
+    withStaging(name) { staging =>
+      writePartitionedTo(target, updated, staging)
+      CellStore.commitLock(cacheKey(name)).synchronized {
+        val st = fileState(name)
+        val leftover = st.files.collect { case f if f.kind == "base" && f.resolution == newRes => f.path }
+        commitStaged(name, st, updated, staging, LogEntry.Append, removes = leftover)
+        writeSchema(name, updated)
+      }
     }
   }
 
@@ -315,8 +301,8 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * dying mid-write would leave a SHORT schema.json that bricks every
     * later [[getTableset]] — crash-consistent publish instead.
     *
-    * The temp name is UNIQUE per write (UUID suffix, like the snapshot /
-    * delete-marker paths) and the publish runs under the per-tableset
+    * The temp name is UNIQUE per write (UUID suffix, like log entry
+    * temps) and the publish runs under the per-tableset
     * commit lock: with a FIXED temp name and no lock, two concurrent
     * schema writers raced — the loser's tmp was consumed by the winner's
     * rename, its first rename returned false, and the delete+rename
@@ -403,27 +389,29 @@ class CellStore(spark: SparkSession, rootPath: String) {
     if (!fs.exists(root)) return Map.empty
     fs.listStatus(root).iterator
       .filter(_.isDirectory)
-      .flatMap { st =>
-        val sp = new Path(st.getPath, "schema.json")
-        if (fs.exists(sp)) {
-          val in = fs.open(sp)
-          val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-          Some(st.getPath.getName -> CompactedTableSchema.fromJson(json))
-        } else None
-      }
+      .flatMap(st => readSidecar(st.getPath.getName).map(st.getPath.getName -> _))
       .toMap
   }
 
-  /** D4: get one tableset's schema, error if absent. Reconciles the sidecar
-    * against the data dir's layout marker ([[alterPartitioning]]'s crash
-    * window): the marker travels with the data through the publish renames,
-    * so a sidecar that still declares the OLD h3Partitioning is healed here
-    * instead of silently mispruning ph3 (ADVICE r3, medium). */
-  def getTableset(name: String): CompactedTableSchema =
-    reconcileLayout(name, listTablesets().getOrElse(name,
-      throw new IllegalArgumentException(s"tableset '$name' does not exist under $rootPath")))
+  /** The tableset's schema.json as written, if it has one. */
+  private def readSidecar(name: String): Option[CompactedTableSchema] =
+    Some(schemaPath(name)).filter(fs.exists).map(p => CompactedTableSchema.fromJson(readText(p)))
 
-  private def layoutMarkerPath(name: String) = new Path(dataPath(name), "_layout.json")
+  private def readText(p: Path): String = new String(readBytes(p), "UTF-8")
+
+  private def readBytes(p: Path): Array[Byte] = {
+    val in = fs.open(p)
+    try in.readAllBytes() finally in.close()
+  }
+
+  /** D4: get one tableset's schema, error if absent. Reconciles the sidecar
+    * against the layout the log records ([[alterPartitioning]]'s crash
+    * window): the tag is committed with the rewritten files, so a sidecar
+    * that still declares the OLD h3Partitioning is healed here instead of
+    * silently mispruning ph3 (ADVICE r3, medium). */
+  def getTableset(name: String): CompactedTableSchema =
+    reconcileLayout(name, readSidecar(name).getOrElse(
+      throw new IllegalArgumentException(s"tableset '$name' does not exist under $rootPath")))
 
   private def layoutTag(p: H3Partitioning): String = p match {
     case H3Partitioning.BaseCell => "basecell"
@@ -438,26 +426,20 @@ class CellStore(spark: SparkSession, rootPath: String) {
       s"unrecognized h3-partitioning layout marker: '$other'")
   }
 
-  /** If the data dir carries a layout marker that disagrees with the
-    * sidecar's declared h3Partitioning, the sidecar is STALE (a crash
-    * between [[alterPartitioning]]'s data publish and its schema write) —
-    * trust the marker (it is atomic with the directory layout it describes)
-    * and heal the sidecar. No marker (tableset never re-partitioned) is a
-    * clean pass-through. */
+  /** If the log records a layout that disagrees with the sidecar's declared
+    * h3Partitioning, the sidecar is STALE (a crash between
+    * [[alterPartitioning]]'s commit and its schema write) — trust the log
+    * and heal the sidecar. No recorded layout (tableset never
+    * re-partitioned) is a clean pass-through. */
   private def reconcileLayout(name: String,
-      schema: CompactedTableSchema): CompactedTableSchema = {
-    val mp = layoutMarkerPath(name)
-    if (!fs.exists(mp)) return schema
-    val in = fs.open(mp)
-    val tag = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val actual = parseLayoutTag(tag)
-    if (actual == schema.h3Partitioning) schema
-    else {
-      val healed = schema.copy(h3Partitioning = actual).validated
-      writeSchema(name, healed)
-      healed
+      schema: CompactedTableSchema): CompactedTableSchema =
+    fileState(name).layout.map(parseLayoutTag) match {
+      case Some(actual) if actual != schema.h3Partitioning =>
+        val healed = schema.copy(h3Partitioning = actual).validated
+        writeSchema(name, healed)
+        healed
+      case _ => schema
     }
-  }
 
   /** The h3index column wrapped in an inline validity assertion: invalid
     * cells fail the evaluating job (codegen'd, no extra scan). */
@@ -593,31 +575,20 @@ class CellStore(spark: SparkSession, rootPath: String) {
       }
 
       val all = frames.reduce(_ unionByName _)
-      // the commit critical section, serialized per (root, tableset) JVM-wide:
-      // (a) FileOutputCommitter stages EVERY job under <data>/_temporary/0,
-      // so a concurrent writer's cleanupJob would delete this writer's task
-      // files; (b) the listing diff must not take in another commit's files
-      // (phantom rows in earlier-id as-of reads). Writers in separate drivers
-      // share _temporary too and need an external coordinator (the
-      // multi-writer contract: per-writer tablesets, or serialize).
-      CellStore.commitLock(cacheKey(name)).synchronized {
-        val read = FileState.peek(cacheKey(name))
-        val preexisting = listDataFiles(name).toSet
-        writePartitioned(all, schema, name)
-        // the new files are uncovered by the manifest, whose stats carry over
-        val listed = listParquet(dataPath(name))
-        FileState.replace(cacheKey(name), read, _.next(dataFiles = listed))
-        recordSnapshot(name, preexisting, listed.map(_.getPath.toString))
+      // the job writes to this insert's own staging dir, so concurrent
+      // inserts share no committer state; only the commit (move into
+      // data/, one log entry) is serialized per (root, tableset) JVM-wide
+      withStaging(name) { staging =>
+        writePartitionedTo(all, schema, staging)
+        CellStore.commitLock(cacheKey(name)).synchronized {
+          commitStaged(name, fileState(name), schema, staging, LogEntry.Append)
+        }
       }
     } finally {
       rolledUp.foreach(_.unpersist())
       compacted.unpersist()
     }
   }
-
-  private def writePartitioned(framesWithKindRes: DataFrame,
-      schema: CompactedTableSchema, name: String): Unit =
-    writePartitionedTo(framesWithKindRes, schema, dataPath(name))
 
   private def writePartitionedTo(framesWithKindRes: DataFrame,
       schema: CompactedTableSchema, target: Path): Unit = {
@@ -652,48 +623,29 @@ class CellStore(spark: SparkSession, rootPath: String) {
   /** `ALTER TABLE ... PARTITION BY` analogue: change the spatial
     * partitioning scheme (BaseCell <-> LowerResolution(d)) — the one layout
     * change dynamic partition overwrite cannot express, because the
-    * DIRECTORY STRUCTURE itself changes. Full rewrite, staged then swapped:
-    * the new layout is written completely to a staging dir (failure there
-    * deletes the staging and leaves the live data untouched), then two
-    * renames publish it. A crash between the renames leaves a
-    * `data_old_*` dir to restore by hand — the narrow window is documented
-    * rather than hidden; a transactional commit log is the lakehouse-grade
-    * upgrade path. The staged data carries a `_layout.json` marker naming
-    * its h3Partitioning, so schema and layout publish ATOMICALLY: a crash
-    * after the publish renames but before the sidecar write is healed by
-    * [[reconcileLayout]] on the next read instead of silently mispruning.
-    * Rewritten paths invalidate the manifest (dropped here; rebuild at
-    * will) and snapshot history (fails loudly at [[scanAsOf]]). */
+    * DIRECTORY STRUCTURE itself changes. Full rewrite as one log commit:
+    * the new layout is staged completely (a failure there leaves the live
+    * data untouched), moved into the data dir, and committed in one entry
+    * that removes every old file and records the new layout's tag, so
+    * schema and layout publish ATOMICALLY: a crash after the commit but
+    * before the sidecar write is healed by [[reconcileLayout]] on the next
+    * read instead of silently mispruning. Like any rewrite, it invalidates
+    * earlier snapshots (fails loudly at [[scanAsOf]]). */
   def alterPartitioning(name: String, newPartitioning: H3Partitioning): Unit =
       CellStore.commitLock(cacheKey(name)).synchronized {
-    // serialized with deleteWhere/insert: the staged full rewrite reads
-    // masked rows and replaces the whole data dir, then prunes every
-    // marker — a marker committed mid-stage would be pruned unapplied
+    // serialized with deleteWhere/insert: the rewrite reads masked rows and
+    // removes every file it read, which materializes every pending delete
     val schema = getTableset(name)
     if (schema.h3Partitioning == newPartitioning) return
     val updated = schema.copy(h3Partitioning = newPartitioning).validated
     val keep = (schema.columns.keys.toSeq :+ "kind" :+ "resolution").map(col)
-    val all = readDeclared(name).select(keep: _*)
-    val staging = new Path(tablesetPath(name), s"data_stage_${System.nanoTime()}")
-    try {
-      writePartitionedTo(all, updated, staging)
-      val mk = fs.create(new Path(staging, "_layout.json"), true)
-      try mk.write(layoutTag(updated.h3Partitioning).getBytes("UTF-8")) finally mk.close()
-    } catch { case t: Throwable => fs.delete(staging, true); throw t }
-    val old = new Path(tablesetPath(name), s"data_old_${System.nanoTime()}")
-    if (!fs.rename(dataPath(name), old))
-      throw new IllegalStateException(s"alterPartitioning: cannot move live data of '$name'")
-    if (!fs.rename(staging, dataPath(name))) {
-      fs.rename(old, dataPath(name)) // restore; staging left for inspection
-      throw new IllegalStateException(s"alterPartitioning: publish failed for '$name'")
+    val st = fileState(name)
+    withStaging(name) { staging =>
+      writePartitionedTo(readDeclared(name, st).select(keep: _*), updated, staging)
+      commitStaged(name, st, updated, staging, LogEntry.Rewrite, removes = st.files.map(_.path),
+        layout = Some(layoutTag(newPartitioning)))
     }
-    fs.delete(old, true)
-    fs.delete(manifestPath(name), true)
     writeSchema(name, updated)
-    invalidateFileCaches(name)
-    // the staged rewrite read masked rows and the whole data dir was
-    // replaced — every pending delete is materialized, markers empty out
-    pruneDeleteMarkers(name)
   }
 
   /** Range-repartition on (partition cols ++ ORDER BY key) before a
@@ -772,8 +724,8 @@ class CellStore(spark: SparkSession, rootPath: String) {
 
   /** D7 partition predicate: all compacted partitions at res <= target plus
     * the base partition at target — evaluated on Hive partition columns
-    * (planning-time pruning) and re-derivable driver-side from a manifest
-    * row's partition values. */
+    * (planning-time pruning) and re-derivable driver-side from a log
+    * record's partition values. */
   private[graft] def resolutionFilter(targetRes: Int): org.apache.spark.sql.Column =
     (col("kind") === "compacted" && col("resolution") <= targetRes) ||
       (col("kind") === "base" && col("resolution") === targetRes)
@@ -788,33 +740,24 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * absent from historical files, and a footer-inferred read would pick a
     * random file's schema — declared reads resolve it to NULL everywhere
     * instead. */
-  private[store] def readDeclared(name: String): DataFrame = {
-    val st = fileState(name)
-    if (st.deletes.isEmpty) readDeclaredRaw(name)
-    else readFilesMasked(name, st.dataFiles, st.deletes)
-  }
+  private[store] def readDeclared(name: String, st: FileState): DataFrame =
+    if (st.deletes.isEmpty) readDataFiles(name, st, st.dataFiles)
+    else readFilesMasked(name, st, st.dataFiles, st.deletes)
 
-  /** The declared-schema read WITHOUT the lightweight-delete mask —
-    * validation probes and the masked reader's own schema prototype. A
-    * tableset with ZERO live data files (possible once [[applyDeletes]] can
-    * unlink a fully-masked store) still reads as an empty frame with the
-    * partition columns a directory read would have inferred — downstream
-    * resolution/kind/ph3 predicates must keep resolving. */
-  private def readDeclaredRaw(name: String): DataFrame =
-    readDataFiles(name, fileState(name).dataFiles)
+  private[store] def readDeclared(name: String): DataFrame = readDeclared(name, fileState(name))
 
   /** Data files of `name` under the declared schema, planned from the
-    * cached [[FileState]] listing ([[FileState#read]]): a directory read
-    * would re-walk the partition tree on every query, and an explicit
-    * path list would re-stat every file — past
-    * `parallelPartitionDiscovery.threshold` as a Spark listing job. */
-  private def readDataFiles(name: String, files: Seq[FileStatus]): DataFrame =
+    * [[FileState]] ([[FileState#read]]): a directory read would re-walk the
+    * partition tree on every query, and an explicit path list would
+    * re-stat every file — past `parallelPartitionDiscovery.threshold` as a
+    * Spark listing job. No files (a new or fully-deleted tableset) still
+    * reads as an empty frame with the partition columns a directory read
+    * would have inferred — downstream resolution/kind/ph3 predicates must
+    * keep resolving. */
+  private def readDataFiles(name: String, st: FileState, files: Seq[FileStatus]): DataFrame =
     if (files.isEmpty) emptyDeclared(name)
-    else {
-      val st = fileState(name)
-      st.read(spark, fs.makeQualified(dataPath(name)), st.dataFiles, files,
-        st.readSchema(emptyDeclared(name).schema))
-    }
+    else st.read(spark, fs.makeQualified(dataPath(name)), files,
+      st.readSchema(emptyDeclared(name).schema))
 
   /** Empty frame in the shape a nonempty directory read infers: declared
     * columns, then kind (string) / resolution (int) / ph3 (int for BaseCell
@@ -922,7 +865,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
   /** The [min, max] h3index envelopes (one per (physical resolution, probe
     * base-cell group)) that bound every stored row matching some probe —
     * shared by the pushed row-group filter ([[probeRangeFilter]]) and the
-    * manifest's file-level pruning, so both prune from the SAME bounds. */
+    * log stats' file-level pruning, so both prune from the SAME bounds. */
   private[store] def probeEnvelopes(cells: Seq[Long],
       physRes: Seq[Int]): Seq[(Long, Long)] = {
     val groups: Seq[Seq[Long]] = {
@@ -946,6 +889,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
       knownCells: Option[Seq[Long]] = None,
       knownRes: Option[Seq[Int]] = None): DataFrame = {
     val schema = getTableset(name)
+    val st = fileState(name)
     require(targetRes <= schema.maxBaseResolution,
       s"query resolution $targetRes exceeds tableset max ${schema.maxBaseResolution}")
     require(cells.columns.length == 1,
@@ -977,18 +921,14 @@ class CellStore(spark: SparkSession, rootPath: String) {
             case H3Partitioning.LowerResolution(_) =>
               h3_get_base_cell(col("ph3")).cast("long").isin(bcs: _*)
           }
-          // file-level manifest pruning, never under a template (whose
-          // contract exposes the UNRESTRICTED pruned scan); row filters
-          // still apply on top, so a stale manifest costs IO, never rows
-          val fileSel =
-            if (template.isEmpty) selectFilesForProbes(name, targetRes, knownCells.get)
-            else None
-          fileSel match {
-            case Some(sel) =>
-              manifestScan(name, sel).where(resolutionFilter(targetRes)).where(pruned)
-            case None => scanForResolution(name, targetRes).where(pruned)
-          }
-        case _ => scanForResolution(name, targetRes)
+          // file-level pruning on the log's stats, never under a template
+          // (whose contract exposes the UNRESTRICTED pruned scan); row
+          // filters still apply on top
+          val files =
+            if (template.isEmpty) probeSelection(st, targetRes, knownCells.get).paths.map(st.byPath)
+            else st.dataFiles
+          readFilesMasked(name, st, files, st.deletes).where(resolutionFilter(targetRes)).where(pruned)
+        case _ => readDeclared(name, st).where(resolutionFilter(targetRes))
       }
       (knownCells, template) match {
         case (Some(cs), None) if cs.nonEmpty =>
@@ -1085,7 +1025,10 @@ class CellStore(spark: SparkSession, rootPath: String) {
     // a template that aggregated away the h3index column has no cells left
     // to uncompact — pass its result through untouched
     if (!doUncompact || !projected.columns.contains(h3Col)) projected
-    else if (!hasCompactedBelow(name, targetRes)) projected
+    // no stored compacted partition below the target (compaction-free
+    // tablesets, the Sum engine): no row is coarser than the target, so the
+    // plan skips the uncompaction join
+    else if (!st.files.exists(f => f.kind == "compacted" && f.resolution < targetRes)) projected
     else if (template.isEmpty && probeResSet.lengthCompare(1) == 0) {
       // A7, ONE-pass form (round 12): the uncompaction inner join applies
       // EXACTLY the semi-join's (res, parent-key) predicate, and with the
@@ -1111,34 +1054,6 @@ class CellStore(spark: SparkSession, rootPath: String) {
         Compaction.uncompactCoarseToProbes(coarse, targetRes, cellsDf, h3Col,
           knownProbeRes = knownProbeRes, broadcastProbes = broadcastProbes))
     }
-  }
-
-  /** True iff the tableset stores ANY compacted partition strictly below
-    * `targetRes`, the only rows a doUncompact query could see coarser than
-    * the target: read from the [[FileState]] listing's Hive segments,
-    * parsed once per state, so compaction-free tablesets (the Sum engine)
-    * skip the fine/coarse split and the uncompaction join in EVERY cell
-    * query's plan. Like a scan's file index, fixed when the frame is built. */
-  private def hasCompactedBelow(name: String, targetRes: Int): Boolean = {
-    val st = fileState(name)
-    st.compactedResolutions {
-      st.dataPaths.flatMap { p =>
-        // segment-wise parse, not a raw substring match: if the listing ever
-        // yields a differently-normalized layout, a silent non-match here
-        // would skip uncompaction and return coarse rows (wrong results with
-        // no error) — so a compacted segment whose resolution= neighbor does
-        // not parse fails LOUDLY instead (ADVICE r8)
-        val segs = p.split('/')
-        val i = segs.indexOf("kind=compacted")
-        if (i < 0) None
-        else Some(segs.lift(i + 1).filter(_.startsWith("resolution="))
-          .map(_.stripPrefix("resolution=")).filter(s => s.nonEmpty && s.forall(_.isDigit))
-          .getOrElse(throw new IllegalStateException(
-            s"tableset '$name': kind=compacted segment without a parseable " +
-              s"resolution= segment in data file path: $p"))
-          .toInt)
-      }.toSet
-    }.exists(_ < targetRes)
   }
 
   /** P4: templated query. `<[table]>` is replaced by a temp view over the
@@ -1233,17 +1148,17 @@ class CellStore(spark: SparkSession, rootPath: String) {
   private def mirrorMarker(name: String, targetRes: Int) =
     new Path(mirrorDir(name, targetRes), "_mirror.meta")
 
-  /** Freshness token of a mirror: sha-256 over the sorted relative data-file
-    * listing — any insert/optimize/compaction changes it, so a stale mirror
+  /** Freshness token of a mirror: sha-256 over the sorted relative paths of
+    * the live files — any insert/optimize/compaction changes it, so a stale mirror
     * can never answer a query. */
   private def listingToken(name: String): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
-    fileState(name).dataPaths.map(relToData(name, _)).sorted
-      .foreach(p => md.update(p.getBytes("UTF-8")))
+    val st = fileState(name)
+    st.files.map(_.path).sorted.foreach(p => md.update(p.getBytes("UTF-8")))
     // a lightweight delete changes no file, but it changes what every read
     // returns — fold pending mutations in so stale mirrors can never serve
-    // masked rows (capture size shrinks as markers prune, re-invalidating)
-    pendingDeletes(name).foreach(d =>
+    // masked rows (capture size shrinks as rewrites retire files)
+    st.deletes.foreach(d =>
       md.update(s"delete:${d.id}:${d.files.size}".getBytes("UTF-8")))
     md.digest().map("%02x".format(_)).mkString
   }
@@ -1266,7 +1181,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * raw scan, so repeated cell-keyed joins (the 100 TB overlay workload)
     * plan with ZERO Exchange from pure SQL. Any write to the tableset
     * invalidates the mirror (queries silently fall back to the live scan);
-    * rebuild at will — the mirror is derived data, like the manifest.
+    * rebuild at will — the mirror is derived data.
     * Returns the catalog table name. */
   def buildMirror(name: String, targetRes: Int, numBuckets: Int): String = {
     val key = CompactedTableSchema.ColH3Index
@@ -1275,7 +1190,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
     Bucketing.writeMirror(spark, df, table,
       fs.makeQualified(mirrorDir(name, targetRes)).toString, numBuckets, key)
     // 4 lines: buckets / key / freshness token / schema DDL (no newlines
-    // in toDDL) — same hand-rolled style as the layout marker
+    // in toDDL) — plain text, like the schema sidecar
     val meta = Seq(numBuckets.toString, key, listingToken(name),
       spark.table(table).schema.toDDL).mkString("\n")
     val out = fs.create(mirrorMarker(name, targetRes), true)
@@ -1303,107 +1218,170 @@ class CellStore(spark: SparkSession, rootPath: String) {
     Some(table)
   }
 
-  // -------------------------------------------------------------- snapshots
+  // -------------------------------------------------------------------- log
 
-  private def snapshotsPath(name: String) = new Path(tablesetPath(name), "_snapshots")
+  private def logPath(name: String) = new Path(tablesetPath(name), "_log")
+  private def entryPath(name: String, v: Long) = new Path(logPath(name), s"$v.json")
+  private val EntryName = """(\d+)\.json""".r
 
-  /** Record the file set an insert just added as snapshot N+1 (paths
-    * RELATIVE to the data dir, so a tableset rename keeps history valid).
-    * Local listing diff; a distributed commit protocol would report the
-    * written files directly — same contract, cheaper capture. */
-  private def recordSnapshot(name: String, before: Set[String], after: Seq[String]): Unit = {
-    val added = after.filterNot(before).map(relToData(name, _)).sorted
-    if (added.isEmpty) return
-    writeSnapshotList(name, claimSnapshotId(name), added)
+  /** The tableset's [[FileState]]: the cached one caught up with newer log
+    * entries (one `exists` call when there are none), or the log replayed
+    * on first use. */
+  private def fileState(name: String): FileState = {
+    val key = cacheKey(name)
+    val cached = FileState.peek(key).getOrElse(FileState.advance(key, loadState(name)))
+    var st = cached
+    while (fs.exists(entryPath(name, st.version + 1)))
+      st = st.applied(st.version + 1, readEntry(name, st.version + 1).get)
+    if (st eq cached) st else FileState.advance(key, st)
   }
 
-  /** Atomically claim the next snapshot id via exclusive create of a hidden
-    * `.N.claim` marker. Two concurrent inserts would otherwise both compute
-    * last+1 and the second `.list` publish would silently REPLACE the first
-    * writer's history entry (rename overwrites on POSIX). `create(path,
-    * overwrite = false)` is the one Hadoop primitive that refuses an
-    * existing path (atomic on HDFS; best-effort exists-check on local FS —
-    * the loser of the rare local race bumps and retries on the next
-    * conflict). Claims are never deleted: a crash between claim and publish
-    * just leaves a skipped id (readers iterate actual `.list` files, so id
-    * gaps cost nothing), and a few empty marker files per tableset lifetime
-    * is noise next to the data. Same-JVM appends are fully serialized by
-    * insert()'s commit lock (listing diffs never interleave); claims protect
-    * the CROSS-JVM metadata case, where concurrent listings can still
-    * overlap — [[scanAsOf]] reads the union distinct, so cross-JVM overlap
-    * affects bytes listed, never duplicates rows (an unclaimed concurrent
-    * writer's files may surface one id early there; same-JVM they cannot).
-    * SCOPE: the cross-JVM claim is atomic only on filesystems with atomic
-    * exclusive create (HDFS-like). On local FS and S3A, create(path,
-    * overwrite=false) is check-then-create, so two cross-JVM writers can
-    * both "win" — [[writeSnapshotList]]'s read-back verify turns the
-    * resulting silent overwrite into a loud, retryable failure. */
-  private def claimSnapshotId(name: String): Long = {
-    val dir = snapshotsPath(name)
-    fs.mkdirs(dir)
-    val claimed = fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith(".") && n.endsWith(".claim") =>
-        n.stripPrefix(".").stripSuffix(".claim").toLong }
-    var id = (snapshotIds(name) ++ claimed).foldLeft(0L)(math.max) + 1
-    var out = -1L
-    var attempts = 0
-    while (out < 0) {
-      val claim = new Path(dir, s".$id.claim")
-      try {
-        fs.create(claim, false).close()
-        out = id
-      } catch {
-        case e: java.io.IOException =>
-          // only a GENUINE collision (someone else holds the claim) means
-          // "bump and retry" — a persistent FS failure (permissions, disk
-          // full) must surface, not spin forever
-          if (!fs.exists(claim)) throw e
-          attempts += 1
-          if (attempts > 10000) throw new IllegalStateException(
-            s"claimSnapshotId('$name'): $attempts consecutive claim collisions — " +
-              "claims directory corrupt or a runaway writer", e)
-          id += 1
+  /** The log replayed to its latest version; an old-layout tableset (data
+    * files, no log) converts first ([[convertOldLayout]]). */
+  private def loadState(name: String): FileState =
+    logVersions(name).orElse {
+      if (!fs.exists(dataPath(name))) None
+      else { convertOldLayout(name); logVersions(name) }
+    }.filter(_.nonEmpty).fold(FileState.empty(qualifiedDataDir(name)))(vs => replay(name, vs.max))
+
+  private def logVersions(name: String): Option[Seq[Long]] =
+    try Some(fs.listStatus(logPath(name)).toSeq.map(_.getPath.getName)
+      .collect { case EntryName(v) => v.toLong })
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** The state at version `to`: the entries back to the latest checkpoint
+    * at or below it (else to the first entry), applied forward. */
+  private def replay(name: String, to: Long): FileState = {
+    @annotation.tailrec
+    def back(v: Long, acc: List[(Long, LogEntry)]): List[(Long, LogEntry)] =
+      readEntry(name, v) match {
+        case Some(e) if e.op != LogEntry.Checkpoint && v > 0 => back(v - 1, (v -> e) :: acc)
+        case Some(e) => (v -> e) :: acc
+        case None => acc
+      }
+    back(to, Nil).foldLeft(FileState.empty(qualifiedDataDir(name))) {
+      case (st, (v, e)) => st.applied(v, e)
+    }
+  }
+
+  private def readEntry(name: String, v: Long): Option[LogEntry] =
+    try Some(LogEntry.fromJson(readBytes(entryPath(name, v))))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** One-time conversion of an old-layout tableset (data files, no log):
+    * one checkpoint from a listing plus footers, folding in the pending
+    * `_deletes` markers so masked rows stay masked, numbered at the highest
+    * old snapshot id so that earlier history reads as vacuumed. The old
+    * `_snapshots`, `_deletes` and `manifest` are ignored from then on; a
+    * `_layout.json` marker of an interrupted [[alterPartitioning]] becomes
+    * the checkpoint's layout. */
+  private def convertOldLayout(name: String): Unit = {
+    def listed(dir: String): Seq[Path] =
+      try fs.listStatus(new Path(tablesetPath(name), dir)).toSeq.map(_.getPath)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val marker = new Path(dataPath(name), "_layout.json")
+    val layout = Some(marker).filter(fs.exists).map(readText(_).trim)
+    val sidecar = readSidecar(name).getOrElse(throw new IllegalStateException(
+      s"tableset '$name' has data but no schema.json to convert it with — run recoverTableset"))
+    val schema = layout.fold(sidecar)(t => sidecar.copy(h3Partitioning = parseLayoutTag(t)))
+    val adds = footerEntries(name, schema, listParquet(dataPath(name)))
+    val live = adds.map(_.path).toSet
+    val deletes = listed("_deletes").filter(_.getName.endsWith(".delete"))
+      .map(p => LogEntry.deleteMarker(readBytes(p)))
+      .map(d => d.copy(files = d.files.filter(live))).filter(_.files.nonEmpty).sortBy(_.id)
+    val top = (listed("_snapshots").map(_.getName).collect {
+      case n if n.endsWith(".list") => n.stripSuffix(".list").toLong
+    } ++ deletes.map(_.id)).foldLeft(0L)(math.max)
+    fs.mkdirs(logPath(name))
+    // a concurrent converter may win the version: both checkpoint one listing
+    publish(name, top, LogEntry.toJson(LogEntry(LogEntry.Checkpoint, adds, deletes = deletes,
+      ids = Seq(top).filter(_ > 0), k2Type = secondaryOrderKey(schema).map(_._2), layout = layout)))
+    ()
+  }
+
+  /** Publish `entry` as the next log version over `read`, the state its
+    * writer read, and install the state it leads to. A commit landing
+    * since `read` (another JVM's: same-JVM writers hold the commit lock)
+    * fails it loudly, as its writer read a superseded state, unless it is
+    * a plain append, which just goes after that commit. */
+  private def commit(name: String, read: FileState, entry: LogEntry): FileState = {
+    val payload = LogEntry.toJson(entry)
+    val plainAppend = entry.op == LogEntry.Append && entry.removes.isEmpty
+    fs.mkdirs(logPath(name))
+    @annotation.tailrec
+    def attempt(st: FileState): FileState = {
+      if (st.version != read.version && !plainAppend) throw new IllegalStateException(
+        s"'$name' changed during this ${entry.op}: version ${st.version} was committed " +
+          s"after version ${read.version}, which it read — retry")
+      if (publish(name, st.version + 1, payload))
+        FileState.advance(cacheKey(name), st.applied(st.version + 1, entry))
+      else {
+        val next = fileState(name)
+        if (next.version == st.version)
+          throw new IllegalStateException(s"cannot publish version ${st.version + 1} of '$name'")
+        attempt(next)
       }
     }
-    out
+    attempt(fileState(name))
   }
 
-  /** Write a .list via temp + rename: an in-place overwrite truncates first,
-    * so a crash mid-write would leave a silently SHORT list — scanAsOf
-    * would then return fewer rows than the historical state with no error
-    * (the files still exist, so the invalidation check can't catch it).
-    *
-    * After the rename the list is READ BACK and compared: on filesystems
-    * without atomic exclusive create (local FS, S3A) two cross-JVM writers
-    * can both "win" the same claim (check-then-create race), and the later
-    * publish would silently replace the earlier history entry — exactly
-    * the loss the claim exists to prevent. The read-back turns that silent
-    * loss into a loud failure for the overwritten writer (whose caller can
-    * retry the insert's metadata commit). The residual window — the rival
-    * publishing AFTER this writer's verify — is the FS's non-atomicity,
-    * not recoverable client-side: the cross-JVM claim guarantee is atomic
-    * only on stores with atomic exclusive create (HDFS-like); elsewhere
-    * this check narrows the race from "any concurrent claim" to
-    * "concurrent publish within the verify round-trip". */
-  private def writeSnapshotList(name: String, id: Long, rels: Seq[String]): Unit = {
-    val payload = rels.mkString("\n")
-    val tmp = new Path(snapshotsPath(name), s".$id.list.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(payload.getBytes("UTF-8")) finally out.close()
-    val dst = new Path(snapshotsPath(name), s"$id.list")
-    publishAtomic(tmp, dst, s"snapshot $id of '$name'")
-    val back = {
-      val buf = new Array[Byte](fs.getFileStatus(dst).getLen.toInt)
-      val in = fs.open(dst)
-      try in.readFully(0, buf) finally in.close()
-      new String(buf, "UTF-8")
+  /** Claim log version `v` by publishing `payload` as its entry: temp write,
+    * rename, read-back, like every metadata commit, except that a taken name
+    * is never replaced. False when another writer holds `v`: the name
+    * exists, a no-clobber rename (HDFS) refuses, or, where rename clobbers
+    * (local FS, S3A), the read-back finds the other writer's entry. The
+    * residual window, a rival renaming after this read-back, is that
+    * filesystem's missing exclusive rename, not recoverable client-side. */
+  private def publish(name: String, v: Long, payload: Array[Byte]): Boolean = {
+    val dst = entryPath(name, v)
+    if (fs.exists(dst)) return false
+    val tmp = new Path(logPath(name), s".$v.json.${java.util.UUID.randomUUID()}.tmp")
+    val out = fs.create(tmp, false)
+    try out.write(payload) finally out.close()
+    if (!fs.rename(tmp, dst)) { fs.delete(tmp, false); false }
+    else java.util.Arrays.equals(readBytes(dst), payload)
+  }
+
+  /** A fresh `_staging/<uuid>` dir for one job's output, removed afterwards
+    * (best-effort: a leftover is an ignored orphan). */
+  private def withStaging[T](name: String)(body: Path => T): T = {
+    val staging = new Path(tablesetPath(name), s"_staging/${java.util.UUID.randomUUID()}")
+    try body(staging) finally scala.util.Try(fs.delete(staging, true))
+  }
+
+  /** Commit the files a job wrote under `staging`: move them into the data
+    * dir, record them with their footer stats (read on the driver) in one
+    * log entry over `read`, with `removes`, the files a rewrite read, then
+    * unlink those. Until the entry is published the moved files are
+    * orphans no read sees. Callers hold the commit lock. */
+  private def commitStaged(name: String, read: FileState, schema: CompactedTableSchema,
+      staging: Path, op: String, removes: Seq[String] = Nil,
+      layout: Option[String] = None): FileState = {
+    fs.mkdirs(logPath(name)) // a log exists first: moved files never read as an old layout
+    val base = fs.makeQualified(staging).toString + "/"
+    val moved = listParquet(staging).map { f =>
+      val dst = new Path(dataPath(name), f.getPath.toString.stripPrefix(base))
+      fs.mkdirs(dst.getParent)
+      if (!fs.rename(f.getPath, dst))
+        throw new IllegalStateException(s"cannot move staged file ${f.getPath} into '$name'")
+      f.setPath(fs.makeQualified(dst))
+      f
     }
-    if (back != payload)
-      throw new IllegalStateException(
-        s"snapshot $id of '$name': read-back mismatch after publish — a " +
-          "concurrent cross-JVM writer claimed the same id (non-atomic " +
-          "exclusive create on this filesystem) and overwrote this list; " +
-          "retry the commit")
+    val st = commit(name, read, LogEntry(op, footerEntries(name, schema, moved), removes,
+      k2Type = secondaryOrderKey(schema).map(_._2), layout = layout))
+    unlink(name, removes)
+    st
+  }
+
+  /** Best-effort removal of files (relative paths) a published entry
+    * removed, with the partition directories that leaves empty: the entry
+    * already took them out of the tableset, so a failure only leaves
+    * orphans. */
+  private def unlink(name: String, rels: Seq[String]): Unit = scala.util.Try {
+    rels.foreach(r => fs.delete(new Path(dataPath(name), r), false))
+    rels.flatMap(_.split('/').toSeq.init.inits.filter(_.nonEmpty).map(_.mkString("/"))).distinct
+      .sortBy(d => -d.count(_ == '/')).map(new Path(dataPath(name), _))
+      .foreach(d => if (fs.listStatus(d).isEmpty) fs.delete(d, false))
   }
 
   private def relToData(name: String, abs: String): String = {
@@ -1414,259 +1392,146 @@ class CellStore(spark: SparkSession, rootPath: String) {
     else abs
   }
 
-  /** Snapshot ids in commit order (empty if the tableset predates snapshot
-    * support or was never inserted into). */
-  def snapshotIds(name: String): Seq[Long] = {
-    val p = snapshotsPath(name)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.endsWith(".list")).map(_.stripSuffix(".list").toLong).sorted
+  /** Every parquet file under `dir`, with fully-qualified paths (scheme-less
+    * ones would resolve against the DEFAULT filesystem in spark.read).
+    * Manual walk, NOT fs.listFiles(recursive): a job's transient
+    * `_temporary` subtree is skipped, and tolerated when it vanishes
+    * between list and stat (the recursive iterator throws instead). */
+  private def listParquet(dir: Path): Seq[FileStatus] = {
+    val out = mutable.ArrayBuffer.empty[FileStatus]
+    val stack = mutable.Stack[Path](dir)
+    while (stack.nonEmpty) {
+      val entries =
+        try fs.listStatus(stack.pop())
+        catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+      entries.foreach { st =>
+        val n = st.getPath.getName
+        if (st.isDirectory) {
+          if (!n.startsWith("_") && !n.startsWith(".")) stack.push(st.getPath)
+        } else if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) {
+          st.setPath(fs.makeQualified(st.getPath))
+          out += st
+        }
+      }
+    }
+    out.toSeq
   }
 
+  /** The data dir as a fully-qualified URI string (no trailing slash) —
+    * the base every relative file path resolves against for reading. */
+  private def qualifiedDataDir(name: String): String =
+    fs.makeQualified(dataPath(name)).toString.stripSuffix("/")
+
+  // -------------------------------------------------------------- snapshots
+
+  /** Snapshot ids in commit order: the append and delete versions of the
+    * log that time travel still reads (empty if nothing was committed). */
+  def snapshotIds(name: String): Seq[Long] = fileState(name).ids
+
   /** Time travel: the tableset's rows as of snapshot `snapshotId` (that
-    * insert and every earlier one). Append-only history reads exactly; an
-    * optimize/compaction REWRITES files, which invalidates earlier
-    * snapshots — that surfaces as a loud error here, not silently-wrong
-    * rows (rewrites preserve current content, not history; a store that
-    * must keep history vacuums instead of rewriting). */
+    * commit and every earlier one), replayed from the log. Append-only
+    * history reads exactly; a rewrite (optimize, compaction, drop) REMOVES
+    * the files it read, which invalidates earlier snapshots — that surfaces
+    * as a loud error here, not silently-wrong rows (rewrites preserve
+    * current content, not history; a store that must keep history vacuums
+    * instead of rewriting). */
   def scanAsOf(name: String, snapshotId: Long): DataFrame = {
-    val ids = snapshotIds(name)
-    require(ids.contains(snapshotId), s"tableset '$name' has no snapshot $snapshotId (have: ${ids.mkString(", ")})")
-    val base = qualifiedDataDir(name)
-    // distinct: concurrent appends can each list the other's files into
-    // their own snapshot (see claimSnapshotId) — reading a file once per
-    // appearance would duplicate its rows
-    val paths = ids.filter(_ <= snapshotId)
-      .flatMap(readSnapshotList(name, _)).distinct.map(rel => s"$base/$rel")
     val st = fileState(name)
-    val missing = paths.filterNot(st.byPath.contains)
+    require(st.ids.contains(snapshotId),
+      s"tableset '$name' has no snapshot $snapshotId (have: ${st.ids.mkString(", ")})")
+    val asOf = replay(name, snapshotId)
+    val missing = asOf.files.map(_.path).filterNot(st.byRel.contains)
     if (missing.nonEmpty) throw new IllegalStateException(
       s"snapshot $snapshotId of '$name' was invalidated by a rewrite " +
         s"(deduplicate/replace/compactFiles): ${missing.size} file(s) no longer exist")
-    // deletes are time-travel points too: a mutation committed at id d
-    // masks this snapshot's rows iff d <= snapshotId (captured files only)
-    readFilesMasked(name, paths.map(st.byPath), st.deletes.filter(_.id <= snapshotId))
+    // deletes are time-travel points too: the as-of state masks with the
+    // deletes committed up to it, on their captured files
+    readFilesMasked(name, st, asOf.dataFiles, asOf.deletes)
   }
 
   /** [[scanForResolution]] against a snapshot. */
   def scanForResolutionAsOf(name: String, targetRes: Int, snapshotId: Long): DataFrame =
     scanAsOf(name, snapshotId).where(resolutionFilter(targetRes))
 
-  /** Snapshot retention: keep the last `keepLast` snapshots time-travelable
-    * and fold everything older into ONE cumulative checkpoint list (the
-    * oldest kept id) — as-of states are cumulative, so early lists can only
-    * be dropped by merging them forward, never by deleting alone (that
-    * would silently lose files from later states). Vacuumed ids then fail
-    * [[scanAsOf]]'s existence check — "history starts at the checkpoint",
-    * the same contract as lakehouse snapshot expiry. Metadata-only: no data
-    * file is touched. */
+  /** Snapshot retention: keep the last `keepLast` snapshots time-travelable;
+    * older ids then fail [[scanAsOf]]'s existence check — "history starts
+    * at the oldest kept id", the lakehouse snapshot-expiry contract. Writes
+    * one checkpoint entry with the kept ids, which also bounds what a cold
+    * reader replays. Metadata-only: no data file is touched. */
   def vacuumSnapshots(name: String, keepLast: Int): Unit = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val ids = snapshotIds(name)
-    if (ids.size <= keepLast) return
-    val cutoff = ids(ids.size - keepLast) // oldest id that stays readable
-    val merged = ids.filter(_ <= cutoff).flatMap(readSnapshotList(name, _))
-      .distinct.sorted
-    writeSnapshotList(name, cutoff, merged) // temp+rename, never truncate-in-place
-    ids.filter(_ < cutoff).foreach { id =>
-      fs.delete(new Path(snapshotsPath(name), s"$id.list"), false)
+    CellStore.commitLock(cacheKey(name)).synchronized {
+      val st = fileState(name)
+      if (st.ids.size > keepLast) checkpoint(name, st, st.ids.takeRight(keepLast))
     }
   }
 
-  private def readSnapshotList(name: String, id: Long): Seq[String] = {
-    val in = fs.open(new Path(snapshotsPath(name), s"$id.list"))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    text.split("\n").toSeq.filter(_.nonEmpty)
+  /** A checkpoint entry: the whole state `st`, with snapshot ids `ids`. */
+  private def checkpoint(name: String, st: FileState, ids: Seq[Long]): Unit = {
+    commit(name, st, LogEntry(LogEntry.Checkpoint, st.files, deletes = st.deletes, ids = ids,
+      k2Type = st.k2Type, layout = st.layout))
+    ()
   }
 
   // ---------------------------------------------------------------- deletes
 
-  private def deletesPath(name: String) = new Path(tablesetPath(name), "_deletes")
-  private def deleteMarkerPath(name: String, id: Long) =
-    new Path(deletesPath(name), s"$id.delete")
-
   /** ClickHouse-style LIGHTWEIGHT DELETE: `DELETE FROM name WHERE pred`
     * masks matching rows at read time and removes them physically only when
-    * a later rewrite merges the files — the reference's ClickHouse backend
+    * a later rewrite reads their files — the reference's ClickHouse backend
     * inherits exactly this mutation model (`DELETE` sets a row mask applied
     * at SELECT; OPTIMIZE/merges materialize it). Here the mutation is a
-    * PREDICATE + the captured current file list:
+    * PREDICATE + the captured current file list, one log entry:
     *
-    *  - no data file is touched — the marker is O(metadata), like a
-    *    snapshot commit, which is what makes deletes viable at 100 TB
-    *    (a 100-file delete and a 1M-file delete both cost one marker write);
-    *  - every read path ([[scanForResolution]], [[queryCells]], manifest
+    *  - no data file is touched — the entry is O(metadata), like a
+    *    snapshot commit, which is what makes deletes viable at 100 TB;
+    *  - every read path ([[scanForResolution]], [[queryCells]], value-range
     *    reads, [[scanAsOf]]) applies `NOT coalesce(pred, false)` to the rows
     *    of CAPTURED files only — rows inserted AFTER the delete are never
     *    masked even when they match the predicate (ClickHouse semantics:
     *    DELETE affects rows that existed when it ran);
-    *  - predicate-masking is IDEMPOTENT, so partial rewrites need no
-    *    coordination: a rewrite reads masked rows, writes the survivors, and
-    *    the rewritten files drop out of the captured sets
-    *    ([[pruneDeleteMarkers]]); untouched captured files stay masked;
-    *  - `id` is claimed from the snapshot sequence and publishes an empty
-    *    snapshot list, so the delete is a time-travel point: `scanAsOf(id)`
-    *    sees it applied, `scanAsOf(id - 1)` does not.
+    *  - a rewrite reads masked rows, writes the survivors and removes the
+    *    files it read, so the delete stays pending exactly while a captured
+    *    file is live;
+    *  - the returned id is the entry's log version, a snapshot id, so the
+    *    delete is a time-travel point: `scanAsOf(id)` sees it applied,
+    *    earlier snapshots do not.
     *
     * The predicate must be deterministic (a `rand()` mask would change
     * per read) and resolvable against the declared + partition columns —
-    * both checked here, loudly. Returns the claimed mutation id, or -1 when
-    * the tableset holds no data files (nothing to capture). [[dropColumn]]
-    * refuses to drop a column a pending delete's predicate references —
-    * materialize first. */
+    * both checked here, loudly. Returns -1 when the tableset holds no data
+    * files (nothing to capture). [[dropColumn]] refuses to drop a column a
+    * pending delete's predicate references — materialize first. */
   def deleteWhere(name: String, predicateSql: String): Long = {
     getTableset(name) // existence + schema check
     val pred = expr(predicateSql)
-    val analyzed = readDeclaredRaw(name).where(pred).queryExecution.analyzed
+    val raw = fileState(name)
+    val analyzed = readDataFiles(name, raw, raw.dataFiles).where(pred).queryExecution.analyzed
     val det = analyzed.collect {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition.deterministic
     }.forall(identity)
     require(det, s"deleteWhere predicate must be deterministic, got: $predicateSql")
     CellStore.commitLock(cacheKey(name)).synchronized {
-      val files = fileState(name).dataPaths.map(relToData(name, _)).sorted
-      if (files.isEmpty) return -1L
-      val id = claimSnapshotId(name)
-      writeDeleteMarker(name, DeleteMutation(id, predicateSql, files))
-      writeSnapshotList(name, id, Seq.empty)
-      invalidateFileCaches(name)
-      id
+      val st = fileState(name)
+      if (st.files.isEmpty) return -1L
+      commit(name, st, LogEntry(LogEntry.Delete,
+        deletes = Seq(DeleteMutation(-1L, predicateSql, st.files.map(_.path).sorted)))).version
     }
   }
 
-  /** Pending (unmaterialized) delete mutations in id order, from the
-    * cached [[FileState]]; any same-JVM mutation invalidates. */
+  /** Pending (unmaterialized) delete mutations in id order. */
   def pendingDeletes(name: String): Seq[DeleteMutation] = fileState(name).deletes
 
-  /** Materialize every pending delete: rewrite exactly the partitions that
-    * contain captured files ([[compactFilesWhere]] — the masked read drops
-    * deleted rows on the way through), then remove captured files the
-    * dynamic overwrite could not replace (a partition whose every row is
-    * masked produces no output rows, so its directory is never overwritten —
-    * those files are 100% deleted rows by construction and are unlinked
-    * directly). Afterwards no marker remains and scans take the unmasked
-    * fast path again. Like any rewrite, invalidates earlier snapshots. */
+  /** Materialize every pending delete: rewrite exactly the captured files
+    * still live ([[rewriteFiles]]: the masked read drops deleted rows on
+    * the way through, and the commit removes every file it read, so no
+    * captured file is left and no delete stays pending). Scans then take
+    * the unmasked fast path again. Like any rewrite, invalidates earlier
+    * snapshots. */
   def applyDeletes(name: String): Unit =
       CellStore.commitLock(cacheKey(name)).synchronized {
-    // The commit lock spans snapshot -> rewrite -> unlink gate -> prune: a
-    // same-JVM deleteWhere can no longer commit a marker between the
-    // pending-delete snapshot and the rewrite's masked read (which would
-    // make the rewrite mask with a delete this call's unlink gate doesn't
-    // know, tripping the survivors check spuriously), nor between the
-    // rewrite and prune (which would lose the marker — see
-    // optimizePartitionsClustered's scaladoc). The entry-scoping below
-    // stays as the cross-JVM defense.
-    val dels = pendingDeletes(name)
-    if (dels.isEmpty) return
-    val dirs = dels.flatMap(_.files).map { r =>
-      val i = r.lastIndexOf('/')
-      if (i < 0) "" else r.substring(0, i)
-    }.distinct.filter(_.nonEmpty)
-    val touched = dirs.map { d =>
-      d.split('/').toSeq.flatMap { seg =>
-        val j = seg.indexOf('=')
-        if (j < 0) None
-        else Some(segmentPredicate(name, seg.substring(0, j), seg.substring(j + 1)))
-      }.reduce(_ && _)
-    }.reduceOption(_ || _).getOrElse(lit(false))
-    compactFilesWhere(name, touched)
-    // Scope the unlink pass to the ENTRY-TIME markers only (by id): a
-    // CROSS-JVM deleteWhere racing this materialization (same-JVM racers
-    // are excluded by the commit lock above) publishes a NEW marker
-    // capturing every current file — including untouched partitions full
-    // of live rows. Folding that marker into `leftover` would (a) trip the
-    // survivors gate spuriously and (b) mask survivor-counting with a
-    // delete this call never set out to materialize. The concurrent marker
-    // stays pending and is materialized by the NEXT applyDeletes — correct
-    // lightweight-delete semantics, not a skipped delete.
-    val entryIds = dels.map(_.id).toSet
-    val leftover = pendingDeletes(name).filter(d => entryIds(d.id))
-    if (leftover.nonEmpty) {
-      val files = leftover.flatMap(_.files).distinct
-        .map(rel => new Path(dataPath(name), rel)).filter(p => fs.exists(p))
-      if (files.nonEmpty) {
-        // SAFETY GATE before unlinking: a captured file that survived the
-        // touched-partition rewrite should contain ONLY masked rows (its
-        // partition produced no dynamic-overwrite output). VERIFY rather
-        // than assume — if any row survives the masks, the reconstructed
-        // partition predicate under-matched this layout (an escaping or
-        // typing edge) and unlinking would destroy live rows. Survivors are
-        // computed with the SAME per-file capture-group masking as reads
-        // ([[readFilesMasked]]), NOT a global conjunction of every pending
-        // predicate: in the ordering delete-A → insert → delete-B, a row in
-        // a delete-B-only file that happens to match delete-A's predicate is
-        // LIVE (A never captured that file) and must count as a survivor.
-        val survivors = liveRowsInCaptured(name, files.map(_.toString), leftover)
-        if (survivors > 0) throw new IllegalStateException(
-          s"applyDeletes('$name'): captured file(s) the partition-scoped rewrite " +
-            "did not replace still contain live rows — the reconstructed partition " +
-            "predicate under-matched this layout; run compactFiles(name) (full " +
-            "materializing rewrite) and retry. No file was unlinked.")
-        files.foreach { p => fs.delete(p, false); () }
-        invalidateFileCaches(name)
-        pruneDeleteMarkers(name)
-      }
-    }
-  }
-
-  /** Count (bounded at 1) of LIVE rows in `absFiles` under merge-on-read
-    * semantics — [[applyDeletes]]'s unlink safety gate. Uses the SAME
-    * per-file capture-group masking as reads ([[readFilesMasked]]): each
-    * file is masked only by the deletes that CAPTURED it. A global
-    * conjunction of every pending predicate would wrongly zero out a live
-    * row that matches an older delete which never captured its file
-    * (ordering delete-A → insert → delete-B), letting the gate pass on a
-    * file that still holds live data (ADVICE r5, medium). */
-  private[store] def liveRowsInCaptured(name: String, absFiles: Seq[String],
-      dels: Seq[DeleteMutation]): Long =
-    readFilesMasked(name, statusesOf(name, absFiles), dels).limit(1).count()
-
-  /** File statuses of live data files `paths`, from the cached listing. */
-  private def statusesOf(name: String, paths: Seq[String]): Seq[FileStatus] = {
-    val known = fileState(name).byPath
-    paths.map(p => known(fs.makeQualified(new Path(p)).toString))
-  }
-
-  /** Typed equality predicate for one `col=value` partition-directory
-    * segment (shared by [[applyDeletes]]'s touched-partition reconstruction):
-    * values are Hive-unescaped, the NULL partition sentinel matches isNull,
-    * and the numeric partition columns compare with typed literals — a raw
-    * string comparison coerces BOTH sides to DOUBLE, corrupting ph3
-    * equality past 2^53 (the [[dropPartitionsWhere]] hazard). */
-  private def segmentPredicate(name: String, colName: String,
-      raw: String): org.apache.spark.sql.Column = {
-    val value = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      .unescapePathName(raw)
-    if (value == "__HIVE_DEFAULT_PARTITION__") return col(colName).isNull
-    colName match {
-      case "resolution" => col(colName) === lit(value.toInt)
-      case "ph3" | "pt" => col(colName) === lit(value.toLong)
-      case c if c.startsWith("pt_") =>
-        val declared = getTableset(name)
-        val src = c.stripPrefix("pt_")
-        if (declared.columns.get(src).exists(_.dataType.isTemporal))
-          col(c) === lit(value.toLong)
-        else declared.toStructType.fields.find(_.name == src)
-          .map(f => col(c) === lit(value).cast(f.dataType))
-          .getOrElse(col(c) === lit(value))
-      case _ => col(colName) === lit(value)
-    }
-  }
-
-  /** Drop captured-file entries that no longer exist (rewritten away) from
-    * every pending marker; a marker whose capture set empties is removed —
-    * the delete is fully materialized. Called after every rewrite. */
-  private def pruneDeleteMarkers(name: String): Unit = {
     val st = fileState(name)
-    if (st.deletes.isEmpty) return
-    val current = st.dataPaths.map(relToData(name, _)).toSet
-    st.deletes.foreach { d =>
-      val remaining = d.files.filter(current)
-      if (remaining.isEmpty) { fs.delete(deleteMarkerPath(name, d.id), false); () }
-      else if (remaining.size < d.files.size)
-        writeDeleteMarker(name, d.copy(files = remaining))
-    }
-    invalidateFileCaches(name)
+    val captured = st.deletes.flatMap(_.files).distinct
+    if (captured.nonEmpty) rewriteFiles(name, st, captured, (all, _) => all, clusterKey = null)
   }
 
   /** ClickHouse `ALTER TABLE ... DROP PARTITION` generalized to a partition
@@ -1679,29 +1544,38 @@ class CellStore(spark: SparkSession, rootPath: String) {
     *
     * The predicate must reference ONLY partition columns
     * (kind/resolution/ph3/pt/pt_*) — the [[deduplicateWhere]] contract, and
-    * here it is also what makes the operation DRIVER-ONLY: the distinct
-    * partition tuples are parsed from the cached file listing and the
-    * predicate is evaluated over that tiny LOCAL frame (partition-count
-    * rows), so the only Spark job is the one-partition local-frame
-    * evaluation — no data file is ever opened. NULL evaluates to
-    * not-dropped. Like any rewrite, dropping invalidates earlier snapshots
-    * (scanAsOf fails loudly on missing files) and prunes pending delete
-    * markers whose captured files vanish; stale manifest entries are
-    * dropped against the live listing by construction. Returns the number
-    * of directories removed. */
+    * here it is also what makes the operation DRIVER-ONLY
+    * ([[partitionDirsWhere]]): no data file is ever opened. NULL evaluates
+    * to not-dropped. One log entry removes the directories' files, which
+    * are then unlinked; like any rewrite, dropping invalidates earlier
+    * snapshots (scanAsOf fails loudly) and retires the dropped files from
+    * pending deletes' capture sets. Returns the number of directories
+    * removed. */
   def dropPartitionsWhere(name: String, touched: org.apache.spark.sql.Column): Int =
       CellStore.commitLock(cacheKey(name)).synchronized {
-    // serialized with deleteWhere/insert for the same reason as
-    // optimizePartitionsClustered: listing -> unlink -> prune must not
-    // interleave with a marker commit capturing the dirs being dropped
     getTableset(name)
-    if (!fs.exists(dataPath(name))) return 0
-    val rels = fileState(name).dataPaths.map(relToData(name, _))
-    val dirs = rels.flatMap { r =>
+    val st = fileState(name)
+    val dirs = partitionDirsWhere(name, st, touched).toSet
+    val files = st.files.map(_.path).filter(p => dirs(p.substring(0, p.lastIndexOf('/') max 0)))
+    if (files.nonEmpty) {
+      commit(name, st, LogEntry(LogEntry.Rewrite, removes = files))
+      unlink(name, files)
+    }
+    dirs.size
+  }
+
+  /** The partition directories (relative to the data dir) of `st`'s files
+    * whose partition values satisfy `touched`: the distinct directories are
+    * parsed from the log's paths and the predicate is evaluated over that
+    * tiny LOCAL frame (partition-count rows, no Spark job). A reference to a
+    * non-partition column fails analysis loudly (UNRESOLVED_COLUMN). */
+  private def partitionDirsWhere(name: String, st: FileState,
+      touched: org.apache.spark.sql.Column): Seq[String] = {
+    val dirs = st.files.map(_.path).flatMap { r =>
       val i = r.lastIndexOf('/')
       if (i < 0) None else Some(r.substring(0, i))
     }.distinct
-    if (dirs.isEmpty) return 0
+    if (dirs.isEmpty) return Nil
     val colNames = dirs.head.split('/').toSeq.flatMap { seg =>
       val j = seg.indexOf('=')
       if (j < 0) None else Some(seg.substring(0, j))
@@ -1717,7 +1591,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
         if (j < 0) None else Some(seg.substring(0, j))
       }
       require(cs == colNames,
-        s"dropPartitionsWhere('$name'): inconsistent partition layout — " +
+        s"partition predicate on '$name': inconsistent partition layout — " +
           s"directory '$d' has partition columns $cs but '${dirs.head}' has " +
           s"$colNames; repair the layout (compactFiles) before dropping")
     }
@@ -1731,15 +1605,11 @@ class CellStore(spark: SparkSession, rootPath: String) {
         else Some(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
           .unescapePathName(seg.substring(j + 1)))
       }.map(v => if (v == "__HIVE_DEFAULT_PARTITION__") null else v)
-      org.apache.spark.sql.Row.fromSeq(d +: vals)
+      Row.fromSeq(d +: vals)
     }
-    val schemaT = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("__dir",
-        org.apache.spark.sql.types.StringType, false) +:
-        colNames.map(c => org.apache.spark.sql.types.StructField(c,
-          org.apache.spark.sql.types.StringType, true)))
-    val untyped = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), schemaT)
+    val schemaT = StructType(StructField("__dir", StringType, false) +:
+      colNames.map(c => StructField(c, StringType, true)))
+    val untyped = spark.createDataFrame(rows.asJava, schemaT)
     // type the partition values: a string-vs-long comparison coerces BOTH
     // sides to DOUBLE in Spark, which silently corrupts equality on ph3
     // values past 2^53 (LowerResolution partitioning stores full h3 longs)
@@ -1759,62 +1629,26 @@ class CellStore(spark: SparkSession, rootPath: String) {
         case _ => df
       }
     }
-    // resolve the predicate against the local frame: a non-partition column
-    // reference fails analysis loudly (UNRESOLVED_COLUMN) — the same
-    // contract deduplicateWhere enforces, discovered one step later
-    val matching = local.where(coalesce(touched, lit(false)))
-      .select(col("__dir")).collect().map(_.getString(0))
-    matching.foreach(d => fs.delete(new Path(dataPath(name), d), true))
-    if (matching.nonEmpty) {
-      invalidateFileCaches(name)
-      pruneDeleteMarkers(name)
-    }
-    matching.length
-  }
-
-  /** Marker JSON, written temp + rename like every other metadata commit. */
-  private def writeDeleteMarker(name: String, d: DeleteMutation): Unit = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = m.createObjectNode()
-    node.put("id", d.id)
-    node.put("predicate", d.predicate)
-    val arr = node.putArray("files")
-    d.files.foreach(arr.add)
-    val payload = m.writerWithDefaultPrettyPrinter().writeValueAsBytes(node)
-    fs.mkdirs(deletesPath(name))
-    val tmp = new Path(deletesPath(name), s".${d.id}.delete.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(payload) finally out.close()
-    val dst = deleteMarkerPath(name, d.id)
-    publishAtomic(tmp, dst, s"delete marker ${d.id} of '$name'")
-  }
-
-  private def readDeleteMarker(name: String, id: Long): DeleteMutation = {
-    val in = fs.open(deleteMarkerPath(name, id))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-    val files = (0 until node.get("files").size())
-      .map(i => node.get("files").get(i).asText())
-    DeleteMutation(node.get("id").asLong(), node.get("predicate").asText(), files)
+    local.where(coalesce(touched, lit(false)))
+      .select(col("__dir")).collect().map(_.getString(0)).toSeq
   }
 
   /** Read `files` under the declared schema with the delete mask applied
-    * per file group. Files are grouped DRIVER-SIDE (over the cached listing,
-    * the same O(files) class as manifest selection) by which mutations
+    * per file group. Files are grouped DRIVER-SIDE by which mutations
     * captured them — typically 2 groups: "captured by all pending deletes"
     * and "inserted since" — and each group reads with the conjunction of
     * its applicable `NOT coalesce(pred, false)` filters. Row-level filters
     * and partition pruning push into each union branch unchanged; a file in
     * no capture set reads raw, so post-delete inserts pay nothing. */
-  private def readFilesMasked(name: String, files: Seq[FileStatus],
+  private def readFilesMasked(name: String, st: FileState, files: Seq[FileStatus],
       dels: Seq[DeleteMutation]): DataFrame = {
     if (files.isEmpty) return emptyDeclared(name)
-    val groups = files.groupBy { st =>
-      val rel = relToData(name, st.getPath.toString)
+    val groups = files.groupBy { f =>
+      val rel = relToData(name, f.getPath.toString)
       dels.collect { case d if d.fileSet(rel) => d.id }
     }
     groups.map { case (ids, group) =>
-      val df = readDataFiles(name, group)
+      val df = readDataFiles(name, st, group)
       if (ids.isEmpty) df
       else {
         val keep = dels.filter(d => ids.contains(d.id))
@@ -1827,80 +1661,71 @@ class CellStore(spark: SparkSession, rootPath: String) {
 
   // --------------------------------------------------------------- manifest
 
-  private[store] def manifestPath(name: String) = new Path(tablesetPath(name), "manifest")
-
-  /** Whether [[buildManifest]] has published file statistics for `name`. */
-  def hasManifest(name: String): Boolean =
-    fs.exists(new Path(manifestPath(name), "_SUCCESS"))
-
-  /** Build the FILE-LEVEL data-skipping index, the Iceberg/Delta manifest
-    * applied to this layout: one row per data file with its partition
-    * values, h3index min/max and row count, so the DRIVER hands Spark only
-    * the files whose range meets a probe's envelopes — typically one or two
-    * per partition, as [[sortedForWrite]] gives them DISJOINT ranges.
-    *
-    * A maintenance op (like [[deduplicate]]) that reads no data: the rows
-    * come from parquet footers ([[footerEntries]]) and replace the manifest
-    * as one flat file ([[writeManifest]]). Queries stay CORRECT without
-    * rebuilding after writes: [[selectFilesForProbes]] unions uncovered
-    * files and drops entries whose file vanished. */
-  def buildManifest(name: String): Unit = {
-    val st = fileState(name)
-    val entries = footerEntries(name, st.dataFiles)
-    writeManifest(name, st, entries, SaveMode.Overwrite,
-      ManifestStats(Nil, Set.empty, secondaryOrderKey(getTableset(name)).map(_._2)) ++ entries)
+  /** Whether the tableset has per-file statistics: true once it has a log,
+    * as every commit records its files' footer stats. */
+  def hasManifest(name: String): Boolean = {
+    fileState(name) // an old layout converts first
+    fs.exists(logPath(name))
   }
 
-  /** Incremental manifest maintenance: footer rows for ONLY the files the
-    * manifest does not cover, appended as one more flat file (no job when
-    * none is). Entries of deleted files stay behind harmlessly until a
-    * [[buildManifest]]. A manifest with subdirectories (the partitioned
-    * layouts of earlier versions, which still read) is rebuilt flat. */
-  def refreshManifest(name: String): Unit = {
+  /** The FILE-LEVEL data-skipping index, the Iceberg/Delta manifest applied
+    * to this layout, is the log itself: every commit records its files'
+    * partition values, h3index min/max, row count and k2 range from their
+    * parquet footers ([[footerEntries]]), so the DRIVER hands Spark only the
+    * files whose range meets a probe's envelopes — typically one or two per
+    * partition, as [[sortedForWrite]] gives them DISJOINT ranges. Building
+    * it writes a checkpoint entry of the current state (Delta's checkpoint,
+    * Armbrust et al., VLDB 2020), so a cold reader replays one entry: no
+    * Spark job, no data or footer read. */
+  def buildManifest(name: String): Unit =
+    CellStore.commitLock(cacheKey(name)).synchronized {
+      val st = fileState(name)
+      checkpoint(name, st, st.ids)
+    }
+
+  /** Kept for callers of the manifest API: every commit already records its
+    * files' stats, so there is nothing to refresh. */
+  def refreshManifest(name: String): Unit =
     require(hasManifest(name),
       s"tableset '$name' has no manifest to refresh — run buildManifest first")
-    val st = fileState(name)
-    if (st.manifest.isEmpty || fs.listStatus(manifestPath(name)).exists(f =>
-        f.isDirectory && !f.getPath.getName.startsWith("_"))) return buildManifest(name)
-    val base = qualifiedDataDir(name)
-    val entries = footerEntries(name, uncovered(name, st).map(rel => st.byPath(s"$base/$rel")))
-    if (entries.nonEmpty)
-      writeManifest(name, st, entries, SaveMode.Append, loadedManifest(name, st) ++ entries)
-  }
 
-  /** The manifest rows of `files` from their parquet footers, read on the
-    * driver: partition values from the relative path, the h3index and k2
-    * ranges and row count from the row groups (k2 null, "unknown", unless
-    * its stats order values as Spark does). A file without h3index stats
-    * gets no row: it stays uncovered, so every query reads it. Stats cover
-    * the physical rows, a safe superset of the live ones under deletes. */
-  private def footerEntries(name: String, files: Seq[FileStatus]): Seq[ManifestEntry] = {
-    val schema = getTableset(name)
+  /** The log records of `files` from their parquet footers, read on the
+    * driver: partition values from the path relative to the data dir, the
+    * h3index and k2 ranges and row count from the row groups (k2 null,
+    * "unknown", unless its stats order values as Spark does; h3index the
+    * full Long range without stats, so every probe selects the file). Stats
+    * cover the physical rows, a safe superset of the live ones under
+    * deletes. */
+  private def footerEntries(name: String, schema: CompactedTableSchema,
+      files: Seq[FileStatus]): Seq[ManifestEntry] = {
     val conf = spark.sessionState.newHadoopConf()
-    files.flatMap { file =>
+    files.map { file =>
       val rel = relToData(name, file.getPath.toString)
       val parts = rel.split('/').map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
+      def part[T](k: String, parse: String => Option[T]): T = parts.get(k).flatMap(parse)
+        .getOrElse(throw new IllegalStateException(
+          s"tableset '$name': data file outside the kind=/resolution=/ph3= layout: $rel"))
+      val (kind, res, ph3) =
+        (part("kind", Some(_)), part("resolution", _.toIntOption), part("ph3", _.toLongOption))
       val groups = ParquetFileReader.readFooter(conf, file, ParquetMetadataConverter.NO_FILTER)
         .getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
       // column `c`'s stats per row group, when every group has a value range
       def stats(c: String) = Some(groups.map(_.getColumns.asScala
         .find(_.getPath.toDotString == c).map(_.getStatistics).orNull))
         .filter(ss => ss.nonEmpty && ss.forall(s => s != null && s.hasNonNullValue))
-      for (kind <- parts.get("kind"); res <- parts.get("resolution").flatMap(_.toIntOption);
-           ph3 <- parts.get("ph3").flatMap(_.toLongOption); h3 <- stats(CompactedTableSchema.ColH3Index))
-      yield {
-        val bc = if (schema.h3Partitioning == H3Partitioning.BaseCell) ph3
-          else H3.getBaseCell(ph3).toLong
-        val k2 = for {
-          (c, t) <- secondaryOrderKey(schema); ss <- stats(c); f <- k2Value(t, ss.head.`type`)
-        } yield {
-          val ord = TypeUtils.getInterpretedOrdering(t)
-          (ss.map(s => f(s.genericGetMin)).min(ord), ss.map(s => f(s.genericGetMax)).max(ord))
-        }
-        ManifestEntry(rel, kind, res, ph3, bc, h3.map(_.genericGetMin.asInstanceOf[Long]).min,
-          h3.map(_.genericGetMax.asInstanceOf[Long]).max, groups.map(_.getRowCount).sum,
-          k2.map(_._1).orNull, k2.map(_._2).orNull)
+      val h3 = stats(CompactedTableSchema.ColH3Index)
+      val bc = if (schema.h3Partitioning == H3Partitioning.BaseCell) ph3
+        else H3.getBaseCell(ph3).toLong
+      val k2 = for {
+        (c, t) <- secondaryOrderKey(schema); ss <- stats(c); f <- k2Value(t, ss.head.`type`)
+      } yield {
+        val ord = TypeUtils.getInterpretedOrdering(t)
+        (ss.map(s => f(s.genericGetMin)).min(ord), ss.map(s => f(s.genericGetMax)).max(ord))
       }
+      ManifestEntry(rel, kind, res, ph3, bc,
+        h3.fold(Long.MinValue)(_.map(_.genericGetMin.asInstanceOf[Long]).min),
+        h3.fold(Long.MaxValue)(_.map(_.genericGetMax.asInstanceOf[Long]).max),
+        groups.map(_.getRowCount).sum, k2.map(_._1).orNull, k2.map(_._2).orNull, file.getLen)
     }
   }
 
@@ -1922,154 +1747,57 @@ class CellStore(spark: SparkSession, rootPath: String) {
     }
   }
 
-  /** Write `entries` as one flat manifest file (a single-task job), then
-    * install `stats`, the rows after the write, in the successor of `st`. */
-  private def writeManifest(name: String, st: FileState, entries: Seq[ManifestEntry],
-      mode: SaveMode, stats: ManifestStats): Unit = {
-    val rows = entries.map(e => InternalRow.fromSeq(Seq(UTF8String.fromString(e.path),
-      UTF8String.fromString(e.kind), e.resolution, e.ph3, e.bc, e.minH3, e.maxH3, e.rows) ++
-      stats.k2Type.toSeq.flatMap(_ => Seq(e.k2Min, e.k2Max))))
-    shims.ofRows(spark, LocalRelation(manifestColumns(stats.k2Type), rows)).coalesce(1)
-      .write.mode(mode).parquet(manifestPath(name).toString)
-    FileState.replace(cacheKey(name), Some(st), _.next(manifest = listManifest(name), stats = Some(stats)))
-  }
-
   /** The first ORDER BY column after h3index and its type, if declared:
     * the key [[zorderFiles]] co-clusters with h3index and whose per-file
-    * range the manifest records for [[scanForValueRange]]. */
+    * range the log records for [[scanForValueRange]]. */
   private def secondaryOrderKey(schema: CompactedTableSchema): Option[(String, DataType)] =
     schema.orderByKey.filterNot(_ == CompactedTableSchema.ColH3Index).headOption
       .map(k2 => k2 -> schema.columns(k2).dataType.sparkType)
 
-  /** The flat manifest's columns, the k2 range's when `k2` is its type. */
-  private def manifestColumns(k2: Option[DataType]): Seq[AttributeReference] =
-    (Seq("path" -> StringType, "kind" -> StringType, "resolution" -> IntegerType,
-      "ph3" -> LongType, "bc" -> LongType, "min_h3" -> LongType, "max_h3" -> LongType,
-      "rows" -> LongType) ++ k2.toSeq.flatMap(t => Seq("k2_min" -> t, "k2_max" -> t)))
-      .map { case (n, t) => AttributeReference(n, t)() }
-
-  /** The manifest's stats rows (with k2 when present), held in the
-    * [[FileState]]: installed by a manifest writer, or loaded by one
-    * collect, flat or partitioned. A row with a null stat is no entry
-    * (it passes no predicate, as in SQL), but its path counts as covered. */
-  private def loadedManifest(name: String, st: FileState): ManifestStats =
-    st.manifestStats {
-      val (files, schema) = st.manifest.get
-      val k2Type = schema.find(_.name == "k2_min").map(_.dataType)
-      val rows = st.read(spark, fs.makeQualified(manifestPath(name)), files, files, schema)
-        .select(manifestColumns(k2Type).map(a => col(a.name).cast(a.dataType)): _*).collect()
-      val k2 = k2Type.map(CatalystTypeConverters.createToCatalystConverter)
-      val entries = rows.toSeq.collect {
-        case r @ Row(path: String, kind: String, res: Int, ph3: Long, bc: Long,
-            lo: Long, hi: Long, n: Long, _*) =>
-          ManifestEntry(path, kind, res, ph3, bc, lo, hi, n,
-            k2.map(_(r.get(8))).orNull, k2.map(_(r.get(9))).orNull)
-      }
-      ManifestStats(entries, rows.map(_.getString(0)).toSet, k2Type)
-    }
-
-  /** The live files (relative paths) the manifest does not cover. */
-  private def uncovered(name: String, st: FileState): Seq[String] = st.uncovered(
-    st.dataPaths.map(relToData(name, _)).filterNot(loadedManifest(name, st).covered))
-
-  /** Every parquet file under `dir`, with fully-qualified paths (scheme-less
-    * ones would resolve against the DEFAULT filesystem in spark.read). */
-  private def listParquet(dir: Path): Seq[FileStatus] = {
-    // manual walk, NOT fs.listFiles(recursive): a concurrent writer's
-    // transient `_temporary` subtree must be (a) skipped — its in-flight
-    // part files end in .parquet and would otherwise enter listings and
-    // snapshot lists, then vanish at that writer's commit — and (b)
-    // tolerated when it vanishes between list and stat (the recursive
-    // iterator throws instead)
-    val out = mutable.ArrayBuffer.empty[FileStatus]
-    val stack = mutable.Stack[Path](dir)
-    while (stack.nonEmpty) {
-      val entries =
-        try fs.listStatus(stack.pop())
-        catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
-      entries.foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory) {
-          if (!n.startsWith("_") && !n.startsWith(".")) stack.push(st.getPath)
-        } else if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) {
-          st.setPath(fs.makeQualified(st.getPath))
-          out += st
-        }
-      }
-    }
-    out.toSeq
-  }
-
-  /** All current data files of `name`, uncached — the mutation-side
-    * before/after diffs; query paths read the cached [[FileState]]. */
-  private def listDataFiles(name: String): Seq[String] =
-    listParquet(dataPath(name)).map(_.getPath.toString)
-
-  /** The Spark schema of one parquet file, from its footer on the driver. */
-  private def parquetSchema(file: FileStatus): StructType = {
-    val conf = spark.sessionState.newHadoopConf()
-    val footer = ParquetFileReader.readFooter(conf, file, ParquetMetadataConverter.SKIP_ROW_GROUPS)
-    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-  }
-
-  /** The data dir as a fully-qualified URI string (no trailing slash) —
-    * the base every relative file path resolves against for reading. */
-  private def qualifiedDataDir(name: String): String =
-    fs.makeQualified(dataPath(name)).toString.stripSuffix("/")
+  /** The log records of `name`'s live files. */
+  private[store] def manifestEntries(name: String): Seq[ManifestEntry] = fileState(name).files
 
   /** Driver-side file selection for a probe query, with no Spark job: the
-    * probed base cells' entries of the loaded stats ([[loadedManifest]])
-    * that pass the scan's own kind/resolution ([[resolutionFilter]]) and
-    * [[probeEnvelopes]] predicates and name a live file, plus every live
-    * file the manifest does not cover. None when no manifest exists. */
+    * probed base cells' files that pass the scan's own kind/resolution
+    * ([[resolutionFilter]]) and [[probeEnvelopes]] predicates. None for no
+    * probes. */
   private[graft] def selectFilesForProbes(name: String, targetRes: Int,
-      cells: Seq[Long]): Option[ManifestSelection] = {
-    val st = fileState(name)
-    if (cells.isEmpty || st.manifest.isEmpty) return None
+      cells: Seq[Long]): Option[ManifestSelection] =
+    Some(cells).filter(_.nonEmpty).map(probeSelection(fileState(name), targetRes, _))
+
+  private def probeSelection(st: FileState, targetRes: Int, cells: Seq[Long]): ManifestSelection = {
     val envs = probeEnvelopes(cells, (0 to targetRes).toSeq)
-    val byBc = loadedManifest(name, st).byBc
-    val selected = cells.map(H3.getBaseCell(_).toLong).distinct
-      .flatMap(bc => byBc.getOrElse(bc, Nil))
+    selection(st, cells.map(H3.getBaseCell(_).toLong).distinct
+      .flatMap(bc => st.byBc.getOrElse(bc, Nil))
       .filter(e => keepsResolution(e.kind, e.resolution, targetRes) &&
-        envs.exists { case (lo, hi) => e.minH3 <= hi && e.maxH3 >= lo })
-    Some(manifestSelection(name, st, selected.map(_.path)))
+        envs.exists { case (lo, hi) => e.minH3 <= hi && e.maxH3 >= lo }))
   }
 
-  /** A [[ManifestSelection]] from the manifest entries (relative paths) a
-    * selection kept: those whose file is still live, plus every live file
-    * the manifest does not cover. */
-  private def manifestSelection(name: String, st: FileState,
-      selectedRel: Seq[String]): ManifestSelection = {
-    val base = qualifiedDataDir(name)
-    val rest = uncovered(name, st).map(rel => s"$base/$rel")
-    ManifestSelection(
-      (selectedRel.map(rel => s"$base/$rel").filter(st.byPath.contains) ++ rest).distinct,
-      manifestFiles = loadedManifest(name, st).covered.size, currentFiles = st.dataFiles.size,
-      uncoveredFiles = rest.size)
-  }
+  private def selection(st: FileState, kept: Seq[ManifestEntry]): ManifestSelection =
+    ManifestSelection(kept.map(e => s"${st.dataDir}/${e.path}"),
+      manifestFiles = st.files.count(_.hasH3Stats), currentFiles = st.files.size,
+      uncoveredFiles = kept.count(!_.hasH3Stats))
 
-  /** [[selectFilesForProbes]]'s contract on the VALUE dimension: entries
-    * at the target resolution whose [k2_min, k2_max] meets [lo, hi] by
-    * Spark's own comparison (analyzed, for coercion and time zone, then
-    * evaluated on the driver), or whose k2 is unknown. Prunes once
-    * [[zorderFiles]] co-clusters the key. None without k2 stats. */
+  /** [[selectFilesForProbes]]'s contract on the VALUE dimension: files at
+    * the target resolution whose [k2_min, k2_max] meets [lo, hi] by Spark's
+    * own comparison (analyzed, for coercion and time zone, then evaluated
+    * on the driver), or whose k2 is unknown. Prunes once [[zorderFiles]]
+    * co-clusters the key. None without k2 stats. */
   private[graft] def selectFilesForValueRange(name: String, targetRes: Int,
-      lo: Any, hi: Any): Option[ManifestSelection] = {
-    val st = fileState(name)
-    if (st.manifest.isEmpty) return None
-    val manifest = loadedManifest(name, st)
-    manifest.k2Type.map { t =>
+      lo: Any, hi: Any): Option[ManifestSelection] =
+    valueRangeSelection(fileState(name), targetRes, lo, hi)
+
+  private def valueRangeSelection(st: FileState, targetRes: Int,
+      lo: Any, hi: Any): Option[ManifestSelection] =
+    st.k2Type.map { t =>
       val stats = LocalRelation(Seq("k2_min", "k2_max").map(AttributeReference(_, t)()))
       val Filter(cond, _) = shims.ofRows(spark, stats)
         .where(col("k2_max") >= lit(lo) && col("k2_min") <= lit(hi)).queryExecution.analyzed
       val inRange = Predicate.createInterpreted(BindReferences.bindReference(cond, stats.output))
-      manifestSelection(name, st, manifest.entries.filter(e =>
+      selection(st, st.files.filter(e =>
         keepsResolution(e.kind, e.resolution, targetRes) &&
-          (e.k2Min == null || e.k2Max == null || inRange.eval(InternalRow(e.k2Min, e.k2Max))))
-        .map(_.path))
+          (e.k2Min == null || e.k2Max == null || inRange.eval(InternalRow(e.k2Min, e.k2Max)))))
     }
-  }
 
   /** Secondary-key range scan at `targetRes`: rows whose secondary ORDER BY
     * column lands in [lo, hi], file-pruned by [[selectFilesForValueRange]]
@@ -2079,26 +1807,21 @@ class CellStore(spark: SparkSession, rootPath: String) {
     val (k2, _) = secondaryOrderKey(schema).getOrElse(throw new IllegalArgumentException(
       s"tableset '$name' declares no ORDER BY column after h3index — " +
         "scanForValueRange needs a secondary sort key"))
-    val base = selectFilesForValueRange(name, targetRes, lo, hi) match {
-      case Some(sel) => manifestScan(name, sel)
-      case None => readDeclared(name)
+    val st = fileState(name)
+    val base = valueRangeSelection(st, targetRes, lo, hi) match {
+      case Some(sel) => readFilesMasked(name, st, sel.paths.map(st.byPath), st.deletes)
+      case None => readDeclared(name, st)
     }
     base.where(resolutionFilter(targetRes))
       .where(col(k2) >= lit(lo) && col(k2) <= lit(hi))
   }
 
-  /** Read exactly the manifest-selected files under the declared schema,
-    * partition columns included; an empty selection is an empty frame. */
-  private def manifestScan(name: String, sel: ManifestSelection): DataFrame =
-    readFilesMasked(name, statusesOf(name, sel.paths), pendingDeletes(name))
-
   // --------------------------------------------------------------- optimize
 
   /** A12: full-row dedup across all accumulated inserts — the explicit
     * equivalent of `OPTIMIZE TABLE ... DEDUPLICATE` (`optimize.rs:20-113`).
-    * Publishes per-partition via dynamic partition overwrite (see
-    * [[deduplicateWhere]]); with the always-true predicate every partition
-    * is touched, but each is still swapped atomically at job commit. */
+    * Publishes as one log commit (see [[deduplicateWhere]]); with the
+    * always-true predicate every partition is touched. */
   def deduplicate(name: String): Unit = deduplicateWhere(name, lit(true))
 
   /** A11 + A12 partial optimization: dedup ONLY the partitions matched by
@@ -2107,12 +1830,12 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * `OPTIMIZE ... PARTITION p DEDUPLICATE` (`optimize.rs:20-83`, partition
     * list from A11 `optimize.rs:41-56`).
     *
-    * I/O is partition-scoped for real: the predicate prunes the scan to the
-    * touched partitions, the deduped result is staged (cutting the
-    * read-write-same-path conflict), and the staged partitions are published
-    * with DYNAMIC partition overwrite — untouched partition directories are
-    * never read, rewritten, or renamed. At 100 TB a post-insert optimize
-    * costs O(touched partitions), not a full-table rewrite.
+    * I/O is partition-scoped for real: the predicate picks the touched
+    * partitions' files on the driver, the deduped result is staged, and one
+    * log entry swaps the staged files in for exactly the files read —
+    * untouched partition directories are never read, rewritten, or renamed.
+    * At 100 TB a post-insert optimize costs O(touched partitions), not a
+    * full-table rewrite.
     *
     * The predicate MUST reference only partition columns — enforced by
     * analyzing its attribute references. This is a correctness requirement,
@@ -2127,9 +1850,8 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * (a naive where(p)/where(!p) split would silently delete it).
     *
     * Touched data is written ONCE: localCheckpoint materializes the deduped
-    * partitions (breaking the read-the-overwrite-target lineage), then a
-    * single dynamic-overwrite write publishes them. A failure before the
-    * job's commit leaves the live directory untouched; rerun to retry. */
+    * partitions, then a single staged write publishes them. A failure
+    * before the log commit leaves the tableset untouched; rerun to retry. */
   def deduplicateWhere(name: String, touched: org.apache.spark.sql.Column): Unit =
     optimizePartitions(name, touched, (all, _) => all.dropDuplicates())
 
@@ -2166,9 +1888,8 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * ranges) while preserving rows EXACTLY — duplicates across inserts
     * included ([[deduplicateWhere]] is the op that collapses those; keeping
     * the two separate mirrors ClickHouse's merge vs OPTIMIZE DEDUPLICATE
-    * distinction). Same partition-scoped dynamic-overwrite publication as
-    * the other optimize ops: untouched directories are never read or
-    * rewritten. Rebuild the manifest afterwards to restore file pruning. */
+    * distinction). Same partition-scoped publication as the other optimize
+    * ops: untouched directories are never read or rewritten. */
   def compactFilesWhere(name: String, touched: org.apache.spark.sql.Column): Unit =
     optimizePartitions(name, touched, (all, _) => all)
 
@@ -2179,7 +1900,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * plain h3index-first sort — after it, files within a directory carry
     * ranges that are tight on BOTH dimensions, so h3 probes keep their
     * row-group skipping AND secondary-key range queries prune at file level
-    * through the manifest's k2 stats ([[scanForValueRange]]). The
+    * through the log's k2 stats ([[scanForValueRange]]). The
     * multi-dimensional clustering Delta's OPTIMIZE ZORDER / Iceberg's
     * sort-order rewrite apply to the same problem; linearization follows
     * the classic Z-curve (Morton order).
@@ -2188,8 +1909,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * merged or dropped. Scale shape: per-column min/max is one aggregate
     * (a single driver row); the Z-value is pure codegen'd bit arithmetic;
     * clustering is one repartitionByRange on (partition cols, zval) — the
-    * same shuffle budget as any optimize rewrite. Rebuild the manifest
-    * afterwards to refresh file stats. */
+    * same shuffle budget as any optimize rewrite. */
   def zorderFiles(name: String): Unit = zorderFilesWhere(name, lit(true))
 
   def zorderFilesWhere(name: String, touched: org.apache.spark.sql.Column): Unit = {
@@ -2199,7 +1919,7 @@ class CellStore(spark: SparkSession, rootPath: String) {
         "zorderFiles needs a second dimension to interleave"))
     // the Morton bucketing normalizes via a double cast — a non-numeric key
     // would cast to NULL and interleave garbage SILENTLY (range reads stay
-    // type-agnostic: manifest min/max and the filters work on any ordered
+    // type-agnostic: the log's min/max and the filters work on any ordered
     // type; only the z-order rewrite needs numbers)
     require(schema.columns(k2).dataType.isNumber,
       s"zorderFiles: secondary ORDER BY column '$k2' is " +
@@ -2217,8 +1937,10 @@ class CellStore(spark: SparkSession, rootPath: String) {
             floor((c.cast("double") - mn) / range * 65535.0), lit(0.0)),
             lit(65535.0)).cast("long")
         }
-        val bh = bucket16(col(h3Col), b.getDouble(0), b.getDouble(1))
-        val bv = bucket16(col(k2), b.getDouble(2), b.getDouble(3))
+        // an empty frame (every row masked) has no bounds
+        def at(i: Int) = if (b.isNullAt(i)) 0.0 else b.getDouble(i)
+        val bh = bucket16(col(h3Col), at(0), at(1))
+        val bv = bucket16(col(k2), at(2), at(3))
         (0 until 16).foldLeft(lit(0L)) { (acc, i) =>
           acc
             .bitwiseOR(shiftleft(shiftright(bh, i).bitwiseAND(lit(1L)), 2 * i + 1))
@@ -2367,29 +2089,20 @@ class CellStore(spark: SparkSession, rootPath: String) {
     * and replaces the default (partition cols ++ ORDER BY) range/sort key —
     * the hook [[zorderFilesWhere]] uses to linearize on the Z-curve. The
     * key is an expression over row columns, so nothing extra lands in the
-    * written files. */
-  /** SERIALIZED with [[deleteWhere]]/insert on the per-tableset commit
-    * lock (held across the whole rewrite): a marker committed between this
-    * rewrite's masked read and its pruneDeleteMarkers would capture files
-    * the dynamic overwrite then replaces WITHOUT the new mask applied —
-    * prune would see every captured file gone, unlink the marker, and an
-    * ACKNOWLEDGED delete would silently un-happen. Same-JVM writers are
-    * the documented consistency domain; cross-JVM markers keep the
-    * entry-scoped defenses in [[applyDeletes]]. */
+    * written files. The touched partitions' files are found on the driver
+    * ([[partitionDirsWhere]]) and rewritten by [[rewriteFiles]]. */
   private def optimizePartitionsClustered(name: String,
       touched: org.apache.spark.sql.Column,
       collapse: (DataFrame, CompactedTableSchema) => DataFrame,
       clusterKey: DataFrame => org.apache.spark.sql.Column): Unit =
       CellStore.commitLock(cacheKey(name)).synchronized {
     val schema = getTableset(name)
-    val dp = dataPath(name)
-    if (!fs.exists(dp)) return
+    val st = fileState(name)
     // declared-schema read: a partition-scoped rewrite must carry added
     // columns (NULL for historical rows), not silently drop them because a
     // random file's footer predates the ALTER
-    val all = readDeclared(name)
-    val partCols0 = partitionColumns(all, schema)._2
-    val allPartCols = "kind" +: "resolution" +: "ph3" +: partCols0
+    val all = readDeclared(name, st)
+    val allPartCols = "kind" +: "resolution" +: "ph3" +: partitionColumns(all, schema)._2
     val allowed = (allPartCols ++ Seq("pt")).toSet ++
       all.columns.filter(_.startsWith("pt_")).toSet
     // analyze the filter to resolve the predicate's column references
@@ -2403,15 +2116,33 @@ class CellStore(spark: SparkSession, rootPath: String) {
       s"deduplicateWhere predicate may reference only partition columns " +
         s"(${allowed.mkString(", ")}); found: ${bad.mkString(", ")} — a row-level " +
         "predicate would delete the unmatched rows of partially-matched partitions")
-    val touchedSafe = coalesce(touched, lit(false))
-    val deduped = collapse(all.where(touchedSafe), schema)
-    if (deduped.isEmpty) return
+    val dirs = partitionDirsWhere(name, st, touched).toSet
+    val files = st.files.map(_.path).filter(p => dirs(p.substring(0, p.lastIndexOf('/') max 0)))
+    if (files.nonEmpty) rewriteFiles(name, st, files, collapse, clusterKey)
+  }
+
+  /** Rewrite `files` (relative paths of `st`): read them with the delete
+    * mask, `collapse`, write the result to staging in the write-path layout
+    * (or clustered on `clusterKey`), and commit it in one entry that
+    * removes exactly the files read — so every delete they were captured
+    * by is materialized on them, even when no row survives. SERIALIZED with
+    * [[deleteWhere]]/insert on the per-tableset commit lock (callers hold
+    * it across the whole rewrite): a delete committed between this masked
+    * read and the commit would capture files the commit then removes
+    * WITHOUT the new mask applied, and an ACKNOWLEDGED delete would
+    * silently un-happen. A cross-JVM commit in that window fails the
+    * rewrite's commit instead ([[commit]]). */
+  private def rewriteFiles(name: String, st: FileState, files: Seq[String],
+      collapse: (DataFrame, CompactedTableSchema) => DataFrame,
+      clusterKey: DataFrame => org.apache.spark.sql.Column): Unit = {
+    val schema = getTableset(name)
+    val read = readFilesMasked(name, st, files.map(f => st.byPath(s"${st.dataDir}/$f")), st.deletes)
+    val (withParts, partCols) = partitionColumns(collapse(read, schema), schema)
+    val allPartCols = "kind" +: "resolution" +: "ph3" +: partCols
     // checkpoint BEFORE the range repartition: repartitionByRange computes
     // its bounds with a separate SAMPLING job that re-executes the upstream
     // plan — without the checkpoint here, that sampling pass would re-run
-    // the whole touched-partition dedup a second time (and the checkpoint
-    // is needed anyway to break the read-the-overwrite-target lineage)
-    val (withParts, _) = partitionColumns(deduped, schema)
+    // the whole touched-partition collapse a second time
     val staged = withParts.localCheckpoint()
     val clustered =
       if (clusterKey == null)
@@ -2423,17 +2154,14 @@ class CellStore(spark: SparkSession, rootPath: String) {
           .repartitionByRange(spark.sessionState.conf.numShufflePartitions, key: _*)
           .sortWithinPartitions(key: _*)
       }
-    clustered
-      .write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .option("compression", parquetCodec(schema))
-      .partitionBy(allPartCols: _*)
-      .parquet(dp.toString)
-    invalidateFileCaches(name)
-    // the rewrite read masked rows, so the rewritten partitions' files have
-    // their deletes materialized — drop them from the capture sets
-    pruneDeleteMarkers(name)
+    withStaging(name) { staging =>
+      clustered.write
+        .option("compression", parquetCodec(schema))
+        .partitionBy(allPartCols: _*)
+        .parquet(staging.toString)
+      commitStaged(name, st, schema, staging, LogEntry.Rewrite, removes = files)
+    }
+    ()
   }
 
 }
@@ -2448,17 +2176,19 @@ object CellStore {
     commitLocks.getOrElseUpdate(key, new Object)
 
   /** A pending lightweight-delete mutation ([[CellStore.deleteWhere]]): rows
-    * of `files` (paths RELATIVE to the data dir, like snapshot lists — a
+    * of `files` (paths RELATIVE to the data dir, like every log record — a
     * tableset rename keeps them valid) matching `predicate` are masked at
-    * every read until a rewrite materializes the delete. `id` comes from the
-    * same claim sequence as snapshot ids, so inserts and deletes are totally
-    * ordered for time travel. */
+    * every read until a rewrite materializes the delete. `id` is the
+    * delete's log version, a snapshot id, so inserts and deletes are
+    * totally ordered for time travel. */
   final case class DeleteMutation(id: Long, predicate: String, files: Seq[String]) {
     @transient lazy val fileSet: Set[String] = files.toSet
   }
 
-  /** Result of the manifest's driver-side file pruning (counts exposed so
-    * specs/ops can assert the pruning actually pruned). */
+  /** Result of the driver-side file pruning on the log's stats (counts
+    * exposed so specs/ops can assert the pruning actually pruned):
+    * `manifestFiles` live files have h3index stats, `uncoveredFiles` of the
+    * selected ones do not. */
   private[graft] case class ManifestSelection(paths: Seq[String],
       manifestFiles: Int, currentFiles: Int, uncoveredFiles: Int)
 

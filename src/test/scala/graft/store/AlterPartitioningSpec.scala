@@ -82,8 +82,8 @@ class AlterPartitioningSpec extends AnyFunSuite with Matchers with SparkTestSess
       .select("h3index", "v").collect().map(r => (r.getLong(0), r.getLong(1)))
       .sorted.toSeq
     s.alterPartitioning(name, H3Partitioning.LowerResolution(2))
-    // simulate the crash window: the publish renames landed (new layout +
-    // its _layout.json marker) but the sidecar write did not
+    // simulate the crash window: the rewrite's log commit landed (new
+    // layout + its tag) but the sidecar write did not
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$root/$name/schema.json"), staleSidecar)
     // the raw-bytes restore bypasses Hadoop's ChecksumFileSystem — drop the
@@ -103,14 +103,20 @@ class AlterPartitioningSpec extends AnyFunSuite with Matchers with SparkTestSess
       .h3Partitioning shouldBe H3Partitioning.LowerResolution(2)
   }
 
-  test("same-partitioning alter is a no-op; manifest is dropped on change") {
+  test("same-partitioning alter is a no-op; a layout change keeps file stats") {
     val (s, _) = freshStore()
     s.buildManifest(name)
+    val ids = s.snapshotIds(name)
     s.alterPartitioning(name, H3Partitioning.BaseCell) // already BaseCell
-    s.hasManifest(name) shouldBe true
+    s.snapshotIds(name) shouldBe ids
     s.alterPartitioning(name, H3Partitioning.LowerResolution(1))
-    s.hasManifest(name) shouldBe false
-    s.buildManifest(name) // rebuild works against the new layout
+    // the rewrite's commit recorded the new files' footer stats
     s.hasManifest(name) shouldBe true
+    val probe = H3.toChildren(H3.fromParts(20, 5, Seq(0, 0, 0, 0, 0)), 7)(7)
+    val sel = s.selectFilesForProbes(name, 7, Seq(probe)).get
+    sel.uncoveredFiles shouldBe 0
+    sel.paths.size should be < sel.currentFiles
+    s.buildManifest(name) // a checkpoint works against the new layout
+    s.queryCells(name, Seq(probe), 7).count() shouldBe 1L
   }
 }

@@ -12,11 +12,9 @@ import graft.h3.H3
 import graft.schema.{AggregationMethod => Agg, GraftDataType => T, _}
 
 /** Multi-writer snapshot safety: concurrent appends must each land as their
-  * OWN snapshot (claimSnapshotId's exclusive-create id claim), and overlap
-  * between concurrently-captured file lists must never duplicate rows in an
-  * as-of read (scanAsOf reads the union distinct). Before the claim, two
-  * writers computing last+1 together would publish the same id — POSIX
-  * rename overwrites, so one writer's history silently vanished. */
+  * OWN snapshot (each commit claims its own log version), an as-of read
+  * must never duplicate rows, and what a killed writer leaves behind (a
+  * temp entry, staged files) must claim nothing. */
 class ConcurrentSnapshotSpec extends AnyFunSuite with Matchers with SparkTestSession {
 
   private val name = "conc_snap_ts"
@@ -66,24 +64,27 @@ class ConcurrentSnapshotSpec extends AnyFunSuite with Matchers with SparkTestSes
     s.scanForResolution(name, 7).count() shouldBe (writers + 1) * 49L
   }
 
-  test("a crashed claim (orphan marker) skips an id without breaking reads") {
+  test("a crashed commit (orphan temp entry, uncommitted staged files) breaks no read or commit") {
     val root = Files.createTempDirectory("graft_conc2_").toString
     val s = CellStore(spark, root)
     s.insert(name, frame(cellsFor(0), 1),
       createSchema = Some(CompactedTableSchema.builder(name)
         .h3BaseResolutions(Seq(7)).useCompaction(false)
         .addAggregatedColumn("v", T.Int64, Agg.Max).build()))
-    // simulate a writer that claimed id 2 and died before publishing
+    // a writer that staged its files, moved one into the data dir and wrote
+    // its entry's temp, then died before the rename that claims version 2
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
-    val claim = new org.apache.hadoop.fs.Path(
-      s"$root/$name/_snapshots/.2.claim")
-    fs.create(claim, false).close()
+    Seq("_log/.2.json.dead.tmp", "_staging/dead/kind=base/resolution=7/ph3=20/part-0.parquet",
+        "data/kind=base/resolution=7/ph3=20/part-dead.parquet").foreach { rel =>
+      val o = fs.create(new org.apache.hadoop.fs.Path(s"$root/$name/$rel"), true)
+      try o.write("half-written by a killed writer".getBytes("UTF-8")) finally o.close()
+    }
 
     s.insert(name, frame(cellsFor(1), 2))
-    // the orphan id is skipped, not reused
-    s.snapshotIds(name) shouldBe Seq(1L, 3L)
-    s.scanAsOf(name, 3L).count() shouldBe 98
+    // the orphans claim nothing: the next commit is version 2
+    s.snapshotIds(name) shouldBe Seq(1L, 2L)
+    s.scanAsOf(name, 2L).count() shouldBe 98
     s.scanForResolution(name, 7).count() shouldBe 98
   }
 }

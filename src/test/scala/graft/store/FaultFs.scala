@@ -12,11 +12,10 @@ import org.apache.hadoop.util.Progressable
   * delete on metadata paths, plus data-file unlinks) and throws an
   * IOException when the armed kill-point is reached — simulating a writer
   * killed mid-commit at every step of a temp-write + rename sequence.
-  * Spark job-committer machinery (`_temporary`, `_SUCCESS`, staging dirs)
+  * Spark job-committer machinery (`_temporary`, `_SUCCESS`, `.spark-staging`)
   * is deliberately NOT faulted: its commit atomicity is the committer's
   * contract, the store's own crash-consistency contract is what this spec
-  * exercises (scoped per the round-5 verdict: snapshots / deletes /
-  * manifest / schema markers).
+  * exercises: the commit log, staged-file moves and the schema sidecar.
   *
   * Registered by setting `fs.faultfs.impl` on the Hadoop conf; the
   * FileSystem CACHE then serves one shared instance, so the companion's
@@ -73,7 +72,7 @@ object FaultFs {
   val log = new java.util.concurrent.ConcurrentLinkedQueue[String]
 
   private val committerMarkers = Seq("_temporary", "_SUCCESS", ".spark-staging")
-  private val metadataMarkers = Seq("/_snapshots/", "/_deletes/", "schema.json", "/manifest")
+  private val metadataMarkers = Seq("/_log/", "/_staging/", "schema.json")
 
   private def countable(op: String, s: String, recursive: Boolean): Boolean = {
     if (rootFilter.isEmpty || !s.contains(rootFilter)) return false

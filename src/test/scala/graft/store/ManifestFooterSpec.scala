@@ -7,6 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,11 +18,11 @@ import graft.{JobCount, SparkTestSession}
 import graft.h3.H3
 import graft.schema.{AggregationMethod => Agg, GraftDataType => T, _}
 
-/** The manifest built from parquet footers: its rows must equal the
-  * aggregate over the data that built it before ([[AggregateManifestStats]]),
-  * a legacy partitioned manifest must keep working and refresh flat, the
-  * writers must run one job at most, and an insert racing a refresh must
-  * never leave a cached listing without the insert's files. */
+/** The per-file stats the log records from parquet footers: they must
+  * equal the aggregate over the data that computed them before
+  * ([[AggregateManifestStats]]), an old-layout tableset must convert once
+  * to the log, the manifest calls must run no job, and an insert racing a
+  * refresh must never leave a cached state without the insert's files. */
 class ManifestFooterSpec extends AnyFunSuite with Matchers with SparkTestSession {
 
   private val bcA = 20
@@ -61,9 +63,16 @@ class ManifestFooterSpec extends AnyFunSuite with Matchers with SparkTestSession
   /** Sibling cells (one res-6 parent) share a k value, so they compact. */
   private def byParent(c: Long): Long = H3.toParentUnsafe(c, 6)
 
-  private def manifestRows(s: CellStore, ts: String): Map[String, Row] =
-    spark.read.parquet(s.manifestPath(ts).toString).collect()
-      .map(r => r.getAs[String]("path") -> r).toMap
+  /** The log's file records of `ts` as rows of the aggregate's shape. */
+  private def manifestRows(s: CellStore, ts: String): Map[String, Row] = {
+    val k2 = s.getTableset(ts).columns("k").dataType.sparkType
+    val toScala = CatalystTypeConverters.createToScalaConverter(k2)
+    val schema = StructType(Seq("kind" -> StringType, "resolution" -> IntegerType,
+      "ph3" -> LongType, "bc" -> LongType, "min_h3" -> LongType, "max_h3" -> LongType,
+      "rows" -> LongType, "k2_min" -> k2, "k2_max" -> k2).map { case (n, t) => StructField(n, t) })
+    s.manifestEntries(ts).map(e => e.path -> (new GenericRowWithSchema(Array(e.kind, e.resolution,
+      e.ph3, e.bc, e.minH3, e.maxH3, e.rows, toScala(e.k2Min), toScala(e.k2Max)), schema): Row)).toMap
+  }
 
   private val exactColumns = Seq("kind", "resolution", "ph3", "bc", "min_h3", "max_h3", "rows")
 
@@ -150,33 +159,28 @@ class ManifestFooterSpec extends AnyFunSuite with Matchers with SparkTestSession
     val ts = "foot_nostats"
     val s = store("graft_footer_nostats_", ts, H3Partitioning.BaseCell, T.Int64,
       (c, _) => byParent(c) % 1000)
-    // a data file written without column statistics, where inserts write
+    // an insert whose data files are written without column statistics
     val cell = H3.fromParts(bcA, 7, Seq(1, 0, 0, 0, 0, 0, 0))
-    val dir = Paths.get(s.dataDir(ts), "kind=base", "resolution=7", s"ph3=$bcA")
-    frame(Seq((cell, 7L, 77L)), LongType).coalesce(1).write
-      .option("parquet.column.statistics.enabled", "false")
-      .parquet(dir.resolve("nostats").toString)
-    val written = Files.list(dir.resolve("nostats")).iterator().asScala
-      .filter(_.toString.endsWith(".parquet")).toSeq
+    val key = "parquet.column.statistics.enabled"
+    spark.conf.set(key, "false")
+    try s.insert(ts, frame(Seq((cell, 7L, 77L)), LongType)) finally spark.conf.unset(key)
+    val written = s.manifestEntries(ts).filter(e => !e.hasH3Stats && e.resolution == 7)
     written should have size 1
     val footer = ParquetFileReader.readFooter(spark.sessionState.newHadoopConf(),
-      new org.apache.hadoop.fs.Path(written.head.toUri), ParquetMetadataConverter.NO_FILTER)
+      new org.apache.hadoop.fs.Path(s"${s.dataDir(ts)}/${written.head.path}"),
+      ParquetMetadataConverter.NO_FILTER)
     footer.getBlocks.asScala.head.getColumns.asScala
       .find(_.getPath.toDotString == "h3index").get.getStatistics.hasNonNullValue shouldBe false
-    val target = dir.resolve("part-nostats.parquet")
-    Files.move(written.head, target)
-    s.invalidateFileCaches(ts)
     s.buildManifest(ts)
-    manifestRows(s, ts).keySet.exists(_.contains("nostats")) shouldBe false
     val sel = s.selectFilesForProbes(ts, 7, Seq(cell)).get
     sel.uncoveredFiles shouldBe 1
-    sel.paths.exists(_.endsWith("part-nostats.parquet")) shouldBe true
+    sel.paths.exists(_.endsWith(written.head.path)) shouldBe true
     s.queryCells(ts, Seq(cell), 7).select("v").collect().map(_.getLong(0)) shouldBe Array(77L)
   }
 
-  test("a legacy partitioned manifest reads, and a refresh rewrites it flat") {
-    val ts = "foot_legacy"
-    val root = Files.createTempDirectory("graft_footer_legacy_").toString
+  test("an old-layout tableset converts once: same rows, deletes still masked, old metadata ignored") {
+    val ts = "foot_convert"
+    val root = Files.createTempDirectory("graft_footer_convert_").toString
     val s = CellStore(spark, root)
     s.insert(ts, frame(universe.map(c => (c, byParent(c) % 1000, 0L)), LongType),
       createSchema = Some(CompactedTableSchema.builder(ts)
@@ -184,40 +188,75 @@ class ManifestFooterSpec extends AnyFunSuite with Matchers with SparkTestSession
         .addColumn("k", ColumnDef.Simple(T.Int64, nullable = true, orderKeyPosition = Some(1)))
         .addAggregatedColumn("v", T.Int64, Agg.Max)
         .build()))
-    // the kind=/resolution=/bc= layout the aggregate used to write
-    AggregateManifestStats.rows(s, ts).repartition(col("bc")).write.mode("overwrite")
-      .partitionBy("kind", "resolution", "bc").parquet(s.manifestPath(ts).toString)
+    s.insert(ts, frame(universe.take(20).map(c => (c, 3L, 1L)), LongType))
+    val predicate = "h3index % 3 = 0"
+    s.deleteWhere(ts, predicate) shouldBe 3L
+    def scan(): Seq[(Long, Long, Long)] = s.scanForResolution(ts, 7).select("h3index", "k", "v")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    val before = scan()
+    val captured = s.pendingDeletes(ts).head.files
+
+    // the same tableset in the layout of earlier versions: no log, one
+    // snapshot list per commit, a delete marker and a manifest directory
+    val dir = Paths.get(root, ts)
+    def write(rel: String, text: String): Unit = {
+      Files.createDirectories(dir.resolve(rel).getParent)
+      Files.write(dir.resolve(rel), text.getBytes("UTF-8"))
+    }
+    def remove(rel: String): Unit = Files.walk(dir.resolve(rel)).iterator().asScala.toSeq
+      .reverse.foreach(Files.delete)
+    remove("_log")
+    Seq(1, 2).foreach(id => write(s"_snapshots/$id.list", captured.mkString("\n")))
+    write("_snapshots/3.list", "")
+    write("_snapshots/.4.claim", "")
+    val marker = new com.fasterxml.jackson.databind.ObjectMapper().createObjectNode()
+      .put("id", 3L).put("predicate", predicate)
+    captured.foreach(marker.withArray("files").add(_))
+    write("_deletes/3.delete", marker.toString)
+    write("manifest/part-0.parquet", "not read")
     s.invalidateFileCaches(ts)
+
+    withClue("converted: ") {
+      scan() shouldBe before
+      s.pendingDeletes(ts).map(d => (d.id, d.predicate)) shouldBe Seq((3L, predicate))
+      s.snapshotIds(ts) shouldBe Seq(3L) // earlier history reads as vacuumed
+      an[IllegalArgumentException] should be thrownBy s.scanAsOf(ts, 1L)
+      s.scanForResolutionAsOf(ts, 7, 3L).count() shouldBe before.size.toLong
+    }
+    // converted once: the old metadata is ignored from then on
+    Seq("_snapshots", "_deletes", "manifest").foreach(remove)
+    s.invalidateFileCaches(ts)
+    withClue("old metadata removed: ") {
+      scan() shouldBe before
+      s.snapshotIds(ts) shouldBe Seq(3L)
+    }
     val rng = new scala.util.Random(5)
-    def checkSelections(stage: String): Unit = (1 to 6).foreach { _ =>
+    (1 to 6).foreach { _ =>
       val probes = Seq.fill(1 + rng.nextInt(4))(
         H3.toParentUnsafe(universe(rng.nextInt(universe.size)), 5 + rng.nextInt(3))).distinct
       val targetRes = 5 + rng.nextInt(3)
-      withClue(s"$stage, res $targetRes, probes $probes: ") {
+      withClue(s"res $targetRes, probes $probes: ") {
         SparkProbeSelection.relative(root, ts, s.selectFilesForProbes(ts, targetRes, probes).get.paths) shouldBe
           SparkProbeSelection.select(spark, s, root, ts, targetRes, probes)
       }
     }
-    checkSelections("legacy")
-    s.selectFilesForValueRange(ts, 7, 0L, 10L) shouldBe defined
-    s.insert(ts, frame(universe.take(20).map(c => (c, 3L, 1L)), LongType))
-    s.refreshManifest(ts)
-    val entries = Files.list(Paths.get(s.manifestPath(ts).toString)).iterator().asScala.toSeq
-    entries.filter(Files.isDirectory(_)) shouldBe empty
-    entries.count(_.toString.endsWith(".parquet")) shouldBe 1
-    s.selectFilesForProbes(ts, 7, Seq(universe.head)).get.uncoveredFiles shouldBe 0
-    checkSelections("refreshed flat")
+    // and commits go on from the checkpoint's version
+    s.insert(ts, frame(Seq((universe.last, 5L, 9L)), LongType))
+    s.snapshotIds(ts) shouldBe Seq(3L, 4L)
+    s.applyDeletes(ts)
+    s.pendingDeletes(ts) shouldBe empty
+    scan() shouldBe (before :+ ((universe.last, 5L, 9L))).sorted
   }
 
-  test("buildManifest runs 1 job, refreshManifest at most 1, and the next query at most 2") {
+  test("buildManifest and refreshManifest run no job, and the next query at most 2") {
     val ts = "foot_jobs"
     val s = store("graft_footer_jobs_", ts, H3Partitioning.BaseCell, T.Int64,
       (c, _) => byParent(c) % 1000)
-    JobCount.of(spark)(s.buildManifest(ts))._2 shouldBe 1
-    JobCount.of(spark)(s.refreshManifest(ts))._2 shouldBe 0 // nothing uncovered
+    JobCount.of(spark)(s.buildManifest(ts))._2 shouldBe 0
+    JobCount.of(spark)(s.refreshManifest(ts))._2 shouldBe 0
     val cell = H3.fromParts(bcB, 7, Seq(1, 0, 0, 0, 0, 0, 0))
     s.insert(ts, frame(Seq((cell, 4L, 44L)), LongType))
-    JobCount.of(spark)(s.refreshManifest(ts))._2 should be <= 1
+    JobCount.of(spark)(s.refreshManifest(ts))._2 shouldBe 0
     s.selectFilesForProbes(ts, 7, Seq(cell)).get.uncoveredFiles shouldBe 0
     val (rows, jobs) = JobCount.of(spark)(
       s.queryCells(ts, Seq(cell), 7).select("h3index", "v").collect())
@@ -241,20 +280,19 @@ class ManifestFooterSpec extends AnyFunSuite with Matchers with SparkTestSession
     s.queryCells(ts, universe.take(5), 7).count() shouldBe 5L
   }
 
-  test("a writer installs its state only over the state it read; otherwise it invalidates") {
-    val key = "manifest-footer-spec\u0000cas"
-    val read = FileState.get(key)(new FileState(Nil, Nil, None))
-    // another writer (an insert) installed its successor meanwhile
-    val inserted = read.next(dataFiles = Seq(new org.apache.hadoop.fs.FileStatus(
-      0L, false, 1, 0L, 0L, new org.apache.hadoop.fs.Path("file:/cas/part-0.parquet"))))
-    FileState.replace(key, Some(read), _ => inserted)
-    FileState.peek(key) shouldBe Some(inserted)
-    // a refresh that read `read` must not reinstall its older listing
-    FileState.replace(key, Some(read), _.next())
-    FileState.peek(key) shouldBe None
-    // nor install anything when it read no cached state
-    FileState.replace(key, None, _ => read)
-    FileState.peek(key) shouldBe None
+  test("the cached state only moves forward: an older version never replaces a newer one") {
+    val key = "manifest-footer-spec\u0000forward"
+    def file(n: String) = ManifestEntry(s"kind=base/resolution=7/ph3=20/$n.parquet", "base", 7,
+      20L, 20L, 0L, 1L, 1L, null, null, 1L)
+    val v1 = FileState.empty("file:/fwd").applied(1, LogEntry(LogEntry.Append, Seq(file("a"))))
+    val v2 = v1.applied(2, LogEntry(LogEntry.Append, Seq(file("b"))))
+    FileState.advance(key, v2) shouldBe v2
+    // a reader that replayed the log before the second commit installs late
+    FileState.advance(key, v1) shouldBe v2
+    FileState.peek(key) shouldBe Some(v2)
+    v2.ids shouldBe Seq(1L, 2L)
+    v2.dataPaths.map(_.split('/').last) shouldBe Seq("a.parquet", "b.parquet")
+    FileState.invalidate(key)
   }
 
   test("a refresh racing same-JVM inserts never leaves a listing without their files") {

@@ -2,7 +2,7 @@ package graft.store
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,10 +12,10 @@ import graft.SparkTestSession
 import graft.h3.H3
 import graft.schema.{AggregationMethod => Agg, GraftDataType => T, _}
 
-/** File-level manifest pruning: the selection must (a) never change query
-  * results — with a fresh manifest, after appends it doesn't cover, and
-  * after rewrites that killed its files — and (b) actually shrink the file
-  * list for a narrow probe. */
+/** File-level pruning on the log's per-file stats: the selection must (a)
+  * never change query results — after a manifest build, after appends and
+  * after rewrites — and (b) actually shrink the file list for a narrow
+  * probe. */
 class ManifestSpec extends AnyFunSuite with Matchers with SparkTestSession {
 
   private val name = "manifest_ts"
@@ -76,7 +76,7 @@ class ManifestSpec extends AnyFunSuite with Matchers with SparkTestSession {
     val extraCell = cellsOf(bcA).head
     store.insert(name, frame(Seq(extraCell), 900000))
     val sel = store.selectFilesForProbes(name, 7, Seq(extraCell)).get
-    sel.uncoveredFiles should be > 0
+    sel.uncoveredFiles shouldBe 0 // the append's commit recorded its files' stats
     // the store is append-only (no summing merge across inserts): BOTH the
     // original row (v=0) and the appended one must surface
     query(Seq(extraCell)) shouldBe Seq((extraCell, 0L), (extraCell, 900000L))
@@ -87,7 +87,7 @@ class ManifestSpec extends AnyFunSuite with Matchers with SparkTestSession {
   test("refreshManifest covers appended files without a full rebuild") {
     store.buildManifest(name)
     store.insert(name, frame(Seq(cellsOf(bcB).last), 777000))
-    store.selectFilesForProbes(name, 7, Seq(probe)).get.uncoveredFiles should be > 0
+    store.selectFilesForProbes(name, 7, Seq(probe)).get.uncoveredFiles shouldBe 0
     store.refreshManifest(name)
     val sel = store.selectFilesForProbes(name, 7, Seq(probe)).get
     sel.uncoveredFiles shouldBe 0
@@ -101,9 +101,9 @@ class ManifestSpec extends AnyFunSuite with Matchers with SparkTestSession {
   test("rewrites after the build drop dead manifest entries, results intact") {
     store.buildManifest(name)
     val before = query(Seq(probe))
-    store.deduplicate(name) // dynamic overwrite -> new file names everywhere
+    store.deduplicate(name) // a rewrite -> new file names everywhere
     val sel = store.selectFilesForProbes(name, 7, Seq(probe)).get
-    sel.uncoveredFiles shouldBe sel.currentFiles // nothing covered anymore
+    sel.uncoveredFiles shouldBe 0 // the rewrite's commit recorded its files' stats
     query(Seq(probe)) shouldBe before
     store.buildManifest(name) // rebuild restores pruning
     val sel2 = store.selectFilesForProbes(name, 7, Seq(probe)).get
@@ -129,12 +129,12 @@ class ManifestSpec extends AnyFunSuite with Matchers with SparkTestSession {
     store.selectFilesForProbes(name, 7, Seq(outside)).get.paths shouldBe empty
   }
 
-  /** Synthetic 50k-entry manifest at the round-5 layout
-    * (kind=/resolution=/bc=): TWO base resolutions (7 and 6 — a res-7
-    * probe must exclude base-6 entirely via directory pruning) x 250
-    * base cells x 100 files = 50,000 entries, one parquet file per leaf
-    * directory, with k2 stats. Returns (store, res-7 cell universe). */
-  private def bigManifestFixture(): (CellStore, Seq[Long]) = {
+  /** Synthetic 50k-file log state: TWO base resolutions (7 and 6 — a res-7
+    * probe must exclude base-6 entirely) x 250 base cells x 100 files =
+    * 50,000 records with k2 stats, committed as one checkpoint entry over a
+    * real one-insert store. Returns (store, res-7 cell universe, the
+    * records as a frame). */
+  private def bigManifestFixture(): (CellStore, Seq[Long], DataFrame) = {
     val dir = Files.createTempDirectory("graft_manifest_big_").toString
     val s = CellStore(spark, dir)
     s.insert(name, frame(cellsOf(bcA).take(8), 0),
@@ -144,46 +144,30 @@ class ManifestSpec extends AnyFunSuite with Matchers with SparkTestSession {
         .addAggregatedColumn("v", T.Int64, Agg.Max)
         .build()))
     val cs = cellsOf(bcA)
-    val entries = spark.range(2L * 250 * 100).select(
-      (col("id") % 2).as("r"),
-      ((col("id") / 2) / 100).cast("long").as("bc"),
-      ((col("id") / 2) % 100).as("i"))
-      .select(
-        concat(when(col("r") === 0, "kind=base/resolution=7/ph3=")
-            .otherwise("kind=base/resolution=6/ph3="), col("bc"),
-          lit("/part-"), col("i"), lit(".parquet")).as("path"),
-        lit("base").as("kind"),
-        when(col("r") === 0, 7).otherwise(6).as("resolution"),
-        col("bc").as("ph3"),
-        // ~half the entries of any bc straddle real cell values (selected),
-        // the rest sit far outside every envelope (row-group skipped)
-        when(col("i") % 2 === 0, lit(cs.head)).otherwise(lit(Long.MaxValue - 10)).as("min_h3"),
-        when(col("i") % 2 === 0, lit(cs.last)).otherwise(lit(Long.MaxValue - 1)).as("max_h3"),
-        lit(100L).as("rows"),
-        // k2 stats: each file covers a disjoint [100*i, 100*i+99] slice
-        (col("i") * 100).as("k2_min"), (col("i") * 100 + 99).as("k2_max"),
-        col("bc"))
-    entries.repartition(col("bc")).write.mode("overwrite")
-      .partitionBy("kind", "resolution", "bc")
-      .parquet(s.manifestPath(name).toString)
-    (s, cs)
+    val entries = (0L until 2L * 250 * 100).map { id =>
+      val (res, bc, i) = (if (id % 2 == 0) 7 else 6, id / 2 / 100, id / 2 % 100)
+      // ~half the entries of any bc straddle real cell values (selected),
+      // the rest sit far outside every envelope (row-group skipped)
+      val (lo, hi) = if (i % 2 == 0) (cs.head, cs.last) else (Long.MaxValue - 10, Long.MaxValue - 1)
+      // k2 stats: each file covers a disjoint [100*i, 100*i+99] slice
+      ManifestEntry(s"kind=base/resolution=$res/ph3=$bc/part-$i.parquet", "base", res, bc, bc,
+        lo, hi, 100L, i * 100, i * 100 + 99, 0L)
+    }
+    Files.write(java.nio.file.Paths.get(dir, name, "_log", "2.json"), LogEntry.toJson(
+      LogEntry(LogEntry.Checkpoint, entries, ids = Seq(1L), k2Type = Some(LongType))))
+    import spark.implicits._
+    val records = entries.map(e => (e.path, e.resolution, e.bc, e.k2Min.asInstanceOf[Long]))
+      .toDF("path", "resolution", "bc", "k2_min")
+    (s, cs, records)
   }
 
   test("50k-file manifest: selection reads one bc partition, not the manifest") {
     // selection cost must be O(probed bc), flat in the total file count —
-    // the round-3 verdict's scale criterion: once the stats are loaded, a
-    // probe set's selection visits its bc's entries on the driver, with no
-    // Spark job. bc 20's res-7 entries name live (empty) files, so they
-    // survive the selection's liveness check.
-    val (s, cs) = bigManifestFixture()
-    val data = java.nio.file.Paths.get(s.dataDir(name))
-    val bc20 = spark.read.parquet(s.manifestPath(name).toString)
-      .where("bc = 20 AND resolution = 7").select("path").collect().map(_.getString(0))
-    bc20 should have size 100
-    bc20.foreach { rel =>
-      Files.createDirectories(data.resolve(rel).getParent)
-      Files.createFile(data.resolve(rel))
-    }
+    // the round-3 verdict's scale criterion: once the state is loaded, a
+    // probe set's selection visits its bc's records on the driver, with no
+    // Spark job
+    val (s, cs, records) = bigManifestFixture()
+    records.where("bc = 20 AND resolution = 7").count() shouldBe 100
     s.invalidateFileCaches(name)
     def entries(sel: CellStore.ManifestSelection): Seq[String] = {
       sel.manifestFiles shouldBe 50000
@@ -199,27 +183,17 @@ class ManifestSpec extends AnyFunSuite with Matchers with SparkTestSession {
 
   test("50k-file manifest: value-range selection directory-prunes to the target resolution") {
     // the value dimension crosses base cells, so bc pruning cannot help a
-    // k2 range probe: the selection filters every entry's resolution and
-    // k2 range on the driver, with no Spark job once the stats are loaded.
-    // The entries of both resolutions with k2_min < 300 name live (empty)
-    // files, so the predicates alone, not the liveness check, pick the
-    // survivors.
-    val (s, _) = bigManifestFixture()
+    // k2 range probe: the selection filters every record's resolution and
+    // k2 range on the driver, with no Spark job once the state is loaded
+    val (s, _, records) = bigManifestFixture()
     val data = java.nio.file.Paths.get(s.dataDir(name))
-    val manifest = spark.read.parquet(s.manifestPath(name).toString)
-    val live = manifest.where("k2_min < 300").select("path").collect().map(_.getString(0))
-    live should have size 1500
-    live.foreach { rel =>
-      Files.createDirectories(data.resolve(rel).getParent)
-      Files.createFile(data.resolve(rel))
-    }
     s.invalidateFileCaches(name)
     def entries(sel: CellStore.ManifestSelection): Seq[String] = {
       sel.manifestFiles shouldBe 50000
       sel.paths.dropRight(sel.uncoveredFiles)
     }
     entries(s.selectFilesForValueRange(name, 7, 0L, 0L)
-      .getOrElse(fail("manifest has k2 stats — a selection expected"))) should have size 250
+      .getOrElse(fail("the log has k2 stats — a selection expected"))) should have size 250
     val (sel, jobs) = graft.JobCount.of(spark)(s.selectFilesForValueRange(name, 7, 120L, 180L).get)
     jobs shouldBe 0
     // [120, 180] intersects exactly files i=1 ([100,199]) of each res-7 bc
@@ -228,7 +202,7 @@ class ManifestSpec extends AnyFunSuite with Matchers with SparkTestSession {
     all(selected) should include("kind=base/resolution=7/")
     selected.map(p => data.relativize(java.nio.file.Paths.get(new java.net.URI(p))).toString)
       .toSet shouldBe
-      manifest.where("resolution = 7 AND k2_min = 100").select("path").collect().map(_.getString(0)).toSet
+      records.where("resolution = 7 AND k2_min = 100").select("path").collect().map(_.getString(0)).toSet
   }
 
   test("the SQL graft_cells TVF engages the manifest (file-pruned scan from pure SQL)") {
@@ -396,22 +370,22 @@ class ManifestSpec extends AnyFunSuite with Matchers with SparkTestSession {
       val c = universe(rng.nextInt(universe.size))
       H3.toParentUnsafe(c, 5 + rng.nextInt(3)) // probes at res 5, 6 and 7
     }.distinct
-    def check(stage: String, expectUncovered: Boolean): Unit =
+    def check(stage: String): Unit =
       (1 to 8).foreach { _ =>
         val probes = probeSet()
         val targetRes = 5 + rng.nextInt(3)
         val sel = s.selectFilesForProbes(ts, targetRes, probes).get
         withClue(s"$stage, res $targetRes, probes $probes: ") {
-          (sel.uncoveredFiles > 0) shouldBe expectUncovered
+          sel.uncoveredFiles shouldBe 0
           SparkProbeSelection.relative(root, ts, sel.paths) shouldBe
             SparkProbeSelection.select(spark, s, root, ts, targetRes, probes)
         }
       }
-    check("fresh manifest", expectUncovered = false)
-    s.insert(ts, frame(cellsOf(bcB).take(3), 5000)) // uncovered files
-    check("after an append", expectUncovered = true)
-    s.deduplicate(ts) // every manifest entry now names a dead file
-    check("after a rewrite", expectUncovered = true)
+    check("fresh manifest")
+    s.insert(ts, frame(cellsOf(bcB).take(3), 5000)) // recorded at commit
+    check("after an append")
+    s.deduplicate(ts) // every file replaced, in one commit
+    check("after a rewrite")
   }
 
   test("with the stats loaded, a new probe set selects with no Spark job and queries in at most 2") {

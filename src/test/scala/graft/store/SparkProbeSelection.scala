@@ -10,20 +10,22 @@ import org.apache.spark.sql.functions._
 import graft.h3.H3
 
 /** Test oracle for [[CellStore.selectFilesForProbes]]: the probe-file
-  * selection as a Spark read of the manifest computes it — a fresh
-  * `spark.read.parquet` of the manifest directory with the bc, kind/resolution
-  * and h3 envelope predicates as Catalyst filters, live entries kept,
-  * uncovered live files added — the way the store selected files before it
-  * held the manifest's stats on the driver. The live listing is walked here
-  * with java.nio, not taken from the store's cached state. */
+  * selection as a Spark query over the log's file records computes it — a
+  * local frame of the records with the bc, kind/resolution and h3 envelope
+  * predicates as Catalyst filters, live files kept, and any data file the
+  * log does not record added (there should be none). The live files are
+  * walked here with java.nio, not taken from the store's cached state. */
 object SparkProbeSelection {
 
   /** Selected files of `name`, as paths relative to its data directory. */
   def select(spark: SparkSession, store: CellStore, root: String, name: String,
       targetRes: Int, cells: Seq[Long]): Set[String] = {
+    import spark.implicits._
     val envs = store.probeEnvelopes(cells, (0 to targetRes).toSeq)
     val bcs = cells.map(H3.getBaseCell(_).toLong).distinct
-    val manifest = spark.read.parquet(store.manifestPath(name).toString)
+    val manifest = store.manifestEntries(name)
+      .map(e => (e.path, e.kind, e.resolution, e.bc, e.minH3, e.maxH3))
+      .toDF("path", "kind", "resolution", "bc", "min_h3", "max_h3")
     val selected = manifest
       .where(col("bc").isin(bcs: _*))
       .where(store.resolutionFilter(targetRes))

@@ -24,10 +24,11 @@ import graft.schema.{AggregationMethod => Agg, GraftDataType => T, _}
   * The reference's analogue is its best-effort temp-table cleanup +
   * optimize fallback (`insert.rs:247-276`, `optimize.rs:86-113`); this
   * store's contract is stronger and is documented in README
-  * (crash-consistency notes): every metadata publish is full-temp-write
-  * then atomic rename, so a killed writer leaves either the old state, the
-  * new state, or an ignorable `.tmp`/`.claim` orphan — never a truncated
-  * or half-visible metadata file. */
+  * (crash-consistency notes): every commit is one log entry, published by
+  * full temp write then atomic rename, so a killed writer leaves either
+  * the old state, the new state, or ignorable orphans (a `.tmp` entry,
+  * staged or moved-but-uncommitted data files) — never a truncated or
+  * half-visible commit. */
 class StoreCrashConcurrencySpec extends AnyFunSuite with Matchers with SparkTestSession {
 
   private val name = "crash_ts"
@@ -125,8 +126,8 @@ class StoreCrashConcurrencySpec extends AnyFunSuite with Matchers with SparkTest
     wA.insert(name, frame(rows(parentA, 0)), createSchema = Some(schema))
     // three concurrent inserts spread over two instances, disjoint cell
     // families -> the final
-    // state is exactly the union; claims + commit locks must serialize the
-    // metadata so no snapshot or listing update is lost
+    // state is exactly the union; the commit lock and the log's version
+    // claims must serialize the commits so none is lost
     val fams = Seq(parentB, parentC, parentD).map(fam)
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = fams.zipWithIndex.map { case (f, i) =>
@@ -252,8 +253,8 @@ class StoreCrashConcurrencySpec extends AnyFunSuite with Matchers with SparkTest
     spark.sparkContext.hadoopConfiguration
       .set("fs.faultfs.impl", classOf[FaultFs].getName)
 
-    // base state: two inserts + one pending delete (markers, claims, lists
-    // and captured-file sets all populated)
+    // base state: two inserts + one pending delete (log entries and
+    // captured-file sets all populated)
     val baseDir = Files.createTempDirectory("graft_kp_base_").toString
     val base = CellStore(spark, s"faultfs:$baseDir")
     base.insert(name, frame(rows(parentA, 0)), createSchema = Some(schema))
@@ -327,7 +328,7 @@ class StoreCrashConcurrencySpec extends AnyFunSuite with Matchers with SparkTest
         r.insert(name, frame(rows(parentD, 300)))
         scanRows(r, name) shouldBe (healed ++ rows(parentD, 300)).sorted
         // and the snapshot history must stay self-consistent (sorted,
-        // unique, every published list readable)
+        // unique)
         val ids = r.snapshotIds(name)
         ids shouldBe ids.sorted
         ids.distinct shouldBe ids
@@ -337,7 +338,7 @@ class StoreCrashConcurrencySpec extends AnyFunSuite with Matchers with SparkTest
 
   // ------------------------------------------- orphan-artifact tolerance
 
-  test("orphan .tmp / .claim artifacts from killed writers are ignored by every read path") {
+  test("orphan temp entries and staged files from killed writers are ignored by every read path") {
     val root = Files.createTempDirectory("graft_orphan_").toString
     val s = CellStore(spark, root)
     s.insert(name, frame(rows(parentA, 0)), createSchema = Some(schema))
@@ -351,21 +352,20 @@ class StoreCrashConcurrencySpec extends AnyFunSuite with Matchers with SparkTest
       try o.write("GARBAGE — half-written by a killed writer".getBytes("UTF-8"))
       finally o.close()
     }
-    junk("_snapshots/.5.list.tmp")   // crash between temp-write and rename
-    junk("_snapshots/.9.claim")      // claim published, list never was
-    junk("_deletes/.3.delete.tmp")   // marker temp never promoted
+    junk("_log/.3.json.dead.tmp")    // crash between temp-write and rename
+    junk("_staging/dead/kind=base/resolution=7/ph3=20/part-0.parquet") // staged, never moved
+    junk("data/kind=base/resolution=7/ph3=20/part-dead.parquet")      // moved, never committed
     junk(".schema.json.tmp")         // schema temp never promoted
 
     s.invalidateFileCaches(name)
     // reads: orphans invisible
     scanRows(s, name) shouldBe rows(parentA, 0).filterNot(_._2 >= 40).sorted
-    s.snapshotIds(name) shouldBe Seq(1L, 2L) // the delete publishes an empty list
+    s.snapshotIds(name) shouldBe Seq(1L, 2L) // the delete is a snapshot
     s.pendingDeletes(name).map(_.id) shouldBe Seq(2L)
     s.getTableset(name).name shouldBe name
-    // writes: the orphan claim skips id 9, commits keep flowing
+    // writes: commits keep flowing, the orphan temp claims no version
     s.insert(name, frame(rows(parentB, 100)))
-    val ids = s.snapshotIds(name)
-    ids.last should be > 9L
+    s.snapshotIds(name) shouldBe Seq(1L, 2L, 3L)
     scanRows(s, name).size shouldBe (40 + 49)
     s.dropTableset(name)
   }
